@@ -1,6 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** A query's timed samples (seconds), or the class of the error that
+    * stopped its sampling. A throwing query is never a sample.
+    */
+  type Samples = Either[String, Vector[Double]]
+
+  /** Appends `n` timed runs of `fn` to `prior`. The first throw turns the
+    * result into a failure and ends the sampling; a failure stays one.
+    */
+  def sample(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame, n: Int,
+      prior: Samples = Right(Vector.empty)): Samples =
+    (1 to n).foldLeft(prior) { (acc, _) =>
+      acc.flatMap { times =>
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).count()
+          Right(times :+ (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] query failed: $e")
+          Left(e.getClass.getName)
+        }
+        // Queries that persist() intermediates would otherwise leak cache
+        // blocks into the next iteration/measurement (and the cache would
+        // flatter iterations 2+ into measuring only the cached tail).
+        finally spark.catalog.clearCache()
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -51,28 +79,21 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadavg: Double = osBean.getSystemLoadAverage
     val loadStart = loadavg
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Queries that persist() intermediates would otherwise leak cache
-      // blocks into the next iteration/measurement (and the cache would
-      // flatter iterations 2+ into measuring only the cached tail).
-      spark.catalog.clearCache()
-      dt
-    }
-    var allTimes = SparkEntry.queries
+    def timeMore(name: String, times: Samples): Samples =
+      sample(spark, sfDir, SparkEntry.queries(name), 1, times)
+    var allTimes: Seq[(String, Samples)] = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      var times = (1 to iters).map(_ => timeOnce(fn))
+      var times = sample(spark, sfDir, fn, iters)
       // Machine-load noise defense: a slow query whose iterations spread
       // wide is re-measured up to 2 more times — under co-tenant load the
       // min of 3 can still be 4x the query's true cost (r06: s33 measured
       // 12.7s in the driver's run vs 2.8s isolated), and extra samples
       // tighten exactly the entries a judge reads against BASELINE.md.
       var extra = 0
-      while (extra < 2 && times.min > 3.0 && times.max > 1.5 * times.min) {
-        times :+= timeOnce(fn)
+      while (extra < 2 &&
+          times.exists(ts => ts.min > 3.0 && ts.max > 1.5 * ts.min)) {
+        times = timeMore(name, times)
         extra += 1
       }
       name -> times
@@ -83,7 +104,7 @@ object Bench {
     // across iterations and read as a 1.41x "regression"). Sub-second
     // queries are converged by fiat: a 1.5x spread there is tens of
     // milliseconds of JIT/GC jitter, not a cost signal worth flagging.
-    def converged(ts: Seq[Double]): Boolean =
+    def converged(ts: Vector[Double]): Boolean =
       ts.min < 1.0 ||
         (ts.size >= 3 && ts.sorted.take(3).max <= 1.3 * ts.min)
     // Second pass for the headline entries: the 10 slowest queries are
@@ -92,14 +113,15 @@ object Bench {
     // after the full sweep, when suite-wide allocation pressure has
     // settled.
     if (only.isEmpty) {
-      val top10 = allTimes.toSeq.sortBy(-_._2.min).take(10).map(_._1).toSet
+      val top10 = allTimes.collect { case (name, Right(ts)) => name -> ts.min }
+        .sortBy(-_._2).take(10).map(_._1).toSet
       allTimes = allTimes.map { case (name, ts0) =>
         if (!top10.contains(name)) name -> ts0
         else {
           var times = ts0
           var extra = 0
-          while (extra < 4 && !converged(times)) {
-            times :+= timeOnce(SparkEntry.queries(name))
+          while (extra < 4 && times.exists(!converged(_))) {
+            times = timeMore(name, times)
             extra += 1
           }
           name -> times
@@ -127,30 +149,35 @@ object Bench {
         var times = ts0
         val p = prior.getOrElse(name, 0.0)
         var extra = 0
-        while (extra < 3 && p > 0.3 && times.min > 1.5 * p) {
-          times :+= timeOnce(SparkEntry.queries(name))
+        while (extra < 3 && p > 0.3 && times.exists(_.min > 1.5 * p)) {
+          times = timeMore(name, times)
           extra += 1
         }
         name -> times
       }
     }
-    val convergedFlags = allTimes.map { case (k, v) => k -> converged(v) }
-    val results = allTimes.map { case (k, v) => k -> v.min }
+    val succeeded = allTimes.collect { case (k, Right(ts)) => k -> ts }
+    val failed = allTimes.collect { case (k, Left(err)) => k -> err }
+    val results = succeeded.map { case (k, ts) => k -> ts.min }.toMap
     val total = if (results.nonEmpty) results.values.sum else 0.0
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // Full-precision, full-name detail for humans/the judge (the stdout
     // line below is size-constrained; this file is not): the reported
     // value is the min, and the per-iteration spread rides along so a
     // regression is separable from measurement noise without a re-run.
-    val detail = allTimes.map { case (k, ts) =>
+    // A query that threw is recorded with its error class and no time.
+    val detail = (succeeded.map { case (k, ts) =>
       val priorNote = prior.get(k)
         .filter(p => p > 0.3 && ts.min > 1.5 * p)
         .map(p => ",\"prior_sec\":" + r3(p) +
           ",\"above_prior\":true").getOrElse("")
       s"\"" + k + "\":{\"sec\":" + ts.min + ",\"times\":" +
         ts.map(t => r3(t)).mkString("[", ",", "]") +
-        ",\"converged\":" + convergedFlags(k) + priorNote + "}"
-    }.mkString("{", ",", "}")
+        ",\"converged\":" + converged(ts) + priorNote +
+        ",\"status\":\"ok\"}"
+    } ++ failed.map { case (k, err) =>
+      s"\"" + k + "\":{\"status\":\"failed\",\"error\":\"" + err + "\"}"
+    }).mkString("{", ",", "}")
     val detailJson =
       s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"loadavg_start":$loadStart,"loadavg_end":$loadavg,"queries":$detail,"sf":"$sfDir"}"""
     try {
@@ -176,7 +203,8 @@ object Bench {
     def render(entries: Seq[(String, Double)], truncated: Boolean): String = {
       val qs = entries.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
       val trunc = if (truncated) "\"truncated\":true," else ""
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec",$trunc"queries":$qs,"sf":"$sfDir"}"""
+      val fails = if (failed.nonEmpty) s"\"failed\":${failed.size}," else ""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec",$trunc$fails"queries":$qs,"sf":"$sfDir"}"""
     }
     var line = render(shortIds, truncated = false)
     if (line.length > 1500) {
@@ -189,5 +217,10 @@ object Bench {
     }
     println(line)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[bench] ${failed.size} queries failed: ${failed.map(_._1).mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,9 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1 (after
+  * writing oracle_sql.json) when any query fails. */
 object Verify {
+  /** Writes each query's result to `<outDir>/<name>` as parquet and returns
+    * the names of the queries that threw. A query's directory is deleted
+    * before its write, so a failed query leaves no result from an earlier
+    * run for the compare to score.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[String] =
+    queries.flatMap { case (name, fn) =>
+      val dir = new java.io.File(outDir, name)
+      try {
+        FileUtils.deleteDirectory(dir)
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.getPath)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        if (sys.env.contains("GRAFT_VERIFY_TRACE")) e.printStackTrace()
+        Some(name)
+      }
+      finally spark.catalog.clearCache() // drop query-local persist()s
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -27,17 +50,8 @@ object Verify {
     // dump for fast local iteration; the driver never sets it (full run).
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        if (sys.env.contains("GRAFT_VERIFY_TRACE")) e.printStackTrace()
-      }
-      finally spark.catalog.clearCache() // drop query-local persist()s
-    }
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -54,5 +68,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -27,31 +27,29 @@ object ClaimPipeline {
     * else warns and is skipped with no metrics effect (SURVEY §2.3 S10).
     *
     * Returns the normalized frame with bookkeeping columns `_corrupt`,
-    * `_file_seq`, `_row_seq` (the latter two restore the reference's
-    * input-order output determinism — SURVEY §7.4 item 2; claim-file inputs
-    * are small config-like extracts, so the single-partition read that makes
-    * `monotonically_increasing_id` sequential is acceptable; the large-scale
-    * path sets preserveInputOrder=false and skips it).
+    * `_file_seq`, `_row_seq`. With `preserveOrder` the last two key each
+    * row by its position in the input (SURVEY §7.4 item 2), and the file is
+    * still read split-parallel: `monotonically_increasing_id` is
+    * (partition index << 33) + position in the partition, and Spark numbers
+    * one file's splits in offset order, so the id grows with the row's
+    * position in the file. (Multi-line JSON and `wholetext` reads are one
+    * partition per file anyway.) Without `preserveOrder` `_row_seq` is 0.
     */
   private def loadFile(spark: SparkSession, path: String, fileSeq: Int,
       preserveOrder: Boolean, loaderParity: Boolean): Option[DataFrame] = {
-    // Order preservation forces a single-partition read (the only way
-    // monotonically_increasing_id is sequential); the scale path
-    // (preserveOrder=false) keeps the parallel multi-split scan.
-    def shaped(df: DataFrame) = if (preserveOrder) df.coalesce(1) else df
     val normalized =
       if (path.endsWith(".csv"))
-        Some(Normalize.normalizeAlpha(shaped(
+        Some(Normalize.normalizeAlpha(
           spark.read.option("header", "true").option("mode", "PERMISSIVE")
-            .csv(path))))
+            .csv(path)))
       else if (path.endsWith(".json"))
         // loaderParity (S11): the VARIANT re-parse additionally flags
         // records the reference loader would raise on as corrupt.
-        Some(Normalize.normalizeBeta(shaped(
+        Some(Normalize.normalizeBeta(
           if (loaderParity) Normalize.betaRawLoaderParity(spark, path)
           else spark.read.option("multiLine", "true").option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .schema(Schemas.betaRaw).json(path))))
+            .schema(Schemas.betaRaw).json(path)))
       else {
         logger.warn(s"Unsupported file type: $path")
         None
@@ -66,6 +64,12 @@ object ClaimPipeline {
 
   /** Run the pipeline over `files`, writing the pretty-JSON candidates array
     * and the metrics text file, and returning both materialized results.
+    *
+    * Every file is read split-parallel. With `preserveInputOrder` the
+    * candidates are written in input order (files in argument order, rows
+    * in file order), restored on the driver from the `_file_seq`/`_row_seq`
+    * keys; without it they are written in the order the partitions return
+    * them.
     */
   def run(
       spark: SparkSession,
@@ -143,17 +147,19 @@ object ClaimPipeline {
       Eligibility.recommendedChanges(col("denial_reason"))
         .as("recommended_changes"),
     )
+    // Input-order keys: the sink sorts the collected rows by them on the
+    // driver and strips them (see Sinks.writeCandidatesPretty for why the
+    // order is not restored in Spark).
+    val orderKeys =
+      if (preserveInputOrder) Seq("_file_seq", "_row_seq") else Nil
     val projected = observed
       .filter(eligible && !claims("_corrupt"))
-      .select(candidateCols ++ Seq(col("_file_seq"), col("_row_seq")): _*)
-    val ordered =
-      if (preserveInputOrder) projected.orderBy(col("_file_seq"), col("_row_seq"))
-      else projected
-    val candidatesDf = ordered.drop("_file_seq", "_row_seq")
+      .select(candidateCols ++ orderKeys.map(col): _*)
 
     // Single action: collect (bounded) candidates; the observe node sees every
     // input row because the filter sits downstream of it.
-    val candidateRows = Sinks.writeCandidatesPretty(candidatesDf, outputPath)
+    val candidateRows =
+      Sinks.writeCandidatesPretty(projected, outputPath, orderKeys)
 
     val metrics = PipelineMetrics.fromObserved(
       obs.get, fileMalformed, config.bugCompatMetrics)

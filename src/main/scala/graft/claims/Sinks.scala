@@ -3,7 +3,12 @@ package graft.claims
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{graftbridge, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
+import org.apache.spark.sql.types.StructType
 
 /** Output sinks matching the reference's byte formats (SURVEY §2.1 O18/O19).
   *
@@ -95,17 +100,56 @@ object Sinks {
     * list too, claim_pipeline.py:233). The render streams through a
     * buffered writer straight to disk — bytes identical to the in-memory
     * formulation, peak memory bounded by the buffer.
+    *
+    * With `orderKeys`, the rows are written and returned sorted by those
+    * integral columns (ascending, in the given order), and the key columns
+    * are stripped; without, in the order the partitions return them.
     */
-  def writeCandidatesPretty(candidates: DataFrame, path: String): Seq[Row] = {
-    val rows = candidates.limit(DriverCollectGuard + 1).collect().toSeq
-    require(rows.size <= DriverCollectGuard,
+  def writeCandidatesPretty(candidates: DataFrame, path: String,
+      orderKeys: Seq[String] = Nil): Seq[Row] = {
+    // One plain collect of every partition, each capped at guard + 1 rows
+    // by a LocalLimit (no exchange); the order is restored below, on the
+    // driver, where the nearly-ordered partitions make TimSort about
+    // linear. Two in-Spark alternatives lose:
+    //  - a top-K (`orderBy` + `limit`) allocates buffers sized by the limit
+    //    in every task (about 12 MB per task at a 1M-row guard);
+    //  - gathering the rows into one partition first puts an exchange
+    //    above the caller's `observe` node, and AQE's empty-relation
+    //    propagation then drops the observed metrics when nothing passes
+    //    the candidate filter.
+    val capped = graftbridge.ofRows(candidates.sparkSession,
+      LocalLimit(Literal(DriverCollectGuard + 1),
+        candidates.queryExecution.analyzed))
+    val keyed = capped.collect()
+    require(keyed.length <= DriverCollectGuard,
       s"candidate set exceeds driver guard ($DriverCollectGuard rows); " +
         "use writeCandidatesDistributed")
+    val rows = if (orderKeys.isEmpty) keyed else inKeyOrder(keyed, orderKeys)
     val out = Files.newBufferedWriter(Paths.get(path),
       StandardCharsets.UTF_8)
     try renderJsonArrayTo(out, rows)
     finally out.close()
-    rows
+    ArraySeq.unsafeWrapArray(rows)
+  }
+
+  /** `rows` stably sorted by the integral key columns, keys stripped. */
+  private def inKeyOrder(rows: Array[Row], keys: Seq[String]): Array[Row] = {
+    if (rows.isEmpty) return rows
+    val schema = rows.head.schema
+    val keyIdx = keys.map(schema.fieldIndex).toArray
+    val keep = schema.fields.indices.filterNot(keyIdx.contains).toArray
+    val outSchema = StructType(keep.map(schema.fields))
+    java.util.Arrays.sort(rows, (a: Row, b: Row) => {
+      var c = 0
+      var i = 0
+      while (c == 0 && i < keyIdx.length) {
+        c = java.lang.Long.compare(a.getAs[Number](keyIdx(i)).longValue,
+          b.getAs[Number](keyIdx(i)).longValue)
+        i += 1
+      }
+      c
+    })
+    rows.map(r => new GenericRowWithSchema(keep.map(r.get), outSchema): Row)
   }
 
   /** Scalable sink: distributed JSON-lines (documented format divergence). */
