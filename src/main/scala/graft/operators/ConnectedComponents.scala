@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   * driver-side scalar (a single long), the standard driver role in any
   * iterative fixpoint (same as k-means/PageRank loops). Each iteration
   * ends in a LAZY localCheckpoint whose materialization is driven by
-  * the convergence count — one job per iteration. The checkpoint is
+  * the convergence count, so no separate materialize job runs; AQE
+  * still submits each shuffle-map and broadcast stage as its own job,
+  * six per iteration (ConnectedComponentsSpec pins it). The checkpoint is
   * still required: the label plan references the previous labels twice
   * (self ∪ neighbors), so without lineage truncation the logical plan
   * doubles per iteration — a 50-iteration chain OOMs the driver on
@@ -70,9 +72,9 @@ object ConnectedComponents {
         .groupBy("src").agg(min(col("component")).as("nmin"))
         .select(col("src").as("node"), col("nmin"))
       // Labels decrease monotonically, so "changed" ≡ a neighbor offered
-      // a smaller label. LAZY localCheckpoint + count fuses the two
-      // per-iteration jobs into one: the count action is the first
-      // computation of the marked RDD, so its single job materializes
+      // a smaller label. LAZY localCheckpoint + count fuses the
+      // materialize and count jobs: the count action is the first
+      // computation of the marked RDD, so its job materializes
       // the checkpoint blocks AND returns the convergence scalar (the
       // eager variant ran a materialize job, then a second count job
       // over the persisted rows). Lineage truncation is identical —

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, graftbridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Weighted PageRank with uniform dangling-mass redistribution, in exact
   * scaled-integer arithmetic (rank units of 1e-12).
@@ -18,68 +23,76 @@ import org.apache.spark.sql.functions._
   * PageRankSpec pins that.
   *
   * Scale shape: callers CONDENSE the graph first (aggregate the fact
-  * table to an edge list); the iterations then run on node/edge-bounded
-  * frames where every rank join broadcasts. The rank·w multiply runs in
-  * DECIMAL(38,0) (headroom to ~1e38), so per-edge weights up to ~1e26
-  * are safe — BIGINT would have overflowed at w ≈ 9e6 with rank mass
-  * ~1e12 on a node.
+  * table to an edge list); that aggregation is the only distributed
+  * work. The node set and the condensed `(src, dst, w)` list are then
+  * collected once (each capped at [[DriverGuard]] rows) and every round
+  * runs on the driver, so the Spark job count does not grow with
+  * `iters` (PageRankSpec pins it). The rounds
+  * compute in BigInt: `r·w` cannot overflow, `div` truncates toward
+  * zero exactly as Spark's does, and each round's ranks convert back to
+  * BIGINT with `longValueExact`, so an overflow throws as ANSI mode
+  * would instead of wrapping.
   */
 object PageRank {
 
   /** Total rank mass: ranks start at Scale/|nodes| and sum to ~Scale. */
   val Scale: Long = 1000000000000L
 
-  /** @param edges  (src, dst, w) weighted directed edge frame
+  /** Max rows the operator collects from each of `nodes` and `edges`. */
+  val DriverGuard: Int = 1000000
+
+  /** @param edges  (src, dst, w) weighted directed edge frame, integral w;
+    *               endpoints compare to node ids as the node column's type
     * @param nodes  single-column frame of all node ids (superset of the
     *               edge endpoints; isolated nodes keep teleport rank)
-    * @param iters  unrolled iteration count
-    * @return (node, r) with r in units of Scale⁻¹ (BIGINT)
+    * @param iters  iteration count
+    * @return local (node, r) frame with r in units of Scale⁻¹ (BIGINT)
     */
   def ranks(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val nodeCol = nodes.columns.head
-    val n = nodes.count()
+    val node = nodes.schema.head
+    val ids = collectGuarded(nodes.select(col(node.name)), "node").map(_.get(0))
+    val n = ids.length
     require(n > 0, "empty node set")
-    val init = Scale / n
-    val teleport = (Scale * 15L / 100L) / n
-    // Condense ONCE: without the eager checkpoint, every iteration's
-    // lineage re-embeds the (possibly fact-scale) edge aggregation —
-    // PLAN_SURVEY caught q64's plan repeating the 4-way join ~9×. The
-    // checkpointed edge list is nodes²-bounded, so this is cheap at any
-    // corpus size; the same lineage-truncation recipe as
-    // ConnectedComponents.
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .localCheckpoint(true)
-    val outw = e.groupBy("src").agg(sum(col("w")).cast("long").as("out_w"))
-    var ranks = nodes.select(col(nodeCol).as("node")).withColumn("r", lit(init))
+    // try_cast: an endpoint the node type cannot hold matches no node,
+    // as it would in a join that widens both sides
+    val es = collectGuarded(edges.select(col("src").try_cast(node.dataType),
+        col("dst").try_cast(node.dataType), col("w").cast("long")), "edge")
+      .map(e => (e.get(0), e.get(1), Option(e.getAs[java.lang.Long](2)).map(BigInt(_))))
+    // Positions of each non-null id (a null id matches no edge endpoint).
+    val at: Map[Any, Array[Int]] =
+      ids.indices.filter(ids(_) != null).toArray.groupBy(ids(_))
+    // Out-weight sums every edge of a source, inside the node set or not.
+    val outw: Map[Any, BigInt] = es.groupBy(_._1).map { case (s, g) =>
+      s -> g.flatMap(_._3).sum
+    }
+    val teleport = BigInt((Scale * 15L / 100L) / n)
+    var r = Array.fill(n)(Scale / n)
     for (_ <- 1 to iters) {
-      val contrib = e
-        .join(broadcast(ranks), col("node") === col("src"))
-        .join(broadcast(outw), "src")
-        // The multiply runs in DECIMAL(38,0): rank mass is ≤ Scale (1e12)
-        // per node, so r·w as BIGINT would overflow once per-edge weights
-        // reach ~9e6 (ANSI mode throws mid-iteration). DECIMAL(38,0) holds
-        // to r·w ≈ 1e38; the `div` truncates back to BIGINT with identical
-        // semantics wherever BIGINT wouldn't have overflowed.
-        .select(col("dst"),
-          expr("(cast(r as decimal(38,0)) * w) div out_w").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("s"))
+      val contrib = collection.mutable.HashMap.empty[Any, BigInt]
+      for ((s, d, w) <- es; wv <- w; p <- at.getOrElse(s, Array.empty[Int]))
+        contrib(d) = contrib.getOrElse(d, BigInt(0)) + BigInt(r(p)) * wv / outw(s)
       // rank parked on nodes without out-edges redistributes uniformly —
       // without this, dangling nodes leak 85% of their mass every step
-      val dang = ranks
-        .join(broadcast(outw), col("node") === col("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-      // ranks feeds TWO consumers next round (contrib + dangling scan):
-      // unchecked, the lineage doubles per iteration. Node-count-sized
-      // frame, so the eager checkpoint is constant cost.
-      ranks = nodes.select(col(nodeCol).as("node"))
-        .join(broadcast(contrib), col("node") === col("dst"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          (lit(teleport) +
-            expr(s"(850 * (coalesce(s, 0) + dang div $n)) div 1000")).as("r"))
-        .localCheckpoint(true)
+      val dang = ids.indices.filter(p => ids(p) == null || !outw.contains(ids(p)))
+        .map(p => BigInt(r(p))).sum
+      r = ids.map { id =>
+        val s = if (id == null) BigInt(0) else contrib.getOrElse(id, BigInt(0))
+        (teleport + BigInt(850) * (s + dang / n) / 1000).bigInteger.longValueExact()
+      }
     }
-    ranks
+    val schema = StructType(Seq(StructField("node", node.dataType, node.nullable),
+      StructField("r", LongType, nullable = false)))
+    nodes.sparkSession.createDataFrame(
+      ids.indices.map(p => Row(ids(p), r(p))).asJava, schema)
+  }
+
+  /** One exchange-free collect, each partition capped at guard + 1 rows. */
+  private def collectGuarded(df: DataFrame, what: String): Array[Row] = {
+    val rows = graftbridge.ofRows(df.sparkSession,
+      LocalLimit(Literal(DriverGuard + 1), df.queryExecution.analyzed)).collect()
+    require(rows.length <= DriverGuard,
+      s"PageRank $what set exceeds driver guard ($DriverGuard rows)")
+    rows
   }
 }

@@ -69,19 +69,19 @@ object Analytics4 {
         .orderBy("band")
     }),
 
-    // Weighted PageRank, 3 unrolled iterations, over the nation-level
+    // Weighted PageRank, 3 iterations, over the nation-level
     // trade graph (supplier nation → customer nation, edge weight =
     // lineitem count). The graph CONDENSES first — the 4-way fact join
-    // aggregates to a nodes²-bounded edge list, so the iterations run on
-    // tiny frames (rank and edge joins broadcast) while the only
-    // corpus-scale work is the initial aggregation. Rank lives in exact
-    // scaled-integer units (1e-12): damping 0.85 is ×850 div 1000 and
-    // contributions divide with `div`, so every iteration is pure
-    // integer arithmetic — bit-identical across engines by construction
+    // aggregates to a nodes²-bounded edge list (at most 25² rows), which
+    // the operator collects once and iterates on the driver; the only
+    // Spark work is that aggregation and the name join over the local
+    // 25-row rank frame. Rank lives in exact scaled-integer units
+    // (1e-12): damping 0.85 is ×850 div 1000 and contributions divide
+    // with `div`, so every iteration is pure integer arithmetic —
+    // bit-identical across engines by construction
     // (float round() half-way ties diverged between the engines'
-    // decimal-string vs binary rounding; integers cannot). BIGINT holds
-    // to w·rank ≈ 9e18 — beyond that (≈1e9-row single edges) the same
-    // pipeline swaps BIGINT for DECIMAL(38,0).
+    // decimal-string vs binary rounding; integers cannot). The driver
+    // rounds multiply w·rank in BigInt, so no edge weight overflows it.
     "q64_pagerank" -> ((spark, dir) => {
       val edges = t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"))

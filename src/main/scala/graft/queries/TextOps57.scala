@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *    graph restricts to the exact top-50 tokens by frequency (bounded
   *    min-k, freq-desc/token-asc tiebreak), is symmetrized on the
   *    canonical pair, and 3 iterations of the scaled-integer
-  *    [[graft.operators.PageRank]] run on the vocabulary-bounded
-  *    frame — bit-identical ranks on any engine or partitioning, which
-  *    is what lets a 3-round iterative graph algorithm hash-match a
-  *    DuckDB replay.
+  *    [[graft.operators.PageRank]] run on the driver over the
+  *    collected ≤ 50-node graph — bit-identical ranks on any engine or
+  *    partitioning, which is what lets a 3-round iterative graph
+  *    algorithm hash-match a DuckDB replay.
   */
 object TextOps57 {
   import Tables.t

@@ -59,4 +59,21 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       ConnectedComponents.labels(chain.toDF("a", "b"), "a", "b", maxIter = 2)
     }
   }
+
+  test("each extra fixpoint iteration runs six Spark jobs, not one") {
+    import spark.implicits._
+    // A k-node chain converges in k - 1 iterations and needs one more to
+    // see no change, so chains of 6 and 12 nodes differ by 6 iterations.
+    // The lazy checkpoint folds the materialization into the
+    // convergence count (an eager one makes it 7 jobs per iteration),
+    // but AQE still submits every shuffle-map and broadcast stage of
+    // the iteration as its own job: 6 per iteration, local[4], AQE on.
+    def jobs(k: Int): Int = graft.JobCounter(spark) {
+      ConnectedComponents.labels(
+        (0L until k - 1L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b")
+        .collect()
+    }._2
+    val (short, long) = (jobs(6), jobs(12))
+    assert(long - short == 6 * 6, s"6-node chain: $short jobs, 12-node chain: $long")
+  }
 }

@@ -93,4 +93,90 @@ class PageRankSpec extends AnyFunSuite {
     assert(got == r.map { case (k, v) => k -> v.toLong },
       "decimal-path ranks diverged from the BigInt model")
   }
+
+  /** BigInt model over arbitrary node keys, with the operator's join
+    * semantics: out-weight sums every edge of a source, a source outside
+    * `nodes` has no rank to give, and a contribution to a destination
+    * outside `nodes` is dropped.
+    */
+  private def model[K](nodes: Seq[K], edges: Seq[(Any, Any, Long)],
+      iters: Int): Map[K, Long] = {
+    val n = nodes.length
+    val teleport = BigInt((PageRank.Scale * 15L / 100L) / n)
+    val outw = edges.groupBy(_._1).map { case (s, es) => s -> BigInt(es.map(_._3).sum) }
+    var r: Map[Any, BigInt] = nodes.map(v => (v: Any) -> BigInt(PageRank.Scale / n)).toMap
+    for (_ <- 1 to iters) {
+      val contrib = collection.mutable.Map.empty[Any, BigInt].withDefaultValue(BigInt(0))
+      edges.foreach { case (s, d, w) =>
+        r.get(s).foreach(rs => contrib(d) += (rs * w) / outw(s))
+      }
+      val dang = nodes.filterNot(v => outw.contains(v)).map(v => r(v)).sum
+      r = nodes.map(v => (v: Any) ->
+        (teleport + (BigInt(850) * (contrib(v) + dang / n)) / 1000)).toMap
+    }
+    nodes.map(v => v -> r(v).toLong).toMap
+  }
+
+  test("an edge from outside the node set adds out-weight but gives no rank") {
+    import spark.implicits._
+    val nodes = Seq(1L, 2L, 3L)
+    // 9 -> 1 contributes nothing; 1 -> 9 and 1 -> 2 split node 1's rank
+    // by out-weight 4, and 1 -> 9's quarter is dropped with its dst
+    val edges = Seq((9L, 1L, 5L), (1L, 9L, 1L),
+      (1L, 2L, 3L), (2L, 3L, 2L), (3L, 1L, 1L))
+    val got = PageRank.ranks(edges.toDF("src", "dst", "w"), nodes.toDF("id"), 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == model(nodes, edges, 4))
+    // node 1's dropped quarter leaves the graph, so mass falls below the
+    // truncation-only loss band of the closed graphs
+    assert(got.values.sum < PageRank.Scale * 95 / 100)
+  }
+
+  test("an edge into a node outside the node set drops its contribution") {
+    import spark.implicits._
+    val nodes = Seq(0L, 1L, 2L, 3L)
+    val edges = Seq((0L, 1L, 2L), (0L, 7L, 2L),
+      (1L, 2L, 1L), (2L, 0L, 1L), (2L, 8L, 3L))
+    val got = PageRank.ranks(edges.toDF("src", "dst", "w"), nodes.toDF("id"), 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.keySet == nodes.toSet)
+    assert(got == model(nodes, edges, 3))
+  }
+
+  test("Int node ids rank Long edge endpoints and keep the node column's type") {
+    import spark.implicits._
+    val nodes = Seq(10, 20, 30, 40, 50)
+    val edges = Seq((10L, 20L, 3L), (20L, 30L, 1L),
+      (30L, 10L, 2L), (30L, 40L, 5L), (40L, 10L, 1L), (60L, 50L, 4L))
+    val out = PageRank.ranks(edges.toDF("src", "dst", "w"), nodes.toDF("id"), 3)
+    assert(out.schema.map(_.dataType) ==
+      Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType))
+    val got = out.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val want = model(nodes.map(_.toLong), edges, 3)
+    assert(got == want.map { case (k, v) => k.toInt -> v })
+  }
+
+  test("String node ids over a symmetrized co-occurrence graph (the t51 shape)") {
+    import spark.implicits._
+    val nodes = Seq("claim", "denied", "resubmit", "payer", "code", "idle")
+    val pairs = Seq(("claim", "denied", 4L), ("claim", "resubmit", 2L),
+      ("denied", "payer", 1L), ("code", "denied", 3L), ("payer", "resubmit", 1L))
+    val edges = pairs.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    val got = PageRank.ranks(edges.toDF("src", "dst", "w"), nodes.toDF("tok"), 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == model(nodes, edges, 3))
+  }
+
+  test("the round count does not change the number of Spark jobs") {
+    import spark.implicits._
+    val raw = Seq((0L, 1L), (0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 1L))
+      .toDF("src", "dst")
+    // a condensed edge list, as the callers pass it: aggregated, not local
+    val edges = raw.groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    val nodes = (0L to 4L).toDF("id")
+    def jobs(iters: Int): Int =
+      graft.JobCounter(spark)(PageRank.ranks(edges, nodes, iters).collect())._2
+    val (one, six) = (jobs(1), jobs(6))
+    assert(one == six, s"iters=1 ran $one jobs, iters=6 ran $six")
+  }
 }

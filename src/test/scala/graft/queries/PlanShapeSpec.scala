@@ -154,11 +154,11 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q64's visible plan is the checkpoint-truncated tail: tiny and broadcast-only") {
-    // PageRank eagerly checkpoints the condensed edges and each rank
-    // round (PLAN_SURVEY caught the un-checkpointed lineage re-embedding
-    // the 4-way fact join ~9x), so the final plan is just the name join
-    // over the checkpointed 25-row rank frame. Per-iteration shape is
-    // pinned by PageRankSpec's exact sequential differential instead.
+    // PageRank collects the condensed edges once and runs its rounds on
+    // the driver, returning a local 25-row rank frame, so the final plan
+    // is just the name join over that local frame: no fact-join lineage
+    // and no shuffle join. The rounds themselves are pinned by
+    // PageRankSpec's exact sequential differential instead.
     val p = plan("q64_pagerank")
     val shuffleJoins = "SortMergeJoin".r.findAllIn(p).length +
       "ShuffledHashJoin".r.findAllIn(p).length
