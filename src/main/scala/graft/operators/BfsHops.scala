@@ -121,60 +121,4 @@ object BfsHops {
         s"all-pairs BFS did not converge in $maxIter rounds")
     dist
   }
-
-  /** Single-source shortest WEIGHTED distances (Bellman-Ford relaxation
-    * to a fixpoint) over a directed edge list with a non-negative
-    * integer weight column — the generalization of [[hops]] (which is
-    * this with every weight 1). Same scale shape: one-time edge
-    * materialization, per-iteration join + map-side-combinable min,
-    * node-bounded distance frame, count-fused lazy per-iteration
-    * checkpoint.
-    * Converges within |V|−1 iterations for any non-negative weights; the
-    * declarative replay is |V|−1 unrolled relaxations (both reach the
-    * same unique fixpoint).
-    */
-  def weighted(edges: DataFrame, srcCol: String, dstCol: String,
-      wCol: String, source: Long, undirected: Boolean = false,
-      maxIter: Int = 50): DataFrame = {
-    require(maxIter > 0, "maxIter must be positive")
-    val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("long").as("w")).localCheckpoint(true)
-    val e0 =
-      if (undirected)
-        base.union(base.select(col("dst").as("src"), col("src").as("dst"),
-          col("w")))
-      else base
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var dist = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node")))
-      .union(Seq(source).toDF("node")).distinct()
-      .withColumn("dist",
-        when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long")))
-      .localCheckpoint(true)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val offer = e0
-        .join(dist.filter(col("dist").isNotNull)
-          .select(col("node").as("src"), col("dist")), "src")
-        .groupBy("dst").agg(min(col("dist") + col("w")).as("nd"))
-        .select(col("dst").as("node"), col("nd"))
-      val next = dist
-        .join(offer, Seq("node"), "left")
-        .select(col("node"),
-          least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"),
-          (coalesce(col("nd"), lit(Long.MaxValue)) <
-            coalesce(col("dist"), lit(Long.MaxValue))).as("_chg"))
-        .localCheckpoint(false)
-      changed = next.filter(col("_chg")).count()
-      dist = next.select("node", "dist")
-      i += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"Bellman-Ford did not converge in $maxIter iterations")
-    dist
-  }
 }

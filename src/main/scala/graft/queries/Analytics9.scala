@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *  - q109: single-source weighted shortest paths (Bellman-Ford
   *    relaxation to a fixpoint) over the corridor-sparsified nation
   *    trade graph, with deterministic integer edge weights — the
-  *    weighted complement of q81's hop distances, via
-  *    `operators.BfsHops.weighted`. Exact integer arithmetic; the
+  *    weighted complement of q81's hop distances. A node with no path
+  *    from the source gets a null distance; the node domain is the edge
+  *    endpoints ∪ {source}. Exact integer arithmetic; the
   *    DuckDB oracle replays |V|−1 = 24 unrolled relaxation rounds
   *    (generated CTE chain), which provably reaches the same unique
   *    fixpoint the iterative side converges to.
@@ -223,9 +224,8 @@ object Analytics9 {
       // constant-size-collect discipline: the data-sized fact-table
       // condense above stays distributed; the relaxation loop was ~10
       // checkpointed Spark rounds of ≤50-row frames (pure scheduling).
-      // Same unique fixpoint (shortest distances), null = unreachable,
-      // node domain = edge endpoints ∪ {source} exactly as
-      // BfsHops.weighted (which BfsHopsSpec still covers).
+      // Same unique fixpoint (shortest distances); null = unreachable;
+      // node domain = edge endpoints ∪ {source}.
       val ew = raw
         .select(col("a").cast("long"), col("b").cast("long"),
           col("w").cast("long"))

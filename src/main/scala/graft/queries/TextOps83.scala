@@ -1,10 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.VectorOps
 
 /** Round-9 additions, batch 83 (SURVEY.md §2.4) — graph ANN, completed:
   *
@@ -38,86 +35,10 @@ import graft.functions.VectorOps
   *    with id tie-breaks so DuckDB replays bit-exactly.
   */
 object TextOps83 {
-  import Tables.t
+  import GraphWalk._
 
-  private[queries] val K = 5        // reported answer size (recall@5)
-  private[queries] val KBuild = 10  // internal graph out-degree (richer wedges:
-                           // k=5 stalls near 0.35; the NN-Descent paper
-                           // builds with K ~ 2-4x the query k)
-  private[queries] val Rounds = 3   // NN-Descent refinement rounds
-  private[queries] val Ef = 10      // search frontier width
-  private[queries] val Hops = 3     // greedy search hops
-  private[queries] val Probes = 50  // fixed probe panel: vec_id < 50
-
-  /** embeddings with non-null vectors; (vec_id, embedding). */
-  private[queries] def emb(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "embeddings")
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-
-  private[queries] def score(e: DataFrame)(pairs: DataFrame): DataFrame = pairs
-    .join(e.select(col("vec_id").as("u"), col("embedding").as("ue")), "u")
-    .join(e.select(col("vec_id").as("v"), col("embedding").as("ve")), "v")
-    .select(col("u"), col("v"),
-      round(VectorOps.cosine(col("ue"), col("ve")), 6).as("cos"))
-
-  private[queries] def topK(k: Int)(scored: DataFrame): DataFrame =
-    topKRanked(k)(scored).select("u", "v")
-
-  /** Like topK but keeps the rank, so a KBuild-degree graph can answer
-    * recall@5 without rescoring. */
-  private def topKRanked(k: Int)(scored: DataFrame): DataFrame = {
-    val w = Window.partitionBy("u").orderBy(col("cos").desc, col("v").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  private[queries] def undirected(b: DataFrame): DataFrame = {
-    val uv = b.select("u", "v")
-    uv.unionAll(uv.select(col("v").as("u"), col("u").as("v"))).distinct()
-  }
-
-  /** NN-Descent: md5-slot random init, then `rounds` wedge-expansion
-    * refinements. Returns b0 :: b1 :: ... :: b_rounds (all persisted).
-    */
-  private[queries] def descend(spark: SparkSession, e: DataFrame, n: Long,
-      rounds: Int): Seq[DataFrame] = {
-    val slots = e.select(col("vec_id").as("v"),
-      pmod(graft.functions.Md5Pack(
-        concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-    val draws = e.select(col("vec_id").as("u"),
-        explode(expr("sequence(1, 8)")).as("j"))
-      .select(col("u"), pmod(graft.functions.Md5Pack(
-        concat_ws("_", lit("nnd"), col("u"), col("j"))),
-        lit(n)).as("slot"))
-    val init = draws.join(slots, "slot")
-      .filter(col("u") =!= col("v")).select("u", "v").distinct()
-    // eager localCheckpoint, not persist: each round references the
-    // previous graph ~5× (undirect ×2, wedge ×2, union ×1), so the
-    // LOGICAL plan grows 5^rounds — the plan string alone OOMs the
-    // driver by round 3. Checkpointing truncates plan and lineage
-    // (the ConnectedComponents/BfsHops discipline).
-    val b0 = topKRanked(KBuild)(score(e)(init))
-      .select("u", "v", "rank").localCheckpoint(true)
-    (1 to rounds).scanLeft(b0) { (b, _) =>
-      val g = undirected(b)
-      val cand = g.as("g1").join(g.as("g2"), col("g1.v") === col("g2.u"))
-        .select(col("g1.u").as("u"), col("g2.v").as("v"))
-        .filter(col("u") =!= col("v"))
-        .unionAll(b.select("u", "v")).distinct()
-      topKRanked(KBuild)(score(e)(cand))
-        .select("u", "v", "rank").localCheckpoint(true)
-    }
-  }
-
-  /** Exact top-5 ground truth for the probe panel (u < Probes). */
-  private[queries] def exactPanel(e: DataFrame): DataFrame =
-    topK(K)(e.filter(col("vec_id") < Probes)
-      .select(col("vec_id").as("u"), col("embedding").as("ue"))
-      .join(e.select(col("vec_id").as("v"), col("embedding").as("ve")),
-        col("u") =!= col("v"))
-      .select(col("u"), col("v"),
-        round(VectorOps.cosine(col("ue"), col("ve")), 6).as("cos")))
+  /** s38b's hit columns: the random init, then one per round. */
+  private val roundHits = "hits_init" +: (1 to Rounds).map(i => s"hits_r$i")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s38b_nn_descent_converge" -> ((spark, dir) => {
@@ -126,24 +47,15 @@ object TextOps83 {
       // the graph build and the exact ground-truth panel are
       // independent legs — materialize them concurrently (Par §2.6)
       val (bs, exact) = Par.both(spark)(
-        descend(spark, e, n, Rounds), // b0..b3
-        { val ex = exactPanel(e).persist(); ex.count(); ex })
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      def hits(b: DataFrame, name: String): DataFrame =
-        b.filter(col("rank") <= K).select("u", "v")
-          .intersect(exact).agg(count(lit(1)).as(name))
-      val names = "hits_init" +: (1 to Rounds).map(i => s"hits_r$i")
-      val joined = bs.zip(names).map { case (b, nm) => hits(b, nm) }
-        .reduce((a, b) => a.crossJoin(broadcast(b)))
-        .crossJoin(broadcast(possible))
-      val recalls = names.map(nm =>
-        (col(nm) / col("possible")).as(nm.replace("hits", "recall")))
-      val monotone = names.sliding(2).map { w =>
-        col(w(1)) >= col(w(0))
-      }.reduce(_ && _)
+        descend(e, n), // b0..b3
+        exactPanel(e, e))
+      val joined = audit(exact)(bs.zip(roundHits).map { case (b, nm) =>
+        hits(b.filter(col("rank") <= K).select("u", "v"), exact, nm)
+      }: _*)
       val outCols: Seq[Column] =
-        (Seq(lit(n).as("n_nodes"), col("possible")) ++ names.map(col) ++
-          recalls) :+ monotone.as("monotone")
+        (Seq(lit(n).as("n_nodes"), col("possible")) ++
+          roundHits.map(col) ++ roundHits.map(recall)) :+
+          monotone(roundHits).as("monotone")
       joined.select(outCols: _*)
     }),
 
@@ -151,208 +63,44 @@ object TextOps83 {
       val e = emb(spark, dir)
       val n = e.count()
       // graph build ∥ exact panel: independent legs (Par §2.6)
-      val (graph, exact) = Par.both(spark)(
-        undirected(descend(spark, e, n, Rounds).last)
-          .localCheckpoint(true),
-        { val ex = exactPanel(e).persist(); ex.count(); ex })
-      // 8 md5-deterministic entry points per probe, via slot ownership
-      val slots = e.select(col("vec_id").as("v"),
-        pmod(graft.functions.Md5Pack(
-          concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-      val entries = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"),
-          explode(expr("sequence(1, 8)")).as("j"))
-        .select(col("u"), pmod(graft.functions.Md5Pack(
-          concat_ws("_", lit("s39"), col("u"), col("j"))),
-          lit(n)).as("slot"))
-        .join(slots, "slot").select("u", "v").distinct()
-      // greedy best-first: expand, rescore, keep top-ef per probe;
-      // checkpoint per hop (two consumers per hop → plan doubles)
-      val frontier = (1 to Hops).foldLeft(
-        topK(Ef)(score(e)(entries)).localCheckpoint(true)) { (f, _) =>
-        val nb = f.as("f").join(graph.as("g"), col("f.v") === col("g.u"))
-          .select(col("f.u").as("u"), col("g.v").as("v"))
-          .unionAll(f).distinct()
-        topK(Ef)(score(e)(nb)).localCheckpoint(true)
-      }
-      val answer = topK(K)(
-        score(e)(frontier).filter(col("u") =!= col("v")))
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      val hits = answer.intersect(exact).agg(count(lit(1)).as("hits"))
-      hits.crossJoin(broadcast(possible))
+      val (g, exact) = Par.both(spark)(graph(e, n), exactPanel(e, e))
+      val frontier =
+        walk(g, randomEntries(e, n, "s39"))(byCosine(e)).last
+      audit(exact)(hits(answer(e, frontier), exact, "hits"))
         .select(lit(n).as("n_nodes"), col("possible"), col("hits"),
-          (col("hits") / col("possible")).as("recall"))
+          recall("hits"))
     }),
   )
 
   // ---- oracle: the same chain in DuckDB, rounds unrolled ----
 
-  // norms precomputed once per vector in the `e` CTE: the value is
-  // bit-identical to inlining sqrt(list_dot_product(x,x)) per pair
-  // (same expression, same double), but the rescore stages do one dot
-  // product per candidate instead of three — the chain re-runs for
-  // every CTE reference, so this is the difference between minutes
-  // and tens of minutes of oracle time
-  private[queries] def cosSql(a: String, b: String): String =
-    s"round(list_dot_product($a.emb, $b.emb) / ($a.nrm * $b.nrm), 6)"
-
-  /** CTEs e, nn, slots, draws, init, s0, b0 — identical to s38's. */
-  private[queries] def duckInit: String = {
-    val slotOwn = Tables.duckMd5Pack("'nnd_' || CAST(vec_id AS VARCHAR)")
-    val slotDraw = Tables.duckMd5Pack(
-      "'nnd_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
-    s"""e AS MATERIALIZED (
-       |  SELECT vec_id, emb, sqrt(list_dot_product(emb, emb)) AS nrm
-       |  FROM (
-       |    SELECT vec_id,
-       |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |    FROM embeddings WHERE embedding IS NOT NULL)),
-       |nn AS MATERIALIZED (SELECT count(*) AS n FROM e),
-       |slots AS MATERIALIZED (
-       |  SELECT vec_id AS v, $slotOwn % nn.n AS slot FROM e, nn),
-       |draws AS (
-       |  SELECT u, $slotDraw % nn.n AS slot FROM (
-       |    SELECT vec_id AS u, unnest(range(1, 9)) AS j FROM e), nn),
-       |init AS (
-       |  SELECT DISTINCT u, v FROM draws JOIN slots USING (slot)
-       |  WHERE u <> v),
-       |s0 AS (
-       |  SELECT i.u, i.v, ${cosSql("a", "b")} AS cos
-       |  FROM init i JOIN e a ON a.vec_id = i.u
-       |  JOIN e b ON b.vec_id = i.v),
-       |b0 AS MATERIALIZED (
-       |  SELECT u, v, rank FROM (
-       |    SELECT u, v, row_number() OVER (PARTITION BY u
-       |      ORDER BY cos DESC, v) AS rank FROM s0)
-       |  WHERE rank <= $KBuild)""".stripMargin
-  }
-
-  /** One NN-Descent round: g_i/cand_i/s_i/b_i from b_{i-1}. */
-  private[queries] def duckRound(i: Int): String =
-    s"""g$i AS MATERIALIZED (
-       |  SELECT u, v FROM b${i - 1}
-       |  UNION SELECT v AS u, u AS v FROM b${i - 1}),
-       |cand$i AS (
-       |  SELECT DISTINCT u, v FROM (
-       |    SELECT g1.u AS u, g2.v AS v
-       |    FROM g$i g1 JOIN g$i g2 ON g1.v = g2.u
-       |    WHERE g1.u <> g2.v
-       |    UNION ALL SELECT u, v FROM b${i - 1})),
-       |s$i AS (
-       |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-       |  FROM cand$i c JOIN e a ON a.vec_id = c.u
-       |  JOIN e b ON b.vec_id = c.v),
-       |b$i AS MATERIALIZED (
-       |  SELECT u, v, rank FROM (
-       |    SELECT u, v, row_number() OVER (PARTITION BY u
-       |      ORDER BY cos DESC, v) AS rank FROM s$i)
-       |  WHERE rank <= $KBuild)""".stripMargin
-
-  /** Exact probe-panel top-5: se, ex. */
-  private[queries] def duckExact: String =
-    s"""se AS (
-       |  SELECT p.vec_id AS u, c.vec_id AS v, ${cosSql("p", "c")} AS cos
-       |  FROM e p JOIN e c
-       |    ON p.vec_id < $Probes AND p.vec_id <> c.vec_id),
-       |ex AS MATERIALIZED (
-       |  SELECT u, v FROM (
-       |    SELECT u, v, row_number() OVER (PARTITION BY u
-       |      ORDER BY cos DESC, v) AS rank FROM se)
-       |  WHERE rank <= $K)""".stripMargin
-
   val oracleSql: Map[String, String] = Map(
     "s38b_nn_descent_converge" -> {
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val hitSel = (0 to Rounds).map { i =>
-        val nm = if (i == 0) "hits_init" else s"hits_r$i"
-        s"""    (SELECT count(*) FROM (
-           |      SELECT u, v FROM b$i WHERE rank <= $K INTERSECT
-           |      SELECT * FROM ex)) AS $nm""".stripMargin
+      val answers = (0 to Rounds).map { i =>
+        s"a$i AS (SELECT u, v FROM b$i WHERE rank <= $K)"
       }.mkString(",\n")
-      val names = "hits_init" +: (1 to Rounds).map(i => s"hits_r$i")
-      val recallSel = names.map(nm =>
-        s"  $nm / possible AS ${nm.replace("hits", "recall")}")
-        .mkString(",\n")
-      val monotone = names.sliding(2).map(w => s"${w(1)} >= ${w(0)}")
-        .mkString(" AND ")
-      s"""WITH $duckInit,
-         |$rounds,
+      s"""WITH $duckDescend,
+         |$answers,
          |$duckExact,
-         |hits AS (
-         |  SELECT
-         |$hitSel,
-         |    (SELECT count(*) FROM ex) AS possible)
-         |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
-         |  CAST(possible AS BIGINT) AS possible,
-         |${names.map(nm => s"  CAST($nm AS BIGINT) AS $nm").mkString(",\n")},
-         |$recallSel,
-         |  $monotone AS monotone
+         |${duckAudit(roundHits.zipWithIndex.map { case (nm, i) => nm -> s"a$i" }: _*)}
+         |SELECT nn.n AS n_nodes,
+         |  possible,
+         |  ${roundHits.mkString(", ")},
+         |${roundHits.map(nm => s"  ${duckRecall(nm)}").mkString(",\n")},
+         |  ${duckMonotone(roundHits)} AS monotone
          |FROM hits, nn""".stripMargin
     },
 
-    "s39_graph_ann_search" -> {
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val entryDraw = Tables.duckMd5Pack(
-        "'s39_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
-      // f0 from entries, then Hops expand-rescore-truncate steps
-      val hops = (1 to Hops).map { h =>
-        s"""n$h AS (
-           |  SELECT DISTINCT u, v FROM (
-           |    SELECT f.u AS u, g.v AS v
-           |    FROM f${h - 1} f JOIN gs g ON f.v = g.u
-           |    UNION ALL SELECT u, v FROM f${h - 1})),
-           |sn$h AS (
-           |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-           |  FROM n$h c JOIN e a ON a.vec_id = c.u
-           |  JOIN e b ON b.vec_id = c.v),
-           |f$h AS MATERIALIZED (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY cos DESC, v) AS rank FROM sn$h)
-           |  WHERE rank <= $Ef)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $duckInit,
-         |$rounds,
-         |gs AS MATERIALIZED (
-         |  SELECT u, v FROM b$Rounds
-         |  UNION SELECT v AS u, u AS v FROM b$Rounds),
-         |entries AS (
-         |  SELECT DISTINCT d.u, s.v FROM (
-         |    SELECT u, $entryDraw % nn.n AS slot FROM (
-         |      SELECT vec_id AS u, unnest(range(1, 9)) AS j FROM e
-         |      WHERE vec_id < $Probes), nn) d
-         |  JOIN slots s USING (slot)),
-         |sf0 AS (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM entries c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v),
-         |f0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM sf0)
-         |  WHERE rank <= $Ef),
-         |$hops,
-         |sfin AS (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM f$Hops c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v
-         |  WHERE c.u <> c.v),
-         |answer AS (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM sfin)
-         |  WHERE rank <= $K),
+    "s39_graph_ann_search" ->
+      s"""WITH $duckGraph,
+         |${duckRandomEntries("entries", "s39")},
+         |${duckWalk("", "entries")(duckCosine)},
+         |${duckAnswer("answer", s"f$Hops")(duckCosine)},
          |$duckExact,
-         |hits AS (
-         |  SELECT
-         |    (SELECT count(*) FROM (SELECT * FROM answer INTERSECT
-         |      SELECT * FROM ex)) AS hits,
-         |    (SELECT count(*) FROM ex) AS possible)
-         |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
-         |  CAST(possible AS BIGINT) AS possible,
-         |  CAST(hits AS BIGINT) AS hits,
-         |  hits / possible AS recall
-         |FROM hits, nn""".stripMargin
-    },
+         |${duckAudit("hits" -> "answer")}
+         |SELECT nn.n AS n_nodes,
+         |  possible, hits,
+         |  ${duckRecall("hits")}
+         |FROM hits, nn""".stripMargin,
   )
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    label lookup on the final frontier, not a scan.
   */
 object TextOps85 {
-  import TextOps83._
+  import GraphWalk._
 
   /** The candidate-side predicate: even label. */
   private val FilterSql = "label % 2 = 0"
@@ -39,50 +39,25 @@ object TextOps85 {
         .select(col("v").as("vec_id"))), Seq("vec_id"), "left_semi")
       // the two exact ground-truth panels are independent of the
       // graph build + walk — run all three legs concurrently (Par §2.6)
-      val (graph, exactAll, exactFiltered) = Par.all3(spark)(
-        undirected(descend(spark, e, n, Rounds).last)
-          .localCheckpoint(true),
-        { val ex = exactPanel(e).persist(); ex.count(); ex },
-        { val ex = topK(K)(e.filter(col("vec_id") < Probes)
-            .select(col("vec_id").as("u"), col("embedding").as("ue"))
-            .join(filteredCands.select(col("vec_id").as("v"),
-              col("embedding").as("ve")), col("u") =!= col("v"))
-            .select(col("u"), col("v"),
-              round(graft.functions.VectorOps.cosine(
-                col("ue"), col("ve")), 6).as("cos"))).persist()
-          ex.count(); ex })
-      val slots = e.select(col("vec_id").as("v"),
-        pmod(graft.functions.Md5Pack(
-          concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-      val entries = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"),
-          explode(expr("sequence(1, 8)")).as("j"))
-        .select(col("u"), pmod(graft.functions.Md5Pack(
-          concat_ws("_", lit("s39"), col("u"), col("j"))),
-          lit(n)).as("slot"))
-        .join(slots, "slot").select("u", "v").distinct()
-      // identical walk to s39 (same entries, same hops, same ef): the
-      // filter must not reroute the expansion
-      val frontier = (1 to Hops).foldLeft(
-        topK(Ef)(score(e)(entries)).localCheckpoint(true)) { (f, _) =>
-        val nb = f.as("f").join(graph.as("g"), col("f.v") === col("g.u"))
-          .select(col("f.u").as("u"), col("g.v").as("v"))
-          .unionAll(f).distinct()
-        topK(Ef)(score(e)(nb)).localCheckpoint(true)
-      }.persist()
+      val (g, exactAll, exactFiltered) = Par.all3(spark)(
+        graph(e, n), exactPanel(e, e), exactPanel(e, filteredCands))
+      // the GraphWalk walk from s39's entries: the filter must not
+      // reroute the expansion
+      val frontier = walk(g, randomEntries(e, n, "s39"))(byCosine(e))
+        .last.persist()
       val scored = score(e)(frontier).filter(col("u") =!= col("v"))
         .persist()
       val answerAll = topK(K)(scored)
       val answerFiltered = topK(K)(
         scored.join(broadcast(lab.filter(expr(FilterSql)).select("v")),
           "v"))
-      def audit(ans: DataFrame, exact: DataFrame, tag: String) =
-        ans.select("u", "v").intersect(exact)
-          .agg(count(lit(1)).as(s"hits_$tag"))
+      // each answer against its own panel: hits_<tag>, possible_<tag>
+      def panelAudit(ans: DataFrame, exact: DataFrame, tag: String) =
+        hits(ans, exact, s"hits_$tag")
           .crossJoin(broadcast(
             exact.agg(count(lit(1)).as(s"possible_$tag"))))
-      audit(answerFiltered, exactFiltered, "filtered")
-        .crossJoin(broadcast(audit(answerAll, exactAll, "all")))
+      panelAudit(answerFiltered, exactFiltered, "filtered")
+        .crossJoin(broadcast(panelAudit(answerAll, exactAll, "all")))
         .select(lit(n).as("n_nodes"),
           col("possible_filtered"), col("hits_filtered"),
           (col("hits_filtered") / col("possible_filtered"))
@@ -94,92 +69,32 @@ object TextOps85 {
 
   val oracleSql: Map[String, String] = Map(
     "s40_filtered_graph_search" -> {
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val entryDraw = Tables.duckMd5Pack(
-        "'s39_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
-      val hops = (1 to Hops).map { h =>
-        s"""n$h AS (
-           |  SELECT DISTINCT u, v FROM (
-           |    SELECT f.u AS u, g.v AS v
-           |    FROM f${h - 1} f JOIN gs g ON f.v = g.u
-           |    UNION ALL SELECT u, v FROM f${h - 1})),
-           |sn$h AS (
-           |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-           |  FROM n$h c JOIN e a ON a.vec_id = c.u
-           |  JOIN e b ON b.vec_id = c.v),
-           |f$h AS MATERIALIZED (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY cos DESC, v) AS rank FROM sn$h)
-           |  WHERE rank <= $Ef)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $duckInit,
-         |$rounds,
-         |gs AS MATERIALIZED (
-         |  SELECT u, v FROM b$Rounds
-         |  UNION SELECT v AS u, u AS v FROM b$Rounds),
+      s"""WITH $duckGraph,
          |lab AS (
          |  SELECT vec_id AS v, label FROM embeddings
          |  WHERE embedding IS NOT NULL),
-         |entries AS (
-         |  SELECT DISTINCT d.u, s.v FROM (
-         |    SELECT u, $entryDraw % nn.n AS slot FROM (
-         |      SELECT vec_id AS u, unnest(range(1, 9)) AS j FROM e
-         |      WHERE vec_id < $Probes), nn) d
-         |  JOIN slots s USING (slot)),
-         |sf0 AS (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM entries c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v),
-         |f0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM sf0)
-         |  WHERE rank <= $Ef),
-         |$hops,
-         |sfin AS MATERIALIZED (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM f$Hops c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v
-         |  WHERE c.u <> c.v),
-         |ans_all AS (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM sfin)
-         |  WHERE rank <= $K),
-         |ans_f AS (
-         |  SELECT u, v FROM (
-         |    SELECT s.u, s.v, row_number() OVER (PARTITION BY s.u
-         |      ORDER BY s.cos DESC, s.v) AS rank
-         |    FROM sfin s JOIN lab ON lab.v = s.v
-         |    WHERE $FilterSql)
-         |  WHERE rank <= $K),
+         |${duckRandomEntries("entries", "s39")},
+         |${duckWalk("", "entries")(duckCosine)},
+         |${duckAnswer("ans_all", s"f$Hops")(duckCosine)},
+         |sfin AS (
+         |  SELECT s.u, s.v, s.cos FROM ans_all_s s
+         |  JOIN lab ON lab.v = s.v WHERE $FilterSql),
+         |${duckTopK("ans_f", "sfin")},
          |$duckExact,
          |sef AS (
          |  SELECT p.vec_id AS u, c.vec_id AS v, ${cosSql("p", "c")} AS cos
          |  FROM e p JOIN e c ON p.vec_id < $Probes
          |    AND p.vec_id <> c.vec_id
          |  JOIN lab ON lab.v = c.vec_id WHERE $FilterSql),
-         |exf AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM sef)
-         |  WHERE rank <= $K)
-         |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
-         |  CAST((SELECT count(*) FROM exf) AS BIGINT)
-         |    AS possible_filtered,
-         |  CAST((SELECT count(*) FROM (
-         |    SELECT * FROM ans_f INTERSECT SELECT * FROM exf))
-         |    AS BIGINT) AS hits_filtered,
-         |  (SELECT count(*) FROM (
-         |    SELECT * FROM ans_f INTERSECT SELECT * FROM exf))
+         |${duckTopK("exf", "sef")}
+         |SELECT nn.n AS n_nodes,
+         |  (SELECT count(*) FROM exf) AS possible_filtered,
+         |  ${duckHits("ans_f", "exf")} AS hits_filtered,
+         |  ${duckHits("ans_f", "exf")}
          |    / (SELECT count(*) FROM exf) AS recall_filtered,
-         |  CAST((SELECT count(*) FROM ex) AS BIGINT) AS possible_all,
-         |  CAST((SELECT count(*) FROM (
-         |    SELECT * FROM ans_all INTERSECT SELECT * FROM ex))
-         |    AS BIGINT) AS hits_all,
-         |  (SELECT count(*) FROM (
-         |    SELECT * FROM ans_all INTERSECT SELECT * FROM ex))
+         |  (SELECT count(*) FROM ex) AS possible_all,
+         |  ${duckHits("ans_all", "ex")} AS hits_all,
+         |  ${duckHits("ans_all", "ex")}
          |    / (SELECT count(*) FROM ex) AS recall_all
          |FROM nn""".stripMargin
     },

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *    sparse UPPER LAYER (vec_id % 16 == 0, ~6% of nodes) routes each
   *    probe to its best entry points by TRUE cosine (the IVF
   *    coarse-quantizer scan — linear in the layer size per probe,
-  *    never quadratic in n), and the BASE layer runs the s39 greedy
-  *    walk on the converged NN-Descent graph from those
+  *    never quadratic in n), and the BASE layer runs the GraphWalk
+  *    greedy walk on the converged NN-Descent graph from those
   *    query-adaptive entries instead of s39's md5-random ones. Same
   *    graph, same ef, same hop budget — the recall delta is purely
   *    the routing layer, reported side by side with the random-entry
@@ -25,161 +25,51 @@ import org.apache.spark.sql.functions._
   *    recursion bottoms out here because the testdata layer is small.
   */
 object TextOps87 {
-  import TextOps83._
+  import GraphWalk._
 
   private val UpperMod = 16
-  private val EntryK = 8
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s41_hierarchical_graph_search" -> ((spark, dir) => {
       val e = emb(spark, dir)
       val n = e.count()
       // graph build ∥ exact panel: independent legs (Par §2.6)
-      val (graph, exact) = Par.both(spark)(
-        undirected(descend(spark, e, n, Rounds).last)
-          .localCheckpoint(true),
-        { val ex = exactPanel(e).persist(); ex.count(); ex })
+      val (g, exact) = Par.both(spark)(graph(e, n), exactPanel(e, e))
       val upper = e.filter(col("vec_id") % UpperMod === 0)
       val nUpper = upper.count()
-      // coarse routing: per probe, the EntryK upper-layer nodes by true
-      // cosine (probe side broadcast; one linear scan of the layer)
-      val probeIds = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"))
-      val routed = upper.select(col("vec_id").as("v"))
-        .crossJoin(broadcast(probeIds))
-        .filter(col("u") =!= col("v"))
-      val entries = topK(EntryK)(score(e)(routed))
-      // the s39 walk, verbatim, from the routed entries
-      def walk(start: DataFrame): DataFrame =
-        (1 to Hops).foldLeft(
-          topK(Ef)(score(e)(start)).localCheckpoint(true)) { (f, _) =>
-          val nb = f.as("f").join(graph.as("g"), col("f.v") === col("g.u"))
-            .select(col("f.u").as("u"), col("g.v").as("v"))
-            .unionAll(f).distinct()
-          topK(Ef)(score(e)(nb)).localCheckpoint(true)
-        }
-      // the s39 baseline from the SAME graph: md5-random entries
-      val slots = e.select(col("vec_id").as("v"),
-        pmod(graft.functions.Md5Pack(
-          concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-      val randomEntries = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"),
-          explode(expr("sequence(1, 8)")).as("j"))
-        .select(col("u"), pmod(graft.functions.Md5Pack(
-          concat_ws("_", lit("s39"), col("u"), col("j"))),
-          lit(n)).as("slot"))
-        .join(slots, "slot").select("u", "v").distinct()
-      // the routed walk and the random-entry baseline walk are
-      // independent given the shared graph — run them concurrently
-      val (fRouted, fRandom) =
-        Par.both(spark)(walk(entries), walk(randomEntries))
-      val answer = topK(K)(
-        score(e)(fRouted).filter(col("u") =!= col("v")))
-      val answerRandom = topK(K)(
-        score(e)(fRandom).filter(col("u") =!= col("v")))
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      val hits = answer.intersect(exact)
-        .agg(count(lit(1)).as("hits_routed"))
-      val hitsR = answerRandom.intersect(exact)
-        .agg(count(lit(1)).as("hits_random"))
-      hits.crossJoin(broadcast(hitsR)).crossJoin(broadcast(possible))
+      // the routed walk and the s39 random-entry baseline walk (the SAME
+      // walk from md5-random entries) are independent given the shared
+      // graph — run them concurrently
+      val (fRouted, fRandom) = Par.both(spark)(
+        walk(g, routedEntries(e, upper.select(col("vec_id").as("v"))))(
+          byCosine(e)).last,
+        walk(g, randomEntries(e, n, "s39"))(byCosine(e)).last)
+      audit(exact)(
+        hits(answer(e, fRouted), exact, "hits_routed"),
+        hits(answer(e, fRandom), exact, "hits_random"))
         .select(lit(n).as("n_nodes"), lit(nUpper).as("n_upper"),
-          col("possible"), col("hits_routed"),
-          (col("hits_routed") / col("possible")).as("recall_routed"),
-          col("hits_random"),
-          (col("hits_random") / col("possible")).as("recall_random"))
+          col("possible"), col("hits_routed"), recall("hits_routed"),
+          col("hits_random"), recall("hits_random"))
     }),
   )
 
   val oracleSql: Map[String, String] = Map(
-    "s41_hierarchical_graph_search" -> {
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val entryDraw = Tables.duckMd5Pack(
-        "'s39_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
-      def hops(prefix: String) = (1 to Hops).map { h =>
-        s"""${prefix}n$h AS (
-           |  SELECT DISTINCT u, v FROM (
-           |    SELECT f.u AS u, g.v AS v
-           |    FROM ${prefix}f${h - 1} f JOIN gs g ON f.v = g.u
-           |    UNION ALL SELECT u, v FROM ${prefix}f${h - 1})),
-           |${prefix}sn$h AS (
-           |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-           |  FROM ${prefix}n$h c JOIN e a ON a.vec_id = c.u
-           |  JOIN e b ON b.vec_id = c.v),
-           |${prefix}f$h AS MATERIALIZED (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY cos DESC, v) AS rank FROM ${prefix}sn$h)
-           |  WHERE rank <= $Ef)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $duckInit,
-         |$rounds,
-         |gs AS MATERIALIZED (
-         |  SELECT u, v FROM b$Rounds
-         |  UNION SELECT v AS u, u AS v FROM b$Rounds),
-         |probes AS (SELECT vec_id AS u FROM e WHERE vec_id < $Probes),
+    "s41_hierarchical_graph_search" ->
+      s"""WITH $duckGraph,
          |up AS (SELECT vec_id AS v FROM e WHERE vec_id % $UpperMod = 0),
-         |routeds AS (
-         |  SELECT p.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM probes p CROSS JOIN up c
-         |  JOIN e a ON a.vec_id = p.u JOIN e b ON b.vec_id = c.v
-         |  WHERE p.u <> c.v),
-         |ent AS (
-         |  SELECT u, v, cos FROM (
-         |    SELECT u, v, cos, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM routeds)
-         |  WHERE rank <= $EntryK),
-         |hf0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM ent)
-         |  WHERE rank <= $Ef),
-         |${hops("h")},
-         |hans AS (
-         |  SELECT u, v FROM (
-         |    SELECT c.u, c.v, row_number() OVER (PARTITION BY c.u
-         |      ORDER BY ${cosSql("a", "b")} DESC, c.v) AS rank
-         |    FROM hf$Hops c JOIN e a ON a.vec_id = c.u
-         |    JOIN e b ON b.vec_id = c.v WHERE c.u <> c.v)
-         |  WHERE rank <= $K),
-         |rent AS (
-         |  SELECT DISTINCT d.u, s.v
-         |  FROM (SELECT u, $entryDraw % nn.n AS slot FROM (
-         |          SELECT vec_id AS u, unnest(range(1, 9)) AS j
-         |          FROM e WHERE vec_id < $Probes), nn) d
-         |  JOIN slots s USING (slot)),
-         |rsent AS (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM rent c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v),
-         |rf0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM rsent)
-         |  WHERE rank <= $Ef),
-         |${hops("r")},
-         |rans AS (
-         |  SELECT u, v FROM (
-         |    SELECT c.u, c.v, row_number() OVER (PARTITION BY c.u
-         |      ORDER BY ${cosSql("a", "b")} DESC, c.v) AS rank
-         |    FROM rf$Hops c JOIN e a ON a.vec_id = c.u
-         |    JOIN e b ON b.vec_id = c.v WHERE c.u <> c.v)
-         |  WHERE rank <= $K),
-         |$duckExact
-         |SELECT
-         |  (SELECT n FROM nn) AS n_nodes,
+         |$duckRoutedEntries,
+         |${duckWalk("h", "routed")(duckCosine)},
+         |${duckAnswer("hans", s"hf$Hops")(duckCosine)},
+         |${duckRandomEntries("rent", "s39")},
+         |${duckWalk("r", "rent")(duckCosine)},
+         |${duckAnswer("rans", s"rf$Hops")(duckCosine)},
+         |$duckExact,
+         |${duckAudit("hits_routed" -> "hans", "hits_random" -> "rans")}
+         |SELECT nn.n AS n_nodes,
          |  (SELECT count(*) FROM up) AS n_upper,
-         |  (SELECT count(*) FROM ex) AS possible,
-         |  (SELECT count(*) FROM (SELECT u, v FROM hans
-         |     INTERSECT SELECT u, v FROM ex)) AS hits_routed,
-         |  CAST((SELECT count(*) FROM (SELECT u, v FROM hans
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |    / (SELECT count(*) FROM ex) AS recall_routed,
-         |  (SELECT count(*) FROM (SELECT u, v FROM rans
-         |     INTERSECT SELECT u, v FROM ex)) AS hits_random,
-         |  CAST((SELECT count(*) FROM (SELECT u, v FROM rans
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |    / (SELECT count(*) FROM ex) AS recall_random""".stripMargin
-    },
+         |  possible,
+         |  hits_routed, ${duckRecall("hits_routed")},
+         |  hits_random, ${duckRecall("hits_random")}
+         |FROM hits, nn""".stripMargin,
   )
 }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    re-rank bit-for-bit.
   */
 object TextOps88 {
-  import TextOps83._
+  import GraphWalk._
   import Tables.t
 
   private val M = 32 // PQ subspaces over the 64-dim embeddings
@@ -47,9 +47,8 @@ object TextOps88 {
             .as("emb"))
       // graph build ∥ PQ codebook+reconstruction ∥ exact panel:
       // three independent legs (Par §2.6)
-      val (graph, recon, exact) = Par.all3(spark)(
-        undirected(descend(spark, e, n, Rounds).last)
-          .localCheckpoint(true),
+      val (g, recon, exact) = Par.all3(spark)(
+        graph(e, n),
         {
           val cbIds = t(spark, dir, "embeddings")
             .filter(col("embedding").isNotNull)
@@ -66,7 +65,7 @@ object TextOps88 {
             .select(col("vec_id").as("v"), col("recon"))
             .localCheckpoint(true)
         },
-        { val ex = exactPanel(e).persist(); ex.count(); ex })
+        exactPanel(e, e))
       val probeEmb = vecs.select(col("vec_id").as("u"),
         col("emb").as("ue"))
       // asymmetric distance: full-precision probe vs 16-byte candidate
@@ -80,77 +79,37 @@ object TextOps88 {
         scored.withColumn("rank", row_number().over(w))
           .filter(col("rank") <= k).select("u", "v")
       }
-      // s39's md5-random entries, s39's hop budget — only the metric
-      // under the walk changes
-      val slots = e.select(col("vec_id").as("v"),
-        pmod(graft.functions.Md5Pack(
-          concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-      val entries = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"),
-          explode(expr("sequence(1, 8)")).as("j"))
-        .select(col("u"), pmod(graft.functions.Md5Pack(
-          concat_ws("_", lit("s39"), col("u"), col("j"))),
-          lit(n)).as("slot"))
-        .join(slots, "slot").select("u", "v").distinct()
-      val frontier = (1 to Hops).foldLeft(
-        topAsc(Ef)(scorePq(entries)).localCheckpoint(true)) { (f, _) =>
-        val nb = f.as("f").join(graph.as("g"), col("f.v") === col("g.u"))
-          .select(col("f.u").as("u"), col("g.v").as("v"))
-          .unionAll(f).distinct()
-        topAsc(Ef)(scorePq(nb)).localCheckpoint(true)
-      }.persist()
-      // the exact re-rank touches true embeddings probes × ef times
-      val answerRerank = topK(K)(
-        score(e)(frontier).filter(col("u") =!= col("v")))
+      // the GraphWalk walk from s39's md5-random entries — only the
+      // metric under the walk changes
+      val frontier = walk(g, randomEntries(e, n, "s39"))(
+        pairs => topAsc(Ef)(scorePq(pairs))).last.persist()
       val answerRaw = topAsc(K)(
         scorePq(frontier).filter(col("u") =!= col("v")))
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      val hits = answerRerank.intersect(exact)
-        .agg(count(lit(1)).as("hits_rerank"))
-      val hitsRaw = answerRaw.intersect(exact)
-        .agg(count(lit(1)).as("hits_raw"))
-      hits.crossJoin(broadcast(hitsRaw)).crossJoin(broadcast(possible))
+      audit(exact)(
+        // the exact re-rank touches true embeddings probes × ef times
+        hits(answer(e, frontier), exact, "hits_rerank"),
+        hits(answerRaw, exact, "hits_raw"))
         .select(lit(n).as("n_nodes"), col("possible"),
-          col("hits_rerank"),
-          (col("hits_rerank") / col("possible")).as("recall_rerank"),
-          col("hits_raw"),
-          (col("hits_raw") / col("possible")).as("recall_raw"))
+          col("hits_rerank"), recall("hits_rerank"),
+          col("hits_raw"), recall("hits_raw"))
     }),
   )
 
   val oracleSql: Map[String, String] = Map(
     "s42_pq_graph_walk" -> {
       val Sub = 64 / M
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val entryDraw = Tables.duckMd5Pack(
-        "'s39_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
       val l2 = (a: String, b: String) =>
         s"list_dot_product($a, $a) - 2 * list_dot_product($a, $b) + list_dot_product($b, $b)"
+      // asymmetric distance: full-precision probe vs reconstruction
+      val byPq = DuckRank(
+        src => s"""SELECT c.u, c.v,
+                  |    round(${l2("a.emb", "r.recon")}, 6) AS d
+                  |  FROM $src c JOIN pv a ON a.vec_id = c.u
+                  |  JOIN recon r ON r.vec_id = c.v""".stripMargin,
+        "d ASC")
       val encScore =
         "list_dot_product(cs, cs) - 2 * list_dot_product(vs, cs)"
-      // hop h: expand on the shared graph, rescore by ADC, keep ef
-      val hops = (1 to Hops).map { h =>
-        s"""pn$h AS (
-           |  SELECT DISTINCT u, v FROM (
-           |    SELECT f.u AS u, g.v AS v
-           |    FROM pf${h - 1} f JOIN gs g ON f.v = g.u
-           |    UNION ALL SELECT u, v FROM pf${h - 1})),
-           |ps$h AS (
-           |  SELECT c.u, c.v,
-           |    round(${l2("a.emb", "r.recon")}, 6) AS d
-           |  FROM pn$h c JOIN pv a ON a.vec_id = c.u
-           |  JOIN recon r ON r.vec_id = c.v),
-           |pf$h AS MATERIALIZED (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY d ASC, v) AS rank FROM ps$h)
-           |  WHERE rank <= $Ef)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $duckInit,
-         |$rounds,
-         |gs AS MATERIALIZED (
-         |  SELECT u, v FROM b$Rounds
-         |  UNION SELECT v AS u, u AS v FROM b$Rounds),
+      s"""WITH $duckGraph,
          |pv AS MATERIALIZED (
          |  SELECT vec_id, list_transform(e0,
          |    x -> x / sqrt(list_dot_product(e0, e0))) AS emb
@@ -183,52 +142,17 @@ object TextOps88 {
          |      CAST(e.m*$Sub+$Sub AS INTEGER)) ORDER BY e.m)) AS recon
          |  FROM enc e JOIN cb c ON c.k = e.k
          |  GROUP BY e.vec_id),
-         |entries AS (
-         |  SELECT DISTINCT d.u, s.v FROM (
-         |    SELECT u, $entryDraw % nn.n AS slot FROM (
-         |      SELECT vec_id AS u, unnest(range(1, 9)) AS j FROM e
-         |      WHERE vec_id < $Probes), nn) d
-         |  JOIN slots s USING (slot)),
-         |ps0 AS (
-         |  SELECT c.u, c.v,
-         |    round(${l2("a.emb", "r.recon")}, 6) AS d
-         |  FROM entries c JOIN pv a ON a.vec_id = c.u
-         |  JOIN recon r ON r.vec_id = c.v),
-         |pf0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY d ASC, v) AS rank FROM ps0)
-         |  WHERE rank <= $Ef),
-         |$hops,
-         |rr AS (
-         |  SELECT u, v FROM (
-         |    SELECT c.u, c.v, row_number() OVER (PARTITION BY c.u
-         |      ORDER BY ${cosSql("a", "b")} DESC, c.v) AS rank
-         |    FROM pf$Hops c JOIN e a ON a.vec_id = c.u
-         |    JOIN e b ON b.vec_id = c.v WHERE c.u <> c.v)
-         |  WHERE rank <= $K),
-         |raw AS (
-         |  SELECT u, v FROM (
-         |    SELECT c.u, c.v, row_number() OVER (PARTITION BY c.u
-         |      ORDER BY round(${l2("a.emb", "r.recon")}, 6) ASC, c.v)
-         |      AS rank
-         |    FROM pf$Hops c JOIN pv a ON a.vec_id = c.u
-         |    JOIN recon r ON r.vec_id = c.v WHERE c.u <> c.v)
-         |  WHERE rank <= $K),
-         |$duckExact
-         |SELECT
-         |  (SELECT n FROM nn) AS n_nodes,
-         |  (SELECT count(*) FROM ex) AS possible,
-         |  (SELECT count(*) FROM (SELECT u, v FROM rr
-         |     INTERSECT SELECT u, v FROM ex)) AS hits_rerank,
-         |  CAST((SELECT count(*) FROM (SELECT u, v FROM rr
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |    / (SELECT count(*) FROM ex) AS recall_rerank,
-         |  (SELECT count(*) FROM (SELECT u, v FROM raw
-         |     INTERSECT SELECT u, v FROM ex)) AS hits_raw,
-         |  CAST((SELECT count(*) FROM (SELECT u, v FROM raw
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |    / (SELECT count(*) FROM ex) AS recall_raw""".stripMargin
+         |${duckRandomEntries("entries", "s39")},
+         |${duckWalk("p", "entries")(byPq)},
+         |${duckAnswer("rr", s"pf$Hops")(duckCosine)},
+         |${duckAnswer("raw", s"pf$Hops")(byPq)},
+         |$duckExact,
+         |${duckAudit("hits_rerank" -> "rr", "hits_raw" -> "raw")}
+         |SELECT nn.n AS n_nodes,
+         |  possible,
+         |  hits_rerank, ${duckRecall("hits_rerank")},
+         |  hits_raw, ${duckRecall("hits_raw")}
+         |FROM hits, nn""".stripMargin
     },
   )
 }

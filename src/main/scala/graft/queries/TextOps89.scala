@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * parameterized:
   *
   *  - s43: WALK-DEPTH RECALL CURVE — s39/s41/s42 run the greedy graph
-  *    walk at one fixed (hops, ef); this exposes both as explicit
-  *    parameters and emits the recall-vs-hops curve IN ONE PASS (the
+  *    walk at one fixed (hops, ef); this reports both with the result
+  *    and emits the recall-vs-hops curve IN ONE PASS (the
   *    s18 rerank-tradeoff device): every hop's frontier is already
   *    computed sequentially by the walk, so auditing each against the
   *    exact panel costs only probe-panel-bounded intersects — no
@@ -25,137 +25,48 @@ import org.apache.spark.sql.functions._
   *    checkpointed frontiers.
   */
 object TextOps89 {
-  import TextOps83.{emb, score, topK, undirected, descend, exactPanel,
-    K, KBuild, Rounds, Ef, Hops, Probes, duckInit, duckRound, duckExact,
-    cosSql}
+  import GraphWalk._
+
+  /** The curve's hit columns, one per frontier f0 .. f_Hops. */
+  private val hopHits = (0 to Hops).map(h => s"hits_h$h")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s43_walk_depth_curve" -> ((spark, dir) => {
-      val hops = Hops // exposed: the depth axis of the emitted curve
-      val ef = Ef     // exposed: frontier width per probe
       val e = emb(spark, dir)
       val n = e.count()
       // graph build ∥ exact panel: independent legs (Par §2.6)
-      val (graph, exact) = Par.both(spark)(
-        undirected(descend(spark, e, n, Rounds).last)
-          .localCheckpoint(true),
-        { val ex = exactPanel(e).persist(); ex.count(); ex })
-      val slots = e.select(col("vec_id").as("v"),
-        pmod(graft.functions.Md5Pack(
-          concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-      val entries = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"),
-          explode(expr("sequence(1, 8)")).as("j"))
-        .select(col("u"), pmod(graft.functions.Md5Pack(
-          concat_ws("_", lit("s43"), col("u"), col("j"))),
-          lit(n)).as("slot"))
-        .join(slots, "slot").select("u", "v").distinct()
-      // the s39 walk, with EVERY hop's frontier retained for the curve
-      val f0 = topK(ef)(score(e)(entries)).localCheckpoint(true)
-      val frontiers = (1 to hops).scanLeft(f0) { (f, _) =>
-        val nb = f.as("f").join(graph.as("g"), col("f.v") === col("g.u"))
-          .select(col("f.u").as("u"), col("g.v").as("v"))
-          .unionAll(f).distinct()
-        topK(ef)(score(e)(nb)).localCheckpoint(true)
-      }
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      def hitsOf(f: DataFrame, nm: String): DataFrame =
-        topK(K)(score(e)(f).filter(col("u") =!= col("v")))
-          .intersect(exact).agg(count(lit(1)).as(nm))
-      val names = (0 to hops).map(h => s"hits_h$h")
-      val joined = frontiers.zip(names)
-        .map { case (f, nm) => hitsOf(f, nm) }
-        .reduce((a, b) => a.crossJoin(broadcast(b)))
-        .crossJoin(broadcast(possible))
-      val recalls = names.map(nm =>
-        (col(nm) / col("possible")).as(nm.replace("hits", "recall")))
-      val monotone = names.sliding(2).map(w => col(w(1)) >= col(w(0)))
-        .reduce(_ && _)
+      val (g, exact) = Par.both(spark)(graph(e, n), exactPanel(e, e))
+      // the GraphWalk walk, with EVERY hop's frontier kept for the curve
+      val frontiers = walk(g, randomEntries(e, n, "s43"))(byCosine(e))
+      val joined = audit(exact)(frontiers.zip(hopHits).map {
+        case (f, nm) => hits(answer(e, f), exact, nm)
+      }: _*)
       val outCols: Seq[Column] =
-        (Seq(lit(n).as("n_nodes"), lit(hops.toLong).as("hops"),
-          lit(ef.toLong).as("ef"), col("possible")) ++
-          names.map(col) ++ recalls) :+ monotone.as("monotone_recall")
+        (Seq(lit(n).as("n_nodes"), lit(Hops.toLong).as("hops"),
+          lit(Ef.toLong).as("ef"), col("possible")) ++
+          hopHits.map(col) ++ hopHits.map(recall)) :+
+          monotone(hopHits).as("monotone_recall")
       joined.select(outCols: _*)
     }),
   )
 
   val oracleSql: Map[String, String] = Map(
     "s43_walk_depth_curve" -> {
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val entryDraw = Tables.duckMd5Pack(
-        "'s43_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
-      val hopCtes = (1 to Hops).map { h =>
-        s"""n$h AS (
-           |  SELECT DISTINCT u, v FROM (
-           |    SELECT f.u AS u, g.v AS v
-           |    FROM f${h - 1} f JOIN gs g ON f.v = g.u
-           |    UNION ALL SELECT u, v FROM f${h - 1})),
-           |sn$h AS (
-           |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-           |  FROM n$h c JOIN e a ON a.vec_id = c.u
-           |  JOIN e b ON b.vec_id = c.v),
-           |f$h AS MATERIALIZED (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY cos DESC, v) AS rank FROM sn$h)
-           |  WHERE rank <= $Ef)""".stripMargin
-      }.mkString(",\n")
       // per-hop answer: rescore the frontier, top-K excluding self
-      val ansCtes = (0 to Hops).map { h =>
-        s"""a$h AS (
-           |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-           |  FROM f$h c JOIN e a ON a.vec_id = c.u
-           |  JOIN e b ON b.vec_id = c.v WHERE c.u <> c.v),
-           |t$h AS (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY cos DESC, v) AS rank FROM a$h)
-           |  WHERE rank <= $K)""".stripMargin
-      }.mkString(",\n")
-      val names = (0 to Hops).map(h => s"hits_h$h")
-      val hitSel = (0 to Hops).map { h =>
-        s"""    (SELECT count(*) FROM (
-           |      SELECT * FROM t$h INTERSECT SELECT * FROM ex))
-           |      AS hits_h$h""".stripMargin
-      }.mkString(",\n")
-      val recallSel = names.map(nm =>
-        s"  $nm / possible AS ${nm.replace("hits", "recall")}")
-        .mkString(",\n")
-      val monotone = names.sliding(2).map(w => s"${w(1)} >= ${w(0)}")
-        .mkString(" AND ")
-      s"""WITH $duckInit,
-         |$rounds,
-         |gs AS MATERIALIZED (
-         |  SELECT u, v FROM b$Rounds
-         |  UNION SELECT v AS u, u AS v FROM b$Rounds),
-         |entries AS (
-         |  SELECT DISTINCT d.u, s.v FROM (
-         |    SELECT u, $entryDraw % nn.n AS slot FROM (
-         |      SELECT vec_id AS u, unnest(range(1, 9)) AS j FROM e
-         |      WHERE vec_id < $Probes), nn) d
-         |  JOIN slots s USING (slot)),
-         |sf0 AS (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM entries c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v),
-         |f0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM sf0)
-         |  WHERE rank <= $Ef),
-         |$hopCtes,
+      val answers = (0 to Hops)
+        .map(h => duckAnswer(s"t$h", s"f$h")(duckCosine)).mkString(",\n")
+      s"""WITH $duckGraph,
+         |${duckRandomEntries("entries", "s43")},
+         |${duckWalk("", "entries")(duckCosine)},
          |$duckExact,
-         |$ansCtes,
-         |hits AS (
-         |  SELECT
-         |$hitSel,
-         |    (SELECT count(*) FROM ex) AS possible)
-         |SELECT CAST(nn.n AS BIGINT) AS n_nodes,
+         |$answers,
+         |${duckAudit(hopHits.zipWithIndex.map { case (nm, h) => nm -> s"t$h" }: _*)}
+         |SELECT nn.n AS n_nodes,
          |  CAST($Hops AS BIGINT) AS hops, CAST($Ef AS BIGINT) AS ef,
-         |  CAST(possible AS BIGINT) AS possible,
-         |${names.map(nm => s"  CAST($nm AS BIGINT) AS $nm").mkString(",\n")},
-         |$recallSel,
-         |  $monotone AS monotone_recall
+         |  possible,
+         |  ${hopHits.mkString(", ")},
+         |${hopHits.map(nm => s"  ${duckRecall(nm)}").mkString(",\n")},
+         |  ${duckMonotone(hopHits)} AS monotone_recall
          |FROM hits, nn""".stripMargin
     },
   )

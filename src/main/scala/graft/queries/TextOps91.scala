@@ -29,54 +29,45 @@ import graft.functions.VectorOps
   * owned lists; everything downstream is the s44 wedge algebra.
   */
 object TextOps91 {
-  import Tables.t
-  import TextOps83.{emb, score, topK, undirected, descend, exactPanel,
-    cosSql, duckInit, duckRound, duckExact, Rounds, Ef, Hops, K, Probes}
+  import GraphWalk._
 
-  private val EntryK = 8
+  /** The medoid of each centroid in `cent`: the node of `nodes` it owns
+    * that lies closest to the centroid mean (ties break on vec_id) —
+    * centroids are means, not corpus nodes, and the graph needs node
+    * entries. Returns (centroid_id, v). */
+  private def medoids(nodes: DataFrame,
+      cent: Array[(Any, Array[Double])]): DataFrame = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val centDf = cent.map { case (id, em) =>
+      (id.asInstanceOf[Long], em.toSeq) }.toSeq
+      .toDF("centroid_id", "c_emb")
+    val owned = graft.operators.AnnIvf.assign(
+      nodes, cent, "vec_id", "embedding", nearest = 1)
+    val wMed = Window.partitionBy("centroid_id")
+      .orderBy(col("cm").desc, col("vec_id").asc)
+    owned
+      .join(nodes, "vec_id")
+      .join(broadcast(centDf), "centroid_id")
+      .select(col("centroid_id"), col("vec_id"),
+        round(VectorOps.cosine(col("embedding"), col("c_emb")), 6)
+          .as("cm"))
+      .withColumn("rk", row_number().over(wMed))
+      .filter(col("rk") === 1)
+      .select(col("centroid_id"), col("vec_id").as("v"))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s45_centroid_routed_insert" -> ((spark, dir) => {
-      import spark.implicits._
-      val e = t(spark, dir, "embeddings")
-        .filter(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
+      val e = emb(spark, dir)
       val base = e.filter(col("vec_id") % 10 =!= 0)
       val fresh = e.filter(col("vec_id") % 10 === 0)
       val nBase = base.count()
       val nAll = e.count()
-      def score(pairs: DataFrame): DataFrame = pairs
-        .join(e.select(col("vec_id").as("u"), col("embedding").as("ue")),
-          "u")
-        .join(e.select(col("vec_id").as("v"), col("embedding").as("ve")),
-          "v")
-        .select(col("u"), col("v"),
-          round(VectorOps.cosine(col("ue"), col("ve")), 6).as("cos"))
-      def topK(scored: DataFrame, k: Int): DataFrame = {
-        val w = Window.partitionBy("u").orderBy(col("cos").desc,
-          col("v").asc)
-        scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k).select("u", "v")
-      }
+      // one degree-5 NN-Descent round over `nodes` (the s44 build)
       def nnd(nodes: DataFrame, n: Long): DataFrame = {
-        val slots = nodes.select(col("vec_id").as("v"),
-          pmod(graft.functions.Md5Pack(
-            concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-        val draws = nodes.select(col("vec_id").as("u"),
-            explode(expr("sequence(1, 8)")).as("j"))
-          .select(col("u"), pmod(graft.functions.Md5Pack(
-            concat_ws("_", lit("nnd"), col("u"), col("j"))),
-            lit(n)).as("slot"))
-        val init = draws.join(slots, "slot")
-          .filter(col("u") =!= col("v")).select("u", "v").distinct()
-        val b0 = topK(score(init), 5)
-        val g = b0.unionAll(b0.select(col("v").as("u"), col("u").as("v")))
-          .distinct()
-        val cand = g.as("g1").join(g.as("g2"),
-            col("g1.v") === col("g2.u"))
-          .select(col("g1.u").as("u"), col("g2.v").as("v"))
-          .filter(col("u") =!= col("v")).unionAll(b0).distinct()
-        topK(score(cand), 5)
+        val b0 = topK(5)(score(e)(nndInit(nodes, n)))
+        topK(5)(score(e)(wedges(b0)))
       }
       // four independent eager legs — the base graph build, the
       // centroid construction (collect-backed), the full-rebuild
@@ -89,35 +80,12 @@ object TextOps91 {
         graft.operators.AnnIvf.buildCentroids(
           base, "vec_id", "embedding", nCentroids = 16, lloydIters = 1),
         nnd(e, nAll).filter(col("u") % 10 === 0).localCheckpoint(true),
-        topK(fresh
-          .select(col("vec_id").as("u"), col("embedding").as("ue"))
-          .join(e.select(col("vec_id").as("v"),
-            col("embedding").as("ve")), col("u") =!= col("v"))
-          .select(col("u"), col("v"),
-            round(VectorOps.cosine(col("ue"), col("ve")), 6).as("cos")),
-          5).localCheckpoint(true))
-      val centDf = cent.map { case (id, emb) =>
-        (id.asInstanceOf[Long], emb.toSeq) }.toSeq
-        .toDF("centroid_id", "c_emb")
-      // medoid entry node per centroid: the owned base vector closest
-      // to the centroid mean (ties break on vec_id)
-      val owned = graft.operators.AnnIvf.assign(
-        base, cent, "vec_id", "embedding", nearest = 1)
-      val wMed = Window.partitionBy("centroid_id")
-        .orderBy(col("cm").desc, col("vec_id").asc)
-      val medoids = owned
-        .join(base.select(col("vec_id"), col("embedding")), "vec_id")
-        .join(broadcast(centDf), "centroid_id")
-        .select(col("centroid_id"), col("vec_id"),
-          round(VectorOps.cosine(col("embedding"), col("c_emb")), 6)
-            .as("cm"))
-        .withColumn("rk", row_number().over(wMed))
-        .filter(col("rk") === 1)
-        .select(col("centroid_id"), col("vec_id").as("v"))
+        exactTopK(fresh, e).localCheckpoint(true))
       // route each new vector to its top-3 centroids' medoids
       val routed = graft.operators.AnnIvf.assign(
         fresh, cent, "vec_id", "embedding", nearest = 3)
-      val seeds = routed.join(broadcast(medoids), "centroid_id")
+      val seeds = routed.join(broadcast(medoids(base, cent)),
+          "centroid_id")
         .select(col("vec_id").as("u"), col("v"))
         .filter(col("u") =!= col("v")).distinct()
       // from here on: exactly the s44 insert path
@@ -125,7 +93,7 @@ object TextOps91 {
         seeds.join(bBase.select(col("u").as("v"), col("v").as("w")), "v")
           .select(col("u"), col("w").as("v")))
         .filter(col("u") =!= col("v")).distinct()
-      val newEdges = topK(score(seedCands), 5).localCheckpoint(true)
+      val newEdges = topK(5)(score(e)(seedCands)).localCheckpoint(true)
       val g2 = bBase.unionAll(newEdges)
         .unionAll(newEdges.select(col("v").as("u"), col("u").as("v")))
         .distinct()
@@ -135,16 +103,11 @@ object TextOps91 {
         .select(col("u"), col("y").as("v"))
         .filter(col("u") =!= col("v"))
         .unionAll(newEdges).distinct()
-      val incFresh = topK(score(refineCand), 5).localCheckpoint(true)
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      val hSeed = newEdges.intersect(exact)
-        .agg(count(lit(1)).as("hits_seed"))
-      val hInc = incFresh.intersect(exact)
-        .agg(count(lit(1)).as("hits_inc"))
-      val hFull = bFull.intersect(exact)
-        .agg(count(lit(1)).as("hits_full"))
-      hSeed.crossJoin(broadcast(hInc)).crossJoin(broadcast(hFull))
-        .crossJoin(broadcast(possible))
+      val incFresh = topK(5)(score(e)(refineCand)).localCheckpoint(true)
+      audit(exact)(
+        hits(newEdges, exact, "hits_seed"),
+        hits(incFresh, exact, "hits_inc"),
+        hits(bFull, exact, "hits_full"))
         .select(lit(nBase).as("n_base"), lit(nAll - nBase).as("n_new"),
           lit(16L).as("n_centers"),
           col("possible"), col("hits_seed"), col("hits_inc"),
@@ -164,82 +127,87 @@ object TextOps91 {
     // s41, and the audit pins centroid-routed recall within 0.15 of
     // the same walk from md5-random entries.
     "s46_centroid_routed_search" -> ((spark, dir) => {
-      import spark.implicits._
       val e = emb(spark, dir)
       val n = e.count()
       // graph build ∥ centroid construction ∥ exact panel: three
       // independent eager legs (Par §2.6)
-      val (graph, cent, exact) = Par.all3(spark)(
-        undirected(descend(spark, e, n, Rounds).last)
-          .localCheckpoint(true),
+      val (g, cent, exact) = Par.all3(spark)(
+        graph(e, n),
         // constant-size routing layer: 16 IVF centroids -> medoid nodes
         graft.operators.AnnIvf.buildCentroids(
           e, "vec_id", "embedding", nCentroids = 16, lloydIters = 1),
-        { val ex = exactPanel(e).persist(); ex.count(); ex })
-      val centDf = cent.map { case (id, em) =>
-        (id.asInstanceOf[Long], em.toSeq) }.toSeq
-        .toDF("centroid_id", "c_emb")
-      val owned = graft.operators.AnnIvf.assign(
-        e, cent, "vec_id", "embedding", nearest = 1)
-      val wMed = Window.partitionBy("centroid_id")
-        .orderBy(col("cm").desc, col("vec_id").asc)
-      val medoids = owned
-        .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-        .join(broadcast(centDf), "centroid_id")
-        .select(col("centroid_id"), col("vec_id"),
-          round(VectorOps.cosine(col("embedding"), col("c_emb")), 6)
-            .as("cm"))
-        .withColumn("rk", row_number().over(wMed))
-        .filter(col("rk") === 1)
-        .select(col("vec_id").as("v")).distinct()
-      val probeIds = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"))
-      val routed = medoids.crossJoin(broadcast(probeIds))
-        .filter(col("u") =!= col("v"))
-      val entries = topK(EntryK)(score(e)(routed))
-      // the s39/s41 walk, verbatim, from the centroid-routed entries
-      def walk(start: DataFrame): DataFrame =
-        (1 to Hops).foldLeft(
-          topK(Ef)(score(e)(start)).localCheckpoint(true)) { (f, _) =>
-          val nb = f.as("f").join(graph.as("g"), col("f.v") === col("g.u"))
-            .select(col("f.u").as("u"), col("g.v").as("v"))
-            .unionAll(f).distinct()
-          topK(Ef)(score(e)(nb)).localCheckpoint(true)
-        }
-      // baseline: the SAME walk from md5-random entries (s39)
-      val slots = e.select(col("vec_id").as("v"),
-        pmod(graft.functions.Md5Pack(
-          concat(lit("nnd_"), col("vec_id"))), lit(n)).as("slot"))
-      val randomEntries = e.filter(col("vec_id") < Probes)
-        .select(col("vec_id").as("u"),
-          explode(expr("sequence(1, 8)")).as("j"))
-        .select(col("u"), pmod(graft.functions.Md5Pack(
-          concat_ws("_", lit("s39"), col("u"), col("j"))),
-          lit(n)).as("slot"))
-        .join(slots, "slot").select("u", "v").distinct()
-      // both walks depend only on the (checkpointed) graph — run the
-      // two hop chains concurrently (Par §2.6)
+        exactPanel(e, e))
+      // the GraphWalk walk from the centroid-routed entries, and the
+      // SAME walk from s39's md5-random entries as the baseline: both
+      // depend only on the (checkpointed) graph — run the two hop
+      // chains concurrently (Par §2.6)
+      val layer = medoids(e, cent).select("v").distinct()
       val (fRouted, fRandom) = Par.both(spark)(
-        walk(entries), walk(randomEntries))
-      val answer = topK(K)(
-        score(e)(fRouted).filter(col("u") =!= col("v")))
-      val answerRandom = topK(K)(
-        score(e)(fRandom).filter(col("u") =!= col("v")))
-      val possible = exact.agg(count(lit(1)).as("possible"))
-      val hits = answer.intersect(exact)
-        .agg(count(lit(1)).as("hits_routed"))
-      val hitsR = answerRandom.intersect(exact)
-        .agg(count(lit(1)).as("hits_random"))
-      hits.crossJoin(broadcast(hitsR)).crossJoin(broadcast(possible))
+        walk(g, routedEntries(e, layer))(byCosine(e)).last,
+        walk(g, randomEntries(e, n, "s39"))(byCosine(e)).last)
+      audit(exact)(
+        hits(answer(e, fRouted), exact, "hits_routed"),
+        hits(answer(e, fRandom), exact, "hits_random"))
         .select(lit(n).as("n_nodes"), lit(16L).as("n_centers"),
-          col("possible"), col("hits_routed"),
-          (col("hits_routed") / col("possible")).as("recall_routed"),
-          col("hits_random"),
-          (col("hits_random") / col("possible")).as("recall_random"),
+          col("possible"), col("hits_routed"), recall("hits_routed"),
+          col("hits_random"), recall("hits_random"),
           ((col("hits_routed") - col("hits_random")) / col("possible")
             >= -0.15).as("routing_close_to_random"))
     }),
   )
+
+  /** Cosine of two DOUBLE lists, unrounded. */
+  private def cosOf(a: String, b: String): String =
+    s"""list_dot_product($a, $b) /
+       |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))""".stripMargin
+
+  /** The twin of [[medoids]] over the CTE `nodes` (vec_id, emb): the 16
+    * IVF centroids (md5 sample, one decimal-summed Lloyd step) as CTE
+    * `rcent` (centroid_id, c_emb), and their medoids as CTE `medoids`
+    * (centroid_id, v). */
+  private def duckMedoids(nodes: String): String =
+    s"""cent AS (
+       |  SELECT vec_id AS centroid_id, emb AS c_emb
+       |  FROM $nodes
+       |  ORDER BY ${Tables.duckMd5Pack("CAST(vec_id AS VARCHAR)")}
+       |  LIMIT 16),
+       |assigned0 AS (
+       |  SELECT v.vec_id, c.centroid_id,
+       |    row_number() OVER (PARTITION BY v.vec_id
+       |      ORDER BY ${cosOf("v.emb", "c.c_emb")} DESC,
+       |        c.centroid_id) AS rn
+       |  FROM $nodes v CROSS JOIN cent c),
+       |memc AS (
+       |  SELECT a.centroid_id,
+       |    unnest(range(1, len(v.emb) + 1)) AS pos,
+       |    unnest(v.emb) AS comp
+       |  FROM assigned0 a JOIN $nodes v ON a.vec_id = v.vec_id
+       |  WHERE a.rn = 1),
+       |refined AS (
+       |  SELECT centroid_id, pos,
+       |    round(CAST(sum(CAST(comp AS DECIMAL(25,10))) AS DOUBLE)
+       |      / count(*), 6) AS m
+       |  FROM memc GROUP BY centroid_id, pos),
+       |rcent AS (
+       |  SELECT centroid_id, list(m ORDER BY pos) AS c_emb
+       |  FROM refined GROUP BY centroid_id),
+       |owned AS (
+       |  SELECT vec_id, centroid_id FROM (
+       |    SELECT v.vec_id, c.centroid_id,
+       |      row_number() OVER (PARTITION BY v.vec_id
+       |        ORDER BY ${cosOf("v.emb", "c.c_emb")} DESC,
+       |          c.centroid_id) AS rn
+       |    FROM $nodes v CROSS JOIN rcent c)
+       |  WHERE rn = 1),
+       |medoids AS (
+       |  SELECT centroid_id, vec_id AS v FROM (
+       |    SELECT o.centroid_id, o.vec_id,
+       |      row_number() OVER (PARTITION BY o.centroid_id
+       |        ORDER BY round(${cosOf("b.emb", "c.c_emb")}, 6) DESC,
+       |          o.vec_id) AS rk
+       |    FROM owned o JOIN $nodes b ON b.vec_id = o.vec_id
+       |    JOIN rcent c ON c.centroid_id = o.centroid_id)
+       |  WHERE rk = 1)""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "s45_centroid_routed_insert" -> {
@@ -251,9 +219,6 @@ object TextOps91 {
         s"""round(list_dot_product($a.emb, $b.emb) /
            |  (sqrt(list_dot_product($a.emb, $a.emb))
            |    * sqrt(list_dot_product($b.emb, $b.emb))), 6)""".stripMargin
-      def cosOf(a: String, b: String) =
-        s"""list_dot_product($a, $b) /
-           |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))""".stripMargin
       def nndSql(tag: String, ns: String, n: String) =
         s"""slots_$tag AS (
            |  SELECT vec_id AS v, ${md5own("nnd")} % $n.n AS slot
@@ -301,48 +266,7 @@ object TextOps91 {
          |na AS (SELECT count(*) AS n FROM e),
          |${nndSql("base", "base", "nb")},
          |${nndSql("full", "e", "na")},
-         |cent AS (
-         |  SELECT vec_id AS centroid_id, emb AS c_emb
-         |  FROM base
-         |  ORDER BY ${Tables.duckMd5Pack("CAST(vec_id AS VARCHAR)")}
-         |  LIMIT 16),
-         |assigned0 AS (
-         |  SELECT v.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY ${cosOf("v.emb", "c.c_emb")} DESC,
-         |        c.centroid_id) AS rn
-         |  FROM base v CROSS JOIN cent c),
-         |memc AS (
-         |  SELECT a.centroid_id,
-         |    unnest(range(1, len(v.emb) + 1)) AS pos,
-         |    unnest(v.emb) AS comp
-         |  FROM assigned0 a JOIN base v ON a.vec_id = v.vec_id
-         |  WHERE a.rn = 1),
-         |refined AS (
-         |  SELECT centroid_id, pos,
-         |    round(CAST(sum(CAST(comp AS DECIMAL(25,10))) AS DOUBLE)
-         |      / count(*), 6) AS m
-         |  FROM memc GROUP BY centroid_id, pos),
-         |rcent AS (
-         |  SELECT centroid_id, list(m ORDER BY pos) AS c_emb
-         |  FROM refined GROUP BY centroid_id),
-         |owned AS (
-         |  SELECT vec_id, centroid_id FROM (
-         |    SELECT v.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY ${cosOf("v.emb", "c.c_emb")} DESC,
-         |          c.centroid_id) AS rn
-         |    FROM base v CROSS JOIN rcent c)
-         |  WHERE rn = 1),
-         |medoids AS (
-         |  SELECT centroid_id, vec_id AS v FROM (
-         |    SELECT o.centroid_id, o.vec_id,
-         |      row_number() OVER (PARTITION BY o.centroid_id
-         |        ORDER BY round(${cosOf("b.emb", "c.c_emb")}, 6) DESC,
-         |          o.vec_id) AS rk
-         |    FROM owned o JOIN base b ON b.vec_id = o.vec_id
-         |    JOIN rcent c ON c.centroid_id = o.centroid_id)
-         |  WHERE rk = 1),
+         |${duckMedoids("base")},
          |routed AS (
          |  SELECT vec_id, centroid_id FROM (
          |    SELECT f.vec_id, c.centroid_id,
@@ -426,144 +350,25 @@ object TextOps91 {
     },
 
     "s46_centroid_routed_search" -> {
-      val rounds = (1 to Rounds).map(duckRound).mkString(",\n")
-      val entryDraw = Tables.duckMd5Pack(
-        "'s39_' || CAST(u AS VARCHAR) || '_' || CAST(j AS VARCHAR)")
-      // cosine of a corpus row against a centroid mean (no precomputed
-      // norm on the centroid side)
-      def cosVC(v: String, c: String) =
-        s"""list_dot_product($v.emb, $c.c_emb) /
-           |      ($v.nrm * sqrt(list_dot_product($c.c_emb, $c.c_emb)))""".stripMargin
-      def hops(prefix: String) = (1 to Hops).map { h =>
-        s"""${prefix}n$h AS (
-           |  SELECT DISTINCT u, v FROM (
-           |    SELECT f.u AS u, g.v AS v
-           |    FROM ${prefix}f${h - 1} f JOIN gs g ON f.v = g.u
-           |    UNION ALL SELECT u, v FROM ${prefix}f${h - 1})),
-           |${prefix}sn$h AS (
-           |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-           |  FROM ${prefix}n$h c JOIN e a ON a.vec_id = c.u
-           |  JOIN e b ON b.vec_id = c.v),
-           |${prefix}f$h AS MATERIALIZED (
-           |  SELECT u, v FROM (
-           |    SELECT u, v, row_number() OVER (PARTITION BY u
-           |      ORDER BY cos DESC, v) AS rank FROM ${prefix}sn$h)
-           |  WHERE rank <= $Ef)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $duckInit,
-         |$rounds,
-         |gs AS MATERIALIZED (
-         |  SELECT u, v FROM b$Rounds
-         |  UNION SELECT v AS u, u AS v FROM b$Rounds),
-         |probes AS (SELECT vec_id AS u FROM e WHERE vec_id < $Probes),
-         |cent AS (
-         |  SELECT vec_id AS centroid_id, emb AS c_emb
-         |  FROM e
-         |  ORDER BY ${Tables.duckMd5Pack("CAST(vec_id AS VARCHAR)")}
-         |  LIMIT 16),
-         |assigned0 AS (
-         |  SELECT v.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY ${cosVC("v", "c")} DESC, c.centroid_id) AS rn
-         |  FROM e v CROSS JOIN cent c),
-         |memc AS (
-         |  SELECT a.centroid_id,
-         |    unnest(range(1, len(v.emb) + 1)) AS pos,
-         |    unnest(v.emb) AS comp
-         |  FROM assigned0 a JOIN e v ON a.vec_id = v.vec_id
-         |  WHERE a.rn = 1),
-         |refined AS (
-         |  SELECT centroid_id, pos,
-         |    round(CAST(sum(CAST(comp AS DECIMAL(25,10))) AS DOUBLE)
-         |      / count(*), 6) AS m
-         |  FROM memc GROUP BY centroid_id, pos),
-         |rcent AS (
-         |  SELECT centroid_id, list(m ORDER BY pos) AS c_emb
-         |  FROM refined GROUP BY centroid_id),
-         |owned AS (
-         |  SELECT vec_id, centroid_id FROM (
-         |    SELECT v.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY ${cosVC("v", "c")} DESC, c.centroid_id) AS rn
-         |    FROM e v CROSS JOIN rcent c)
-         |  WHERE rn = 1),
-         |up AS (
-         |  SELECT DISTINCT v FROM (
-         |    SELECT centroid_id, vec_id AS v FROM (
-         |      SELECT o.centroid_id, o.vec_id,
-         |        row_number() OVER (PARTITION BY o.centroid_id
-         |          ORDER BY round(${cosVC("b", "c")}, 6) DESC,
-         |            o.vec_id) AS rk
-         |      FROM owned o JOIN e b ON b.vec_id = o.vec_id
-         |      JOIN rcent c ON c.centroid_id = o.centroid_id)
-         |    WHERE rk = 1)),
-         |routeds AS (
-         |  SELECT p.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM probes p CROSS JOIN up c
-         |  JOIN e a ON a.vec_id = p.u JOIN e b ON b.vec_id = c.v
-         |  WHERE p.u <> c.v),
-         |ent AS (
-         |  SELECT u, v, cos FROM (
-         |    SELECT u, v, cos, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM routeds)
-         |  WHERE rank <= $EntryK),
-         |hf0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM ent)
-         |  WHERE rank <= $Ef),
-         |${hops("h")},
-         |hans AS (
-         |  SELECT u, v FROM (
-         |    SELECT c.u, c.v, row_number() OVER (PARTITION BY c.u
-         |      ORDER BY ${cosSql("a", "b")} DESC, c.v) AS rank
-         |    FROM hf$Hops c JOIN e a ON a.vec_id = c.u
-         |    JOIN e b ON b.vec_id = c.v WHERE c.u <> c.v)
-         |  WHERE rank <= $K),
-         |rent AS (
-         |  SELECT DISTINCT d.u, s.v
-         |  FROM (SELECT u, $entryDraw % nn.n AS slot FROM (
-         |          SELECT vec_id AS u, unnest(range(1, 9)) AS j
-         |          FROM e WHERE vec_id < $Probes), nn) d
-         |  JOIN slots s USING (slot)),
-         |rsent AS (
-         |  SELECT c.u, c.v, ${cosSql("a", "b")} AS cos
-         |  FROM rent c JOIN e a ON a.vec_id = c.u
-         |  JOIN e b ON b.vec_id = c.v),
-         |rf0 AS MATERIALIZED (
-         |  SELECT u, v FROM (
-         |    SELECT u, v, row_number() OVER (PARTITION BY u
-         |      ORDER BY cos DESC, v) AS rank FROM rsent)
-         |  WHERE rank <= $Ef),
-         |${hops("r")},
-         |rans AS (
-         |  SELECT u, v FROM (
-         |    SELECT c.u, c.v, row_number() OVER (PARTITION BY c.u
-         |      ORDER BY ${cosSql("a", "b")} DESC, c.v) AS rank
-         |    FROM rf$Hops c JOIN e a ON a.vec_id = c.u
-         |    JOIN e b ON b.vec_id = c.v WHERE c.u <> c.v)
-         |  WHERE rank <= $K),
-         |$duckExact
-         |SELECT
-         |  (SELECT n FROM nn) AS n_nodes,
+      s"""WITH $duckGraph,
+         |${duckMedoids("e")},
+         |up AS (SELECT DISTINCT v FROM medoids),
+         |$duckRoutedEntries,
+         |${duckWalk("h", "routed")(duckCosine)},
+         |${duckAnswer("hans", s"hf$Hops")(duckCosine)},
+         |${duckRandomEntries("rent", "s39")},
+         |${duckWalk("r", "rent")(duckCosine)},
+         |${duckAnswer("rans", s"rf$Hops")(duckCosine)},
+         |$duckExact,
+         |${duckAudit("hits_routed" -> "hans", "hits_random" -> "rans")}
+         |SELECT nn.n AS n_nodes,
          |  CAST(16 AS BIGINT) AS n_centers,
-         |  (SELECT count(*) FROM ex) AS possible,
-         |  (SELECT count(*) FROM (SELECT u, v FROM hans
-         |     INTERSECT SELECT u, v FROM ex)) AS hits_routed,
-         |  CAST((SELECT count(*) FROM (SELECT u, v FROM hans
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |    / (SELECT count(*) FROM ex) AS recall_routed,
-         |  (SELECT count(*) FROM (SELECT u, v FROM rans
-         |     INTERSECT SELECT u, v FROM ex)) AS hits_random,
-         |  CAST((SELECT count(*) FROM (SELECT u, v FROM rans
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |    / (SELECT count(*) FROM ex) AS recall_random,
-         |  (CAST((SELECT count(*) FROM (SELECT u, v FROM hans
-         |     INTERSECT SELECT u, v FROM ex)) AS DOUBLE)
-         |   - (SELECT count(*) FROM (SELECT u, v FROM rans
-         |     INTERSECT SELECT u, v FROM ex)))
-         |    / (SELECT count(*) FROM ex) >= -0.15
-         |    AS routing_close_to_random""".stripMargin
+         |  possible,
+         |  hits_routed, ${duckRecall("hits_routed")},
+         |  hits_random, ${duckRecall("hits_random")},
+         |  (CAST(hits_routed AS DOUBLE) - hits_random) / possible >= -0.15
+         |    AS routing_close_to_random
+         |FROM hits, nn""".stripMargin
     },
   )
 }

@@ -80,20 +80,6 @@ class Round5fSpec extends AnyFunSuite {
     assert(got.values.flatten.exists(_ > 1), "weights never exercised")
   }
 
-  test("BfsHops.weighted with unit weights degenerates to hops") {
-    val e = spark.createDataFrame(Seq(
-      (0L, 1L), (1L, 2L), (2L, 3L), (0L, 4L), (4L, 3L), (7L, 8L)
-    )).toDF("s", "d").withColumn("w", lit(1L))
-    val hops = graft.operators.BfsHops.hops(e, "s", "d", 0L).collect()
-      .map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    val wtd = graft.operators.BfsHops.weighted(e, "s", "d", "w", 0L)
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(hops === wtd)
-    assert(wtd(3L) === Some(2L) && wtd(8L) === None)
-  }
-
   test("s10: recall well-formed; quantization honors the half-bin bound") {
     val rows = q("s10_scalar_quant").collect()
     assert(rows.nonEmpty)
