@@ -31,32 +31,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // clearCache() frees persist()s but NOT localCheckpoint blocks
-      // (graph/ANN queries checkpoint per round); the context cleaner
-      // frees those only after a GC proves the RDDs unreachable —
-      // default 30min never fires inside a suite, so force it often
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // AQE min-partition-size floor, parameterized. Round 12 lowered
-      // the default to 64k because d11's pre-kernel verify stage
-      // collapsed to 4 tasks under the 1 MiB floor (14s). Round 13
-      // re-measured after the hashed-verify kernel and the concurrent
-      // leg submission landed: the 64k floor now UNDER-coalesces — the
-      // walk/audit queries carry 3x the tasks (s46: 855 vs 311) and pay
-      // per-task overhead on tiny stages (s-family +1.3..1.8s each,
-      // most d/q queries +0.1..0.4s), while d11 alone still prefers 64k
-      // by ~0.8s. Net across the suite the Spark default wins, so the
-      // default is back to 1m; SPARK_GRAFT_AQE_MIN_PARTITION remains
-      // for cluster profiles (at production scale per-core shuffle
-      // shares exceed either floor and the setting is inert).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Light warmup: session + codegen paths of one query, untimed, so the
     // first timed query doesn't absorb JVM startup. (A full warmup pass of

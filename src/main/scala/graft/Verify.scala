@@ -29,21 +29,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // free localCheckpoint blocks across the 600-query sweep (see
-      // the same setting in Bench: clearCache() alone cannot)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // same engine posture as Bench (see the rationale there): results
-      // must be partition-count invariant, and verifying under the same
-      // AQE floor the bench runs with proves it against the oracle
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only: GRAFT_VERIFY_ONLY=q13_sessionize,q36_array_funcs limits the

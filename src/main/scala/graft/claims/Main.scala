@@ -1,7 +1,5 @@
 package graft.claims
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point, same contract as the reference script
   * (claim_pipeline.py:235-242): `Main <file> [<file> …]`, usage + exit 1
   * when no inputs are given. `spark-submit`-able.
@@ -43,14 +41,8 @@ object Main {
       sys.exit(1)
     }
     val (config, preserveOrder) = Main.configFromEnv(sys.env)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-claim-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession
+      .builder("graft-claim-pipeline", master = sys.env.get("SPARK_MASTER"))
       .config("spark.sql.files.maxPartitionBytes", 16L * 1024 * 1024)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -600,8 +600,8 @@ object NfcIdempotence
     }
 }
 
-/** SparkSessionExtensions entry point:
-  * SparkSession.builder().withExtensions(new GraftExtensions)... or
+/** SparkSessionExtensions entry point: every [[graft.GraftSession]]
+  * installs it; other sessions set
   * spark.sql.extensions=graft.functions.GraftExtensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

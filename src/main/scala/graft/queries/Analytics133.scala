@@ -25,13 +25,10 @@ import org.apache.spark.sql.functions._
   *    shift/or expression both engines evaluate in exact integers.
   */
 object Analytics133 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   private val SampleK = 100L
   private val BlockRows = 1000L
-
-  private def cents(c: Column) =
-    (c.cast("decimal(18,2)") * 100).cast("long")
 
   /** Morton interleave of two 8-bit values: a's bit i lands at 2i+1,
     * b's at 2i — identical shift/or arithmetic in both engines.
@@ -50,7 +47,7 @@ object Analytics133 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q339_systematic_pps" -> ((spark, dir) => {
       val o = t(spark, dir, "orders")
-        .select(col("o_orderkey"), cents(col("o_totalprice")).as("w"))
+        .select(col("o_orderkey"), centsLong(col("o_totalprice")).as("w"))
       val cum = graft.operators.GlobalPrefixSum.withRunningTotal(
         o, "o_orderkey", "w", "cum")
       val tot = o.agg(sum(col("w")).as("big_w"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-6 additions, batch 134 (SURVEY.md §2.4):
@@ -25,14 +25,11 @@ import org.apache.spark.sql.functions._
   *    Bounded min-k aggregates only; no global sorts.
   */
 object Analytics134 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   private val KmvK = 256
   // Md5Pack's range: (2^31 − 1) · 2^31 + (2^31 − 1) ≈ 4.61e18
   private val HashSpace = 2147483647L * 2147483648L + 2147483647L
-
-  private def cents(c: Column) =
-    (c.cast("decimal(18,2)") * 100).cast("long")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q341_join_ivm" -> ((spark, dir) => {
@@ -40,7 +37,7 @@ object Analytics134 {
         .select(col("c_custkey"), col("c_nationkey"))
       val orders = t(spark, dir, "orders")
         .select(col("o_custkey"), col("o_orderdate"),
-          cents(col("o_totalprice")).as("w"))
+          centsLong(col("o_totalprice")).as("w"))
       val cutoff = lit("1996-01-01").cast("date")
       val a = orders.filter(col("o_orderdate") < cutoff)
       val da = orders.filter(col("o_orderdate") >= cutoff)

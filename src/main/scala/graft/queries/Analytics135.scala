@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-6 additions, batch 135 (SURVEY.md §2.4):
@@ -16,10 +16,7 @@ import org.apache.spark.sql.functions._
   *    expressions — one scan, two bounded aggregations.
   */
 object Analytics135 {
-  import Tables.t
-
-  private def cents(c: Column) =
-    (c.cast("decimal(18,2)") * 100).cast("long")
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q343_cuped" -> ((spark, dir) => {
@@ -28,9 +25,9 @@ object Analytics135 {
         .groupBy(col("o_custkey"))
         .agg(
           sum(when(year(col("o_orderdate")) === 1996,
-            cents(col("o_totalprice"))).otherwise(0L)).as("x"),
+            centsLong(col("o_totalprice"))).otherwise(0L)).as("x"),
           sum(when(year(col("o_orderdate")) === 1997,
-            cents(col("o_totalprice"))).otherwise(0L)).as("y"))
+            centsLong(col("o_totalprice"))).otherwise(0L)).as("y"))
         .withColumn("arm", (col("o_custkey") % 2).cast("int"))
         .localCheckpoint(true) // feeds the pooled and per-arm passes
       val pooled = per.agg(

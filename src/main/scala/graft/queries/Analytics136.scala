@@ -17,18 +17,15 @@ import org.apache.spark.sql.functions._
   *    plus one aggregation — no windows, no joins beyond the union.
   */
 object Analytics136 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   private val CorrectionCents = 1000L // +$10.00 recorded 30 days later
-
-  private def cents(c: Column) =
-    (c.cast("decimal(18,2)") * 100).cast("long")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q344_bitemporal_audit" -> ((spark, dir) => {
       val o = t(spark, dir, "orders")
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("vd"),
-          cents(col("o_totalprice")).as("w"),
+          centsLong(col("o_totalprice")).as("w"),
           (graft.functions.Md5Pack(concat(lit("fix_"),
             col("o_orderkey").cast("string"))) % 7 === 0).as("corrected"))
         .filter(year(col("vd")) === 1996)

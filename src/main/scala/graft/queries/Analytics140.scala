@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *    over broadcast-joined dimension slices.
   */
 object Analytics140 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   private val ImgDocs = 40
   private val WavDocs = 30
@@ -244,13 +244,11 @@ object Analytics140 {
     }),
 
     "q351_join_ivm_retract" -> ((spark, dir) => {
-      def cents(c: org.apache.spark.sql.Column) =
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val cust = t(spark, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
       val orders = t(spark, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          cents(col("o_totalprice")).as("w"))
+          centsLong(col("o_totalprice")).as("w"))
       val cutoff = lit("1996-01-01").cast("date")
       // base state and signed deltas: late orders arrive (+1), a slice
       // of the base retracts (−1); a customer segment arrives (+1), a

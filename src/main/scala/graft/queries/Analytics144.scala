@@ -23,18 +23,15 @@ import org.apache.spark.sql.functions._
   *    The oracle replays the erasure as an anti-filter.
   */
 object Analytics144 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val FwSchema =
     "s_suppkey:long:8,s_name:string:18,s_nationkey:int:4,s_acctbal:double:24"
   private val FwFixtureMaxKey = 100000L
 
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q376_fw_row_cdf" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_cdf2", dir)
+      val base = freshFwBase("graft_fw_cdf2", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -80,7 +77,7 @@ object Analytics144 {
     }),
 
     "q377_fw_deletion_vectors" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_dv", dir)
+      val base = freshFwBase("graft_fw_dv", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

@@ -21,12 +21,9 @@ import org.apache.spark.sql.functions._
   *    oracle match, not just asserted.
   */
 object Analytics145 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val FwFixtureMaxKey = 100000L
-
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
 
   /** Register the catalog, (re)create `cat.ns.sup` over a fresh dir,
     * and fill it from the supplier parquet in one INSERT (= snapshot
@@ -36,7 +33,7 @@ object Analytics145 {
       tag: String): String = {
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.FwCatalog")
-    val base = freshBase(tag, dir)
+    val base = freshFwBase(tag, dir)
     val tbl = s"$cat.ns.sup"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"""CREATE TABLE $tbl (s_suppkey BIGINT, s_name STRING,
@@ -101,7 +98,7 @@ object Analytics145 {
       // keys 2/4/6 exist at every SF: rollback returns exactly them
       val rollbackOk = rb.getInt(0) == 1 && restored == afterDelete + 3
       // clone the restored table and answer FROM THE CLONE
-      val dst = freshBase("graft_fw_sqlcall_cl", dir)
+      val dst = freshFwBase("graft_fw_sqlcall_cl", dir)
       val dstDir = new java.io.File(dst.toString)
       dstDir.delete() // clone requires a fresh target
       spark.sql(s"CALL fwq379.clone('ns.sup', '$dst')")

@@ -27,18 +27,15 @@ import org.apache.spark.sql.functions._
   *    99.9% of a 100 TB table — the entire point of IVM.
   */
 object Analytics146 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val FwSchema =
     "s_suppkey:long:8,s_name:string:18,s_nationkey:int:4,s_acctbal:double:24"
   private val FwFixtureMaxKey = 100000L
 
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q380_fw_cdf_ivm" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_ivm", dir)
+      val base = freshFwBase("graft_fw_ivm", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

@@ -21,17 +21,14 @@ import org.apache.spark.sql.functions._
   *    parquet original.
   */
 object Analytics147 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val FwFixtureMaxKey = 100000L
-
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
 
   private def supTable(spark: SparkSession, dir: String, cat: String,
       tag: String): String = {
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.FwCatalog")
-    val base = freshBase(tag, dir)
+    val base = freshFwBase(tag, dir)
     val tbl = s"$cat.ns.sup"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"""CREATE TABLE $tbl (s_suppkey BIGINT, s_name STRING,

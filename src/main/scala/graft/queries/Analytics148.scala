@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    user in O(touched files') sidecar writes, no rewrite anywhere.
   */
 object Analytics148 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val Keys = Seq(1L, 3L, 5L, 7L, 9L) // present at every SF
   private val UserSchema =
@@ -31,14 +31,11 @@ object Analytics148 {
   private val FactSchema =
     "l_orderkey:long:10,l_suppkey:long:8,qty:long:4,l_returnflag:string:1"
 
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q383_fw_erasure_cascade" -> ((spark, dir) => {
       spark.conf.set("spark.sql.catalog.fwq383", "graft.sources.FwCatalog")
-      val users = freshBase("graft_fw_casc_u", dir)
-      val facts = freshBase("graft_fw_casc_f", dir)
+      val users = freshFwBase("graft_fw_casc_u", dir)
+      val facts = freshFwBase("graft_fw_casc_f", dir)
       t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= 100000L)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

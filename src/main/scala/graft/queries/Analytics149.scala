@@ -75,18 +75,15 @@ import org.apache.spark.sql.functions._
   *    any row-level write.
   */
 object Analytics149 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val FwSchema =
     "s_suppkey:long:8,s_name:string:18,s_nationkey:int:4,s_acctbal:double:24"
   private val FwFixtureMaxKey = 100000L
 
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q384_fw_idempotent_append" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_txn", dir)
+      val base = freshFwBase("graft_fw_txn", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -122,7 +119,7 @@ object Analytics149 {
     }),
 
     "q385_fw_constraints" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_check", dir)
+      val base = freshFwBase("graft_fw_check", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -172,7 +169,7 @@ object Analytics149 {
     }),
 
     "q386_fw_wap" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_wap", dir)
+      val base = freshFwBase("graft_fw_wap", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -221,7 +218,7 @@ object Analytics149 {
     }),
 
     "q387_fw_tags" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_tag", dir)
+      val base = freshFwBase("graft_fw_tag", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -255,7 +252,7 @@ object Analytics149 {
     // metadata, and the whole history (including the truncate) stays
     // readable. The destructive sibling is q375's rollback.
     "q389_fw_restore" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_restore", dir)
+      val base = freshFwBase("graft_fw_restore", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -288,7 +285,7 @@ object Analytics149 {
     }),
 
     "q388_fw_add_column" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_addcol", dir)
+      val base = freshFwBase("graft_fw_addcol", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

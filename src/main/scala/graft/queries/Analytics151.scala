@@ -25,18 +25,15 @@ import org.apache.spark.sql.functions._
   *    as static record runs — zero shuffles at read time.
   */
 object Analytics151 {
-  import Tables.t
+  import Tables.{freshFwBase, t}
 
   private val FwSchema =
     "s_suppkey:long:8,s_name:string:18,s_nationkey:int:4,s_acctbal:double:24"
   private val FwFixtureMaxKey = 100000L
 
-  private def freshBase(tag: String, dir: String): java.nio.file.Path =
-    Tables.freshFwBase(tag, dir)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q390_fw_cdf_stream_cow" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_cdfsc", dir)
+      val base = freshFwBase("graft_fw_cdfsc", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -89,7 +86,7 @@ object Analytics151 {
     // files and the MoR delete from its deletion-vector runs. Oracle
     // replays every commit class from the fixture predicates.
     "q391_fw_cdf_batch" -> ((spark, dir) => {
-      val base = freshBase("graft_fw_cdfb", dir)
+      val base = freshFwBase("graft_fw_cdfb", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

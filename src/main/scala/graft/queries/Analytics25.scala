@@ -29,16 +29,13 @@ import org.apache.spark.sql.functions._
   *    Σ p_s·midrank2 is exact DECIMAL in both engines.
   */
 object Analytics25 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q144_gini" -> ((spark, dir) => {
       val rev = t(spark, dir, "orders")
         .groupBy(col("o_custkey"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(18,0)")
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(18,0)")
           .as("cents"))
       val ranked = graft.operators.GlobalPrefixSum.withRunningTotalBy(
         rev.withColumn("one", lit(1L)),
@@ -60,13 +57,13 @@ object Analytics25 {
     "q145_kendall_tau" -> ((spark, dir) => {
       val c = t(spark, dir, "customer")
       val bal = c.groupBy(col("c_nationkey"))
-        .agg(sum(cents(col("c_acctbal"))).cast("decimal(38,0)")
+        .agg(sum(centsDecimal(col("c_acctbal"))).cast("decimal(38,0)")
           .as("bal_cents"))
       val rev = t(spark, dir, "orders")
         .join(c.select(col("c_custkey"), col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)")
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)")
           .as("rev_cents"))
       val m = bal.join(rev, "c_nationkey")
       val mi = m.select(col("c_nationkey").as("ka"),
@@ -93,7 +90,7 @@ object Analytics25 {
 
     "q146_auc" -> ((spark, dir) => {
       val g = t(spark, dir, "orders")
-        .select(cents(col("o_totalprice")).as("cents"),
+        .select(centsDecimal(col("o_totalprice")).as("cents"),
           (col("o_orderpriority") === "1-URGENT").as("pos"))
         .groupBy("cents")
         .agg(count(lit(1)).as("n_s"), count_if(col("pos")).as("p_s"))

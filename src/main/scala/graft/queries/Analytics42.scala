@@ -42,15 +42,12 @@ import org.apache.spark.sql.functions._
   *    the day after the activity gap opens.
   */
 object Analytics42 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q168_skyline" -> ((spark, dir) => {
       val g = t(spark, dir, "part")
-        .select(col("p_brand"), cents(col("p_retailprice")).as("price_cents"),
+        .select(col("p_brand"), centsDecimal(col("p_retailprice")).as("price_cents"),
           col("p_size"))
         .groupBy("p_brand", "price_cents", "p_size")
         .agg(count(lit(1)).as("n_parts"))
@@ -99,8 +96,8 @@ object Analytics42 {
     "q170_ols_two_var" -> ((spark, dir) => {
       val x = t(spark, dir, "lineitem").select(
         col("l_quantity").cast("decimal(18,0)").as("x1"),
-        cents(col("l_discount")).as("x2"),
-        cents(col("l_extendedprice")).as("y"))
+        centsDecimal(col("l_discount")).as("x2"),
+        centsDecimal(col("l_extendedprice")).as("y"))
       val s = x.agg(
         count(lit(1)).cast("decimal(18,0)").as("n"),
         sum(col("x1")).cast("decimal(38,0)").as("s1"),
@@ -153,7 +150,7 @@ object Analytics42 {
         .groupBy(col("c_nationkey"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
             .cast("long").as("mx"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
       val w = Window.partitionBy("c_nationkey").orderBy("mx")
         .rowsBetween(Window.unboundedPreceding, 0)
       val dd = monthly

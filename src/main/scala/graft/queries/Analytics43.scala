@@ -35,10 +35,7 @@ import org.apache.spark.sql.functions._
   *    in both engines (the t11 zipf-slope discipline).
   */
 object Analytics43 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q174_cross_correlation" -> ((spark, dir) => {
@@ -70,7 +67,7 @@ object Analytics43 {
     "q175_calibration_bins" -> ((spark, dir) => {
       // predicted P(return) = discount × 10 — tenths ∈ 0..10
       val x = t(spark, dir, "lineitem").select(
-        cents(col("l_discount")).as("tenths"),
+        centsDecimal(col("l_discount")).as("tenths"),
         (col("l_returnflag") === "R").cast("int").as("y"))
       val bins = x.groupBy("tenths").agg(
           count(lit(1)).as("n"),
@@ -143,7 +140,7 @@ object Analytics43 {
         .join(t(spark, dir, "supplier"),
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("s_nationkey"), col("s_suppkey"))
-        .agg(sum(cents(col("l_extendedprice"))).cast("decimal(38,0)")
+        .agg(sum(centsDecimal(col("l_extendedprice"))).cast("decimal(38,0)")
           .as("rev"))
       r.groupBy("s_nationkey").agg(
           count(lit(1)).as("n_suppliers"),
@@ -178,7 +175,7 @@ object Analytics43 {
     "q179_price_elasticity" -> ((spark, dir) => {
       // the ln() grid is the bounded distinct (discount, quantity) set
       val g = t(spark, dir, "lineitem")
-        .groupBy(cents(col("l_discount")).as("dc"),
+        .groupBy(centsDecimal(col("l_discount")).as("dc"),
           col("l_quantity").cast("decimal(18,0)").as("q"))
         .agg(count(lit(1)).as("cnt"))
         .filter(col("dc") > 0)

@@ -26,10 +26,7 @@ import org.apache.spark.sql.functions._
   *    exponentially). Companion to q64/q67/q121/q135/q176.
   */
 object Analytics44 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   /** Peel rounds for q181 — 25 = the nation count, enough to reach the
     * exact k-core fixpoint on any graph over this dim (each non-final
@@ -41,7 +38,7 @@ object Analytics44 {
     "q180_var_cvar" -> ((spark, dir) => {
       val daily = t(spark, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
       // date-grain frame: the global windows below scan a calendar-
       // bounded row count, not the fact table
       val wd = Window.orderBy("day")

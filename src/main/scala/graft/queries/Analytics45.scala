@@ -17,10 +17,7 @@ import org.apache.spark.sql.functions._
   *    fact-scale operation is the groupBy(month) rollup underneath.
   */
 object Analytics45 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q182_seasonality_strength" -> ((spark, dir) => {
@@ -28,7 +25,7 @@ object Analytics45 {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("mx"),
           month(col("o_orderdate")).as("moy"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
       // month-grain frame: every window below is calendar-bounded
       val w13 = Window.orderBy("mx").rowsBetween(-6, 6)
       val detr = monthly

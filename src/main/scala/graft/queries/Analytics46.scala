@@ -25,10 +25,7 @@ import org.apache.spark.sql.functions._
   *    the min-support survivors.
   */
 object Analytics46 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q183_forecast_reconciliation" -> ((spark, dir) => {
@@ -39,7 +36,7 @@ object Analytics46 {
         .groupBy(col("c_nationkey"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
             .cast("long").as("mx"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
       val maxmx = monthly.agg(max(col("mx")).as("maxmx"))
       val last12 = monthly.crossJoin(broadcast(maxmx))
         .filter(col("mx") > col("maxmx") - 12)

@@ -22,10 +22,7 @@ import org.apache.spark.sql.functions._
   *    this reports the actionable head count.
   */
 object Analytics47 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q186_join_size_estimate" -> ((spark, dir) => {
@@ -49,7 +46,7 @@ object Analytics47 {
       val rev = t(spark, dir, "orders")
         .join(cust, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"), col("c_custkey"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)").as("r"))
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)").as("r"))
       val w = Window.partitionBy("c_nationkey")
         .orderBy(col("r").desc, col("c_custkey"))
       val wCum = w.rowsBetween(Window.unboundedPreceding, 0)

@@ -19,10 +19,7 @@ import org.apache.spark.sql.functions._
   *    DECIMAL before the order-free sum.
   */
 object Analytics48 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q188_diff_in_diff" -> ((spark, dir) => {
@@ -37,7 +34,7 @@ object Analytics48 {
         .groupBy(col("c_nationkey"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
             .cast("long").as("mx"))
-        .agg(sum(cents(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("decimal(38,0)").as("v"))
       val lim = monthly.agg(
         ((min(col("mx")) + max(col("mx"))) / lit(2)).cast("long").as("cut"))
       val cells = monthly

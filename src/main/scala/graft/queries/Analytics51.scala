@@ -16,10 +16,7 @@ import org.apache.spark.sql.functions._
   *    keys. Exact group counts; summary row plus the worst group.
   */
 object Analytics51 {
-  import Tables.t
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q192_skew_remediation" -> ((spark, dir) => {
@@ -46,7 +43,7 @@ object Analytics51 {
 
     "q193_duplicate_invoices" -> ((spark, dir) => {
       val g = t(spark, dir, "orders")
-        .groupBy(col("o_custkey"), cents(col("o_totalprice")).as("amt"),
+        .groupBy(col("o_custkey"), centsDecimal(col("o_totalprice")).as("amt"),
           to_date(col("o_orderdate")).as("d"))
         .agg(count(lit(1)).as("n"))
         .filter(col("n") >= 2)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    regression sums, so the slope arithmetic is order-free.
   */
 object Analytics52 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q194_backlog_curve" -> ((spark, dir) => {
@@ -67,14 +67,12 @@ object Analytics52 {
     }),
 
     "q196_hhi_trend" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       val r = t(spark, dir, "lineitem")
         .join(t(spark, dir, "supplier"),
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("s_nationkey"), year(col("l_shipdate")).as("yr"),
           col("s_suppkey"))
-        .agg(sum(cents(col("l_extendedprice"))).cast("decimal(38,0)")
+        .agg(sum(centsDecimal(col("l_extendedprice"))).cast("decimal(38,0)")
           .as("rev"))
       val hhi = r.groupBy("s_nationkey", "yr").agg(
           round(lit(10000.0)

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *    only the two slope divisions are float.
   */
 object Analytics54 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q199_rounding_collation" -> ((spark, dir) => {
@@ -68,12 +68,10 @@ object Analytics54 {
     }),
 
     "q201_simpsons_detector" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       val x = t(spark, dir, "lineitem").select(
         col("l_returnflag").as("g"),
         col("l_quantity").cast("decimal(18,0)").as("x"),
-        cents(col("l_extendedprice")).as("y"))
+        centsDecimal(col("l_extendedprice")).as("y"))
       def moments(grouped: Boolean): DataFrame = {
         val base = if (grouped) x.groupBy("g") else x.groupBy()
         base.agg(

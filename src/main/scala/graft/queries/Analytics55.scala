@@ -36,11 +36,7 @@ import org.apache.spark.sql.functions._
   *    window count BEFORE pairing — no order-count-sized broadcast.
   */
 object Analytics55 {
-  import Tables.t
-
-  /** cents(c): exact integer cents for a 2-decimal money column. */
-  private def cents(c: Column): Column =
-    (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
+  import Tables.{centsDecimal, t}
 
   /** Daily priority snapshots: one priority per (customer, day) —
     * lowest orderkey wins, same rule as the oracle's arg_min.
@@ -72,9 +68,9 @@ object Analytics55 {
     "q202_correlation_matrix" -> ((spark, dir) => {
       val vars = Seq(
         "qty" -> col("l_quantity").cast("decimal(18,0)"),
-        "price" -> cents(col("l_extendedprice")),
-        "disc" -> cents(col("l_discount")),
-        "tax" -> cents(col("l_tax")))
+        "price" -> centsDecimal(col("l_extendedprice")),
+        "disc" -> centsDecimal(col("l_discount")),
+        "tax" -> centsDecimal(col("l_tax")))
       val x = t(spark, dir, "lineitem")
         .select(vars.map { case (n, c) => c.as(n) }: _*)
       val aggs =
@@ -122,7 +118,7 @@ object Analytics55 {
       // the x·lx product inside DuckDB's 38-digit multiply cap
       val x = t(spark, dir, "lineitem")
         .groupBy("l_suppkey")
-        .agg(sum(cents(col("l_extendedprice"))).cast("decimal(18,0)").as("x"))
+        .agg(sum(centsDecimal(col("l_extendedprice"))).cast("decimal(18,0)").as("x"))
         .join(sup, col("l_suppkey") === col("s_suppkey"))
       // rounded-ln determinism: ln(x) pinned to 6dp DECIMAL per
       // supplier; every cross-supplier sum is exact decimal

@@ -18,15 +18,13 @@ import org.apache.spark.sql.functions._
   *    single customer past ~9e16 cents.
   */
 object Analytics58 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q209_value_imputation" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       val perCust = t(spark, dir, "orders")
         .groupBy(col("o_custkey"))
-        .agg(sum(cents(col("o_totalprice"))).cast("long").as("spend"),
+        .agg(sum(centsDecimal(col("o_totalprice"))).cast("long").as("spend"),
           count(lit(1)).as("n_orders"))
       val cust = t(spark, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"))

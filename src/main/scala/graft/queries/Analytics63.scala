@@ -20,15 +20,13 @@ import org.apache.spark.sql.functions._
   *    GROUPING(a, b) so aggregate-lineage code can rely on it.
   */
 object Analytics63 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q217_rolling_slope" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       val daily = t(spark, dir, "lineitem")
         .groupBy(to_date(col("l_shipdate")).as("day"))
-        .agg(sum(cents(col("l_extendedprice"))).cast("decimal(18,0)")
+        .agg(sum(centsDecimal(col("l_extendedprice"))).cast("decimal(18,0)")
           .as("rev"))
         .select(col("day"),
           datediff(col("day"), lit("1970-01-01").cast("date"))

@@ -23,19 +23,17 @@ import org.apache.spark.sql.functions._
   *    corpus size.
   */
 object Analytics64 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q219_budget_allocation" -> ((spark, dir) => {
       val Budget = 10000000L
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       val sup = broadcast(t(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey")))
       val rev = t(spark, dir, "lineitem")
         .join(sup, col("l_suppkey") === col("s_suppkey"))
         .groupBy("s_nationkey")
-        .agg(sum(cents(col("l_extendedprice"))).cast("decimal(38,0)")
+        .agg(sum(centsDecimal(col("l_extendedprice"))).cast("decimal(38,0)")
           .as("rev"))
       val tot = rev.agg(sum(col("rev")).cast("decimal(38,0)").as("tot"))
       // Spark's decimal `div` IS exact integral division (unlike

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   *    spend deltas. The shape every data-CI system runs nightly.
   */
 object Analytics67 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q224_json_shred_roundtrip" -> ((spark, dir) => {
@@ -46,11 +46,9 @@ object Analytics67 {
     }),
 
     "q225_snapshot_diff" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       val o = t(spark, dir, "orders")
         .select(col("o_custkey"), to_date(col("o_orderdate")).as("d"),
-          cents(col("o_totalprice")).as("p"))
+          centsDecimal(col("o_totalprice")).as("p"))
       val hi = o.agg(date_sub(max(col("d")), 90).as("cutoff"))
       val withCut = o.crossJoin(broadcast(hi))
       val v1 = withCut.filter(col("d") <= col("cutoff"))

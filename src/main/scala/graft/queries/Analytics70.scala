@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    not value error).
   */
 object Analytics70 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q228_hll_error_contract" -> ((spark, dir) => {
@@ -40,10 +40,8 @@ object Analytics70 {
     }),
 
     "q229_quantile_error_contract" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val x = t(spark, dir, "lineitem")
-        .select(col("l_returnflag"), cents(col("l_extendedprice")).as("v"))
+        .select(col("l_returnflag"), centsLong(col("l_extendedprice")).as("v"))
       val approx = x.groupBy("l_returnflag")
         .agg(percentile_approx(col("v"), lit(0.5), lit(10000)).as("apx"),
           count(lit(1)).as("n"))

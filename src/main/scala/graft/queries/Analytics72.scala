@@ -22,18 +22,16 @@ import org.apache.spark.sql.functions._
   *    loudly.
   */
 object Analytics72 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q231_feature_binning" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val o = t(spark, dir, "orders")
         .join(broadcast(t(spark, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey"))),
           col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("c_nationkey"),
-          cents(col("o_totalprice")).as("v"))
+          centsLong(col("o_totalprice")).as("v"))
       val w = Window.partitionBy("c_nationkey")
         .orderBy(col("v"), col("o_orderkey"))
       val ranked = o.withColumn("rn", row_number().over(w))

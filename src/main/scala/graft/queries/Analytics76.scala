@@ -15,15 +15,13 @@ import org.apache.spark.sql.functions._
   *    convention). One rank window per flag + one broadcast join.
   */
 object Analytics76 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q237_tukey_fences" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val x = t(spark, dir, "lineitem")
         .select(col("l_returnflag").as("g"),
-          cents(col("l_extendedprice")).as("v"),
+          centsLong(col("l_extendedprice")).as("v"),
           col("l_orderkey"), col("l_linenumber"))
       val w = Window.partitionBy("g").orderBy(col("v"), col("l_orderkey"),
         col("l_linenumber"))

@@ -14,19 +14,17 @@ import org.apache.spark.sql.functions._
   *    are the 5 order priorities; rows are return flags.
   */
 object Analytics77 {
-  import Tables.t
+  import Tables.{centsDecimal, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q238_dynamic_pivot" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
       t(spark, dir, "lineitem")
         .join(broadcast(t(spark, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"))),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_returnflag"))
         .pivot(regexp_replace(col("o_orderpriority"), "[^A-Z]", ""))
-        .agg(sum(cents(col("l_extendedprice"))).cast("long"))
+        .agg(sum(centsDecimal(col("l_extendedprice"))).cast("long"))
         .orderBy("l_returnflag")
     }),
   )

@@ -19,18 +19,16 @@ import org.apache.spark.sql.functions._
   *    integer arithmetic on the 25-row grid after one fact groupBy.
   */
 object Analytics78 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q239_maxmin_fairshare" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val sup = broadcast(t(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey")))
       val demand = t(spark, dir, "lineitem")
         .join(sup, col("l_suppkey") === col("s_suppkey"))
         .groupBy("s_nationkey")
-        .agg(sum(cents(col("l_extendedprice"))).as("d"))
+        .agg(sum(centsLong(col("l_extendedprice"))).as("d"))
       val tot = demand.agg(expr("CAST(sum(d) div 2 AS BIGINT)").as("cap"),
         count(lit(1)).as("n"))
       val w = Window.orderBy(col("d"), col("s_nationkey"))

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    (sort_array on the packed rank key).
   */
 object Analytics79 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q240_interval_range_frame" -> ((spark, dir) => {
@@ -42,14 +42,12 @@ object Analytics79 {
     }),
 
     "q241_json_payload" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val sup = broadcast(t(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey")))
       val rev = t(spark, dir, "lineitem")
         .join(sup, col("l_suppkey") === col("s_suppkey"))
         .groupBy("s_nationkey", "s_suppkey")
-        .agg(sum(cents(col("l_extendedprice"))).as("rev"))
+        .agg(sum(centsLong(col("l_extendedprice"))).as("rev"))
       // pack (−rev, suppkey) so ascending sort_array = revenue desc
       rev.groupBy("s_nationkey")
         .agg(slice(sort_array(collect_list(

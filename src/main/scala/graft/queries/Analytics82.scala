@@ -15,18 +15,16 @@ import org.apache.spark.sql.functions._
   *    conditional aggregates on ONE scan.
   */
 object Analytics82 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   private val GridCents: Seq[Long] =
     Seq(100000L, 500000L, 1000000L, 2500000L, 5000000L)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q245_inverse_cdf" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val x = t(spark, dir, "lineitem")
         .select(col("l_returnflag").as("g"),
-          cents(col("l_extendedprice")).as("v"))
+          centsLong(col("l_extendedprice")).as("v"))
       val aggs = Seq(count(lit(1)).as("n")) ++ GridCents.map(th =>
         count_if(col("v") <= th).as(s"le_$th"))
       val wide = x.groupBy("g").agg(aggs.head, aggs.tail: _*)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    unpivot↔pivot inverse contract the reshape family relies on.
   */
 object Analytics85 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q249_partition_advisor" -> ((spark, dir) => {
@@ -47,15 +47,13 @@ object Analytics85 {
     }),
 
     "q250_reshape_roundtrip" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val wide = t(spark, dir, "orders")
         .join(broadcast(t(spark, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey"))),
           col("o_custkey") === col("c_custkey"))
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("m_orders"),
-          sum(cents(col("o_totalprice"))).as("m_spend"),
+          sum(centsLong(col("o_totalprice"))).as("m_spend"),
           countDistinct(col("o_custkey")).as("m_buyers"))
       val long = wide.select(col("c_nationkey"),
         expr("stack(3, 'm_orders', m_orders, 'm_spend', m_spend, " +

@@ -22,15 +22,13 @@ import org.apache.spark.sql.functions._
   *    sums, one float division at the end. Per return flag.
   */
 object Analytics86 {
-  import Tables.t
+  import Tables.{centsLong, t}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q251_cuped" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val o = t(spark, dir, "orders")
         .select(col("o_custkey"), to_date(col("o_orderdate")).as("d"),
-          cents(col("o_totalprice")).as("p"))
+          centsLong(col("o_totalprice")).as("p"))
       val cut = o.agg(date_sub(max(col("d")), 365).as("cutoff"))
       val per = o.crossJoin(broadcast(cut))
         .groupBy("o_custkey")
@@ -81,11 +79,9 @@ object Analytics86 {
     }),
 
     "q252_winsorized_mean" -> ((spark, dir) => {
-      val cents = (c: org.apache.spark.sql.Column) =>
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val x = t(spark, dir, "lineitem")
         .select(col("l_returnflag").as("g"),
-          cents(col("l_extendedprice")).as("v"),
+          centsLong(col("l_extendedprice")).as("v"),
           col("l_orderkey"), col("l_linenumber"))
       val w = Window.partitionBy("g").orderBy(col("v"), col("l_orderkey"),
         col("l_linenumber"))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * engines.
   */
 object TextOps {
-  import Tables.t
+  import Tables.{spread, t}
 
   /** Distinct word tokens of a document (texts are single-space separated). */
   private def toks(c: Column): Column = array_distinct(split(c, " "))
@@ -51,19 +51,6 @@ object TextOps {
     */
   private[queries] def shingles(text: Column): Column =
     graft.functions.ShinglesOf(split(text, " "), 3)
-
-  /** Spread a small single-file table across all cores before per-row-heavy
-    * work (shingling/hashing): a one-file parquet scan is one partition, so
-    * without this the whole map side runs single-threaded. Profiled 4.6s →
-    * 0.4s on the shingle explode at sf0.1. CONDITIONAL: when the input
-    * already has enough splits (the 100 TB case), this is the identity —
-    * an unconditional repartition would be a full shuffle of the corpus
-    * for nothing.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   /** doc_id + minhash signature columns mh0..mh7 over distinct shingles.
     *

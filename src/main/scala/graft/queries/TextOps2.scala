@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * partition-count-independent.
   */
 object TextOps2 {
-  import Tables.t
+  import Tables.{spread, t}
 
   /** Contamination n-gram width: 5-word shingles are selective enough
     * that only genuine near-duplicates collide (3-grams over a small
@@ -21,11 +21,6 @@ object TextOps2 {
     * published decontamination pipelines, scaled to these short docs.
     */
   private val ContamN = 5
-
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   /** Count-min cell coordinates for one token: depth KM-family md5 hash
     * rows × width buckets, as an array of (row_j, bucket) structs.

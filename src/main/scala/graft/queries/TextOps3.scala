@@ -22,12 +22,7 @@ import org.apache.spark.sql.functions._
   * engines and rounded before any ordering decision.
   */
 object TextOps3 {
-  import Tables.t
-
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
+  import Tables.{spread, t}
 
   /** Duplicate-span n-gram width: long enough (8 words) that a shared
     * span implies genuinely copied text rather than small-vocab chance

@@ -32,18 +32,13 @@ import org.apache.spark.sql.functions._
   *    duplicated-span census.
   */
 object TextOps5 {
-  import Tables.t
+  import Tables.{spread, t}
 
   /** Tokens per packed training sequence (d16). */
   val SeqCap = 256L
 
   /** n-gram width for the t20 novelty score. */
   val NovelN = 4
-
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Concat-and-chunk sequence packing: documents are laid out in

@@ -59,7 +59,7 @@ import graft.operators.BpeLearn
   *    planted-fixture codec device).
   */
 object TextOps74 {
-  import Tables.t
+  import Tables.{centsLong, t, wordCounts}
 
   // Fellegi–Sunter parameters: milli-log2(m/u) agreement/disagreement
   // weights per field plus the upper decision threshold — constants of
@@ -82,12 +82,6 @@ object TextOps74 {
     (((id * 29 + x * 11 + y * 7) % 256).toInt,
       ((id * 19 + x * 13 + y * 5) % 256).toInt,
       ((id * 7 + x * 3 + y * 17) % 256).toInt)
-
-  private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .select(explode(expr(
-        "regexp_extract_all(text, '[a-z]+', 0)")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t58_bpe_pair_stats" -> ((spark, dir) => {
@@ -123,18 +117,16 @@ object TextOps74 {
     }),
 
     "d59_fellegi_sunter" -> ((spark, dir) => {
-      def cents(c: org.apache.spark.sql.Column) =
-        (c.cast("decimal(18,2)") * 100).cast("long")
       val cust = t(spark, dir, "customer")
       val a = cust.select(col("c_custkey").as("ak"),
         col("c_name").as("an"),
-        cents(col("c_acctbal")).as("ab"),
+        centsLong(col("c_acctbal")).as("ab"),
         expr("c_custkey * 7919 % 1000000").as("as_"),
         col("c_nationkey").as("nk"), col("c_mktsegment").as("mk"))
       val b = cust.select(col("c_custkey").as("bk"),
         when(col("c_custkey") % 7 === 0, concat(col("c_name"), lit("x")))
           .otherwise(col("c_name")).as("bn"),
-        (cents(col("c_acctbal")) +
+        (centsLong(col("c_acctbal")) +
           when(col("c_custkey") % 13 === 0, 1L).otherwise(0L)).as("bb"),
         (expr("c_custkey * 7919 % 1000000") +
           when(col("c_custkey") % 17 === 0, 1L).otherwise(0L)).as("bs"),

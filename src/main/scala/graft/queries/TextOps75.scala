@@ -55,7 +55,7 @@ import graft.operators.BpeLearn
   *    blocked pairs.
   */
 object TextOps75 {
-  import Tables.t
+  import Tables.{t, wordCounts}
 
   private val GramDim = 64
   private val TLevels = 11 // balance levels 0..10 after the +100000 shift
@@ -70,12 +70,6 @@ object TextOps75 {
     (((id * 43 + x * 11 + y * 5) % 256).toInt,
       ((id * 29 + x * 7 + y * 13) % 256).toInt,
       ((id * 11 + x * 17 + y * 3) % 256).toInt)
-
-  private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .select(explode(expr(
-        "regexp_extract_all(text, '[a-z]+', 0)")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t63_bpe_encode" -> ((spark, dir) => {

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *    complement to m27's 3-band proof (same planted-fixture device).
   */
 object TextOps76 {
-  import Tables.t
+  import Tables.{t, wordCounts}
 
   private val GrayDocs = 30
 
@@ -41,12 +41,6 @@ object TextOps76 {
     ((id % 10 + 6).toInt, (id % 9 + 4).toInt)
   private def grayPx(id: Long, x: Int, y: Int): Int =
     ((id * 53 + x * 9 + y * 31) % 256).toInt
-
-  private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .select(explode(expr(
-        "regexp_extract_all(text, '[a-z]+', 0)")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t64_wordpiece_encode" -> ((spark, dir) => {

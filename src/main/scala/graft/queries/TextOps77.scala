@@ -29,13 +29,7 @@ import org.apache.spark.sql.functions._
   *    optimal costs, token counts, tie-breaks, and corpus totals.
   */
 object TextOps77 {
-  import Tables.t
-
-  private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .select(explode(expr(
-        "regexp_extract_all(text, '[a-z]+', 0)")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
+  import Tables.{t, wordCounts}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t65_unigram_viterbi" -> ((spark, dir) => {

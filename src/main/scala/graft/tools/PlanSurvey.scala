@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Whole-inventory physical-plan census: one row per driver query with
   * the operator counts that decide 100 TB viability (shuffle exchanges,
   * join strategies, windows, cartesian products). Emitted as
@@ -43,11 +41,8 @@ object PlanSurvey {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLAN_SURVEY.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // local[4] on every host, so PLAN_SURVEY.md does not depend on nproc
+    val spark = graft.GraftSession.builder("graft-plan-survey", cpus = 4)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {

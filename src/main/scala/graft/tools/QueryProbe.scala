@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -22,13 +21,7 @@ object QueryProbe {
     val names = args(0).split(",").map(_.trim).toSeq
     val iters = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
+    val builder = graft.GraftSession.builder("graft-query-probe")
     // hypothesis testing: PROBE_CONF="key=value;key=value" extra confs
     sys.env.get("PROBE_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>

@@ -2,15 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole forked test JVM. */
+/** One shared local SparkSession for the whole forked test JVM, pinned at
+  * `local[4]` whatever `SPARK_GRAFT_CPUS` says: the job-count pins in
+  * `ConnectedComponentsSpec` and `PageRankSpec` depend on it.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder("graft-tests", cpus = 4).getOrCreate()
 }
