@@ -22,54 +22,40 @@ final case class PipelineResult(
 object ClaimPipeline {
   private val logger = LoggerFactory.getLogger(getClass)
 
-  /** Read + normalize one input file, dispatched by extension
-    * (claim_pipeline.py:177-183): `.csv` → alpha, `.json` → beta, anything
-    * else warns and is skipped with no metrics effect (SURVEY §2.3 S10).
+  /** Read + normalize one input file through the `Normalize` reader of its
+    * format, dispatched by extension (claim_pipeline.py:177-183): `.csv` →
+    * alpha, `.json` → beta, anything else warns and is skipped with no
+    * metrics effect (SURVEY §2.3 S10).
     *
     * Returns the normalized frame with bookkeeping columns `_corrupt`,
-    * `_file_seq`, `_row_seq`. With `preserveOrder` the last two key each
-    * row by its position in the input (SURVEY §7.4 item 2), and the file is
-    * still read split-parallel: `monotonically_increasing_id` is
+    * `_file_seq`, `_row_seq`. The last two key each row by its position in
+    * the input (SURVEY §7.4 item 2), and the file is still read
+    * split-parallel: `monotonically_increasing_id` is
     * (partition index << 33) + position in the partition, and Spark numbers
     * one file's splits in offset order, so the id grows with the row's
     * position in the file. (Multi-line JSON and `wholetext` reads are one
-    * partition per file anyway.) Without `preserveOrder` `_row_seq` is 0.
+    * partition per file anyway.)
     */
   private def loadFile(spark: SparkSession, path: String, fileSeq: Int,
-      preserveOrder: Boolean, loaderParity: Boolean): Option[DataFrame] = {
+      loaderParity: Boolean): Option[DataFrame] = {
     val normalized =
-      if (path.endsWith(".csv"))
-        Some(Normalize.normalizeAlpha(
-          spark.read.option("header", "true").option("mode", "PERMISSIVE")
-            .csv(path)))
+      if (path.endsWith(".csv")) Some(Normalize.readAlpha(spark, path))
       else if (path.endsWith(".json"))
-        // loaderParity (S11): the VARIANT re-parse additionally flags
-        // records the reference loader would raise on as corrupt.
-        Some(Normalize.normalizeBeta(
-          if (loaderParity) Normalize.betaRawLoaderParity(spark, path)
-          else spark.read.option("multiLine", "true").option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .schema(Schemas.betaRaw).json(path)))
+        Some(Normalize.readBeta(spark, path, loaderParity))
       else {
         logger.warn(s"Unsupported file type: $path")
         None
       }
-    normalized.map { df =>
-      val seq =
-        if (preserveOrder) monotonically_increasing_id()
-        else lit(0L)
-      df.withColumn("_file_seq", lit(fileSeq)).withColumn("_row_seq", seq)
-    }
+    normalized.map(_.withColumn("_file_seq", lit(fileSeq))
+      .withColumn("_row_seq", monotonically_increasing_id()))
   }
 
   /** Run the pipeline over `files`, writing the pretty-JSON candidates array
     * and the metrics text file, and returning both materialized results.
     *
-    * Every file is read split-parallel. With `preserveInputOrder` the
-    * candidates are written in input order (files in argument order, rows
-    * in file order), restored on the driver from the `_file_seq`/`_row_seq`
-    * keys; without it they are written in the order the partitions return
-    * them.
+    * Every file is read split-parallel, and the candidates are written in
+    * input order (files in argument order, rows in file order), restored on
+    * the driver from the `_file_seq`/`_row_seq` keys.
     */
   def run(
       spark: SparkSession,
@@ -77,15 +63,12 @@ object ClaimPipeline {
       config: PipelineConfig = PipelineConfig(),
       outputPath: String = "resubmission_candidates.json",
       metricsPath: String = "pipeline_metrics.log",
-      preserveInputOrder: Boolean = true,
   ): PipelineResult = {
-    require(!config.bugCompatFileAbort || preserveInputOrder,
-      "bugCompatFileAbort needs per-file row order (preserveInputOrder)")
     var fileMalformed = 0L
     val frames = files.zipWithIndex.flatMap { case (path, i) =>
       // File-level error isolation (claim_pipeline.py:213-215): an unreadable
       // / missing file logs, counts one malformed, and is skipped.
-      try loadFile(spark, path, i, preserveInputOrder, config.bugCompatFileAbort)
+      try loadFile(spark, path, i, config.bugCompatFileAbort)
       catch {
         case e: Exception =>
           logger.warn(s"Failed to process file $path: ${e.getMessage}")
@@ -128,38 +111,20 @@ object ClaimPipeline {
           .drop("_abort_seq")
       }
 
-    // Derived columns share the classifier/age subtrees (see
-    // Eligibility.withDerived) — inlining eligible+exclusion expressions
-    // here doubled whole-stage-codegen compile time.
-    val derived = Eligibility.withDerived(claims, config)
-    val eligible = col("eligible")
-    val exclusion = col("exclusion_reason")
-
     val obs = Observation()
-    val metricExprs = PipelineMetrics.aggExprs(
-      eligible, exclusion, col("source_system"), col("_corrupt"))
-    val observed = derived.observe(obs, metricExprs.head, metricExprs.tail: _*)
-
-    val candidateCols = Seq(
-      col("claim_id"),
-      col("denial_reason").as("resubmission_reason"),
-      col("source_system"),
-      Eligibility.recommendedChanges(col("denial_reason"))
-        .as("recommended_changes"),
-    )
-    // Input-order keys: the sink sorts the collected rows by them on the
-    // driver and strips them (see Sinks.writeCandidatesPretty for why the
-    // order is not restored in Spark).
-    val orderKeys =
-      if (preserveInputOrder) Seq("_file_seq", "_row_seq") else Nil
-    val projected = observed
-      .filter(eligible && !claims("_corrupt"))
-      .select(candidateCols ++ orderKeys.map(col): _*)
+    val metricExprs = PipelineMetrics.aggExprs(col("eligible"),
+      col("exclusion_reason"), col("source_system"), col("_corrupt"))
+    val observed = Eligibility.withDerived(claims, config)
+      .observe(obs, metricExprs.head, metricExprs.tail: _*)
 
     // Single action: collect (bounded) candidates; the observe node sees every
-    // input row because the filter sits downstream of it.
-    val candidateRows =
-      Sinks.writeCandidatesPretty(projected, outputPath, orderKeys)
+    // input row because the candidate filter sits downstream of it. The sink
+    // sorts the collected rows by the input-order keys on the driver and
+    // strips them (see Sinks.writeCandidatesPretty for why the order is not
+    // restored in Spark).
+    val orderKeys = Seq("_file_seq", "_row_seq")
+    val candidateRows = Sinks.writeCandidatesPretty(
+      Eligibility.candidates(observed, orderKeys: _*), outputPath, orderKeys)
 
     val metrics = PipelineMetrics.fromObserved(
       obs.get, fileMalformed, config.bugCompatMetrics)

@@ -38,31 +38,6 @@ object Eligibility {
     coalesce(datediff(today, submittedAt) > config.minAgeDays, lit(false))
   }
 
-  /** Eligibility conjunction (claim_pipeline.py:134-145): denied status ∧
-    * patient present ∧ old enough ∧ classifier says retryable. Coalesced to
-    * false so a null status yields false like the Python predicate, not
-    * SQL-null.
-    */
-  def isEligible(df: DataFrame, config: PipelineConfig): Column =
-    coalesce(
-      df("status") === "denied" &&
-        df("patient_id").isNotNull &&
-        olderThan(df("submitted_at"), config) &&
-        classifyDenial(df("denial_reason")) === "retryable",
-      lit(false))
-
-  /** Exclusion attribution = FIRST failing rule in the reference's order
-    * (claim_pipeline.py:203-210; SURVEY §2.3 S8): not-denied →
-    * patient-missing → too-recent → non-retryable-or-ambiguous.
-    * Null for eligible rows.
-    */
-  def exclusionReason(df: DataFrame, config: PipelineConfig): Column =
-    when(isEligible(df, config), lit(null).cast("string"))
-      .when(df("status").isNull || df("status") =!= "denied", "not_denied_status")
-      .when(df("patient_id").isNull, "patient_id_missing")
-      .when(!olderThan(df("submitted_at"), config), "too_recent")
-      .otherwise("non-retryable_or_ambiguous")
-
   /** Recommendation lookup on lower(reason), with fallback
     * (claim_pipeline.py:147-150). A constant-map lookup — `element_at` on a
     * MapType literal returns null on miss, coalesced to the default.
@@ -74,15 +49,25 @@ object Eligibility {
       lit(Rules.DefaultRecommendation))
   }
 
-  /** Attach `classification`, `eligible`, `exclusion_reason` derived columns.
+  /** Attach `classification`, `eligible`, `exclusion_reason` derived columns
+    * — the one statement of the eligibility conjunction and the exclusion
+    * chain.
+    *
+    * `eligible` (claim_pipeline.py:134-145): denied status ∧ patient present
+    * ∧ old enough ∧ classifier says retryable, coalesced to false so a null
+    * status yields false like the Python predicate, not SQL-null.
+    * `exclusion_reason` is the FIRST failing rule in the reference's order
+    * (claim_pipeline.py:203-210; SURVEY §2.3 S8): not-denied →
+    * patient-missing → too-recent → non-retryable-or-ambiguous; null for
+    * eligible rows.
     *
     * The classifier and age predicate are computed ONCE as intermediate
-    * columns and referenced by the downstream expressions — inlining them
-    * (isEligible + exclusionReason each embed classifyDenial) quadruples
-    * the expression tree and was measured to cost ~3s of whole-stage
-    * codegen compilation alone. CollapseProject keeps non-cheap
-    * multiply-referenced aliases in their own projection, so the shared
-    * subtrees stay shared in the generated code.
+    * columns and referenced by the downstream expressions — restating them
+    * inside each derived column quadruples the expression tree and was
+    * measured to cost ~3s of whole-stage codegen compilation alone.
+    * CollapseProject keeps non-cheap multiply-referenced aliases in their
+    * own projection, so the shared subtrees stay shared in the generated
+    * code.
     */
   def withDerived(claims: DataFrame, config: PipelineConfig): DataFrame =
     claims
@@ -104,16 +89,19 @@ object Eligibility {
           .otherwise("non-retryable_or_ambiguous"))
       .drop("_old")
 
-  /** Candidate output projection (claim_pipeline.py:194-199): the reason keeps
-    * its original (trimmed) casing — SURVEY §2.3 S6.
+  /** Candidate output projection (claim_pipeline.py:194-199) over a
+    * [[withDerived]] frame: the eligible, non-corrupt rows as `claim_id`,
+    * `resubmission_reason`, `source_system`, `recommended_changes`. The
+    * reason keeps its original (trimmed) casing — SURVEY §2.3 S6. `keys`
+    * columns ride along after those four (the pipeline's input-order keys).
     */
-  def candidates(claims: DataFrame, config: PipelineConfig): DataFrame =
-    claims
-      .filter(isEligible(claims, config))
-      .select(
-        claims("claim_id"),
-        claims("denial_reason").as("resubmission_reason"),
-        claims("source_system"),
-        recommendedChanges(claims("denial_reason")).as("recommended_changes"),
-      )
+  def candidates(derived: DataFrame, keys: String*): DataFrame =
+    derived
+      .filter(col("eligible") && !col("_corrupt"))
+      .select(Seq(
+        col("claim_id"),
+        col("denial_reason").as("resubmission_reason"),
+        col("source_system"),
+        recommendedChanges(col("denial_reason")).as("recommended_changes"),
+      ) ++ keys.map(col): _*)
 }

@@ -5,10 +5,9 @@ package graft.claims
   * when no inputs are given. `spark-submit`-able.
   *
   * Every input is read with a parallel multi-split scan (16 MB splits so
-  * even one large file fans out). By default the candidates are then put
-  * back in the reference's input order on the driver, which keeps
-  * byte-level reference parity; `GRAFT_PRESERVE_ORDER=false` only drops
-  * that sort, so candidate order is the order the partitions return.
+  * even one large file fans out). The candidates are then put back in the
+  * reference's input order on the driver, which keeps byte-level
+  * reference parity.
   *
   * The library's bug-compat parity modes (SURVEY §2.3 S9/S11) are
   * reachable from the CLI too, so the reference's outputs reproduce
@@ -17,21 +16,16 @@ package graft.claims
   *    swallowed-KeyError metrics counters (claim_pipeline.py:198-205),
   *    e.g. `malformed: 5` on the sample data.
   *  - `GRAFT_BUG_COMPAT_FILE_ABORT=true` reproduces the mid-file abort
-  *    (claim_pipeline.py:213-215; requires order preservation, so it
-  *    refuses under GRAFT_PRESERVE_ORDER=false).
+  *    (claim_pipeline.py:213-215).
   */
 object Main {
-  /** The CLI's environment contract, separated for testability:
-    * returns (pipeline config, preserveInputOrder).
-    */
-  def configFromEnv(
-      env: Map[String, String]): (PipelineConfig, Boolean) = {
+  /** The CLI's environment contract, separated for testability. */
+  def configFromEnv(env: Map[String, String]): PipelineConfig = {
     def flag(name: String): Boolean =
       env.getOrElse(name, "false").toBoolean
-    (PipelineConfig(
+    PipelineConfig(
       bugCompatMetrics = flag("GRAFT_BUG_COMPAT_METRICS"),
-      bugCompatFileAbort = flag("GRAFT_BUG_COMPAT_FILE_ABORT")),
-      env.getOrElse("GRAFT_PRESERVE_ORDER", "true").toBoolean)
+      bugCompatFileAbort = flag("GRAFT_BUG_COMPAT_FILE_ABORT"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -40,15 +34,14 @@ object Main {
         "Usage error: graft.claims.Main <emr_alpha.csv> [emr_beta.json ...]")
       sys.exit(1)
     }
-    val (config, preserveOrder) = Main.configFromEnv(sys.env)
+    val config = Main.configFromEnv(sys.env)
     val spark = graft.GraftSession
       .builder("graft-claim-pipeline", master = sys.env.get("SPARK_MASTER"))
       .config("spark.sql.files.maxPartitionBytes", 16L * 1024 * 1024)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val result = ClaimPipeline.run(spark, args.toSeq, config = config,
-        preserveInputOrder = preserveOrder)
+      val result = ClaimPipeline.run(spark, args.toSeq, config = config)
       println(s"Output saved to ${result.outputPath}")
       println(result.metrics.render)
     } finally spark.stop()

@@ -9,6 +9,9 @@ import org.apache.spark.sql.functions._
   * `load_beta` (claim_pipeline.py:101-114) as pure Column-expression
   * projections — no UDFs, so whole-stage codegen and pushdown stay intact.
   *
+  * `readAlpha` and `readBeta` are the one reader per source format; the
+  * pipeline reads every input file through them.
+  *
   * Both loaders are *name-driven* like `csv.DictReader` / `dict.get`:
   * columns are matched by name, missing columns become null, extra columns
   * are ignored (SURVEY.md §1.2).
@@ -110,7 +113,7 @@ object Normalize {
       spark.read
         .option("header", "true")
         .option("mode", "PERMISSIVE")
-        .csv(path)).drop("_corrupt")
+        .csv(path))
 
   /** Raw beta frame re-parsed through Spark 4 VARIANT so that records the
     * reference loader would RAISE on are detectable (S11 bug-compat
@@ -131,7 +134,7 @@ object Normalize {
     * malformed. Documented divergence: Python treats empty containers
     * ([] / {}) as falsy dates; here any container date raises.
     */
-  def betaRawLoaderParity(spark: SparkSession, path: String): DataFrame = {
+  private def betaRawLoaderParity(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.option("wholetext", "true").text(path)
       .select(col("value").as("_raw"))
     val fileArr = try_parse_json(col("_raw")).try_cast("array<variant>")
@@ -174,15 +177,19 @@ object Normalize {
     * objects, hence `multiLine` (reference claim_pipeline.py:104).
     * PERMISSIVE + corrupt-record column: Spark degrades per *record* where
     * the reference aborts the rest of the file — strictly better recovery,
-    * documented divergence (SURVEY §7.4 item 4).
+    * documented divergence (SURVEY §7.4 item 4). With `loaderParity` (S11)
+    * the file is read through [[betaRawLoaderParity]] instead, which
+    * additionally flags the records the reference loader would raise on
+    * as corrupt.
     */
-  def readBeta(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(Schemas.betaRaw)
-      .json(path)
-    normalizeBeta(raw).drop("_corrupt")
-  }
+  def readBeta(spark: SparkSession, path: String,
+      loaderParity: Boolean): DataFrame =
+    normalizeBeta(
+      if (loaderParity) betaRawLoaderParity(spark, path)
+      else spark.read
+        .option("multiLine", "true")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .schema(Schemas.betaRaw)
+        .json(path))
 }

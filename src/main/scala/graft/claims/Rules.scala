@@ -63,7 +63,8 @@ object Rules {
   *                         (Normalize.betaRawLoaderParity); alpha CSV has
   *                         no Spark-detectable mid-file raise (csv-module
   *                         errors such as NUL bytes — documented
-  *                         divergence). Requires preserveInputOrder.
+  *                         divergence). Finds each file's first corrupt
+  *                         row by the input-order keys every run carries.
   */
 final case class PipelineConfig(
     today: LocalDate = Rules.DefaultToday,

@@ -43,22 +43,3 @@ object Schemas {
     StructField("source_system", StringType, nullable = false),
   ))
 }
-
-/** Typed view of a normalized claim (Dataset[Claim] when type safety helps). */
-final case class Claim(
-    claim_id: Option[String],
-    patient_id: Option[String],
-    procedure_code: Option[String],
-    denial_reason: Option[String],
-    status: Option[String],
-    submitted_at: Option[java.sql.Date],
-    source_system: String,
-)
-
-/** Output row of the resubmission pipeline (reference claim_pipeline.py:194-199). */
-final case class Candidate(
-    claim_id: Option[String],
-    resubmission_reason: Option[String],
-    source_system: String,
-    recommended_changes: String,
-)

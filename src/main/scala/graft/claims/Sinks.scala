@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.StructType
   * The candidates sink is a single pretty-printed JSON array
   * (claim_pipeline.py:218-220) — Spark's distributed `write.json` emits
   * JSON-lines part files, so for byte parity we render the (small, filtered)
-  * candidate set on the driver, with a size guard. The scalable alternative
-  * [[writeCandidatesDistributed]] keeps `df.write.json` for big outputs.
+  * candidate set on the driver, with a size guard: a candidate set larger
+  * than [[DriverCollectGuard]] rows is refused, not written.
   */
 object Sinks {
 
@@ -88,13 +88,6 @@ object Sinks {
     out.append("\n]")
   }
 
-  /** Render rows as one in-memory string (tests, small sets). */
-  def renderJsonArray(rows: Seq[Row]): String = {
-    val sw = new java.io.StringWriter(math.min(rows.size, 1 << 20) * 64)
-    renderJsonArrayTo(sw, rows)
-    sw.toString
-  }
-
   /** Pretty-JSON candidates sink (byte-parity path). Returns collected rows
     * so callers share the single action (reference returns the candidate
     * list too, claim_pipeline.py:233). The render streams through a
@@ -122,8 +115,8 @@ object Sinks {
         candidates.queryExecution.analyzed))
     val keyed = capped.collect()
     require(keyed.length <= DriverCollectGuard,
-      s"candidate set exceeds driver guard ($DriverCollectGuard rows); " +
-        "use writeCandidatesDistributed")
+      s"candidate set exceeds driver guard ($DriverCollectGuard rows): " +
+        "the pretty-JSON array is rendered on the driver")
     val rows = if (orderKeys.isEmpty) keyed else inKeyOrder(keyed, orderKeys)
     val out = Files.newBufferedWriter(Paths.get(path),
       StandardCharsets.UTF_8)
@@ -151,10 +144,6 @@ object Sinks {
     })
     rows.map(r => new GenericRowWithSchema(keep.map(r.get), outSchema): Row)
   }
-
-  /** Scalable sink: distributed JSON-lines (documented format divergence). */
-  def writeCandidatesDistributed(candidates: DataFrame, path: String): Unit =
-    candidates.write.mode("overwrite").json(path)
 
   /** Fixed-template metrics text sink (claim_pipeline.py:223-231). */
   def writeMetrics(metrics: PipelineMetrics, path: String): Unit =

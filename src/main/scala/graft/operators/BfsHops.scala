@@ -16,12 +16,14 @@ import org.apache.spark.sql.functions._
   * materialized once (Union re-execution guard), each iteration is one
   * join + one map-side-combinable min aggregation over the edge list,
   * the distance frame is node-bounded, and every iteration ends in a
-  * LAZY localCheckpoint materialized by the convergence count — one job
-  * per iteration that persists the checkpoint blocks and returns the
-  * scalar, while still truncating the two-consumer lineage that would
-  * otherwise double per step. The per-iteration convergence count is a
-  * driver-side scalar — the standard driver role in any iterative
-  * fixpoint.
+  * LAZY localCheckpoint materialized by the convergence count — the
+  * count's job persists the checkpoint blocks and returns the scalar
+  * (an eager checkpoint would cost a job more), while still truncating
+  * the two-consumer lineage that would otherwise double per step. AQE
+  * submits each shuffle-map and broadcast stage as its own job, so an
+  * iteration runs six Spark jobs (local[4], AQE on; `BfsHopsSpec` pins
+  * it). The per-iteration convergence count is a driver-side scalar —
+  * the standard driver role in any iterative fixpoint.
   */
 object BfsHops {
 
@@ -113,7 +115,9 @@ object BfsHops {
         .groupBy("src", "node").agg(min(col("dist")).as("dist"))
         .localCheckpoint(false)
       prevCount = curCount
-      curCount = dist.count() // one job: checkpoint blocks + the scalar
+      // The count's jobs also persist the checkpoint blocks: four jobs a
+      // round (local[4], AQE on; pinned in BfsHopsSpec).
+      curCount = dist.count()
       i += 1
     }
     if (curCount != prevCount)

@@ -17,11 +17,14 @@ import org.apache.spark.sql.functions._
   * each round is two semi-join-shaped filters + one map-side-combinable
   * degree count over the edge list, the node-state frame is
   * node-bounded, and every round ends in a LAZY localCheckpoint
-  * materialized by the removal count — one job per round that persists
-  * the checkpoint blocks and returns the scalar, while still truncating
-  * the two-consumer lineage that would otherwise double per step. The
-  * per-round removal count is a driver-side scalar — the standard
-  * driver role in any iterative fixpoint. Converges within |V| rounds.
+  * materialized by the removal count — the count's job persists the
+  * checkpoint blocks and returns the scalar (an eager checkpoint would
+  * cost a job more), while still truncating the two-consumer lineage
+  * that would otherwise double per step. AQE submits each shuffle-map
+  * and broadcast stage as its own job, so a round runs about eight Spark
+  * jobs (local[4], AQE on; `KCoreSpec` pins it). The per-round removal
+  * count is a driver-side scalar — the standard driver role in any
+  * iterative fixpoint. Converges within |V| rounds.
   */
 object KCore {
 

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * single-edge extension. The frame is the SPARSE set of reached pairs
   * (|V|²-bounded, never a dense matrix), every round collapses through
   * one distinct(), and each round ends in a LAZY localCheckpoint whose
-  * materialization is driven by the convergence count — one job per
-  * round (the count action is the first computation of the marked RDD,
-  * so it persists the checkpoint blocks and returns the scalar in the
-  * same job), while still truncating the self-join lineage that would
-  * otherwise double per step. Row-count stability is the fixpoint test
+  * materialization is driven by the convergence count (the count action
+  * is the first computation of the marked RDD, so it persists the
+  * checkpoint blocks and returns the scalar without a job of its own),
+  * while still truncating the self-join lineage that would otherwise
+  * double per step. AQE submits each shuffle-map and broadcast stage as
+  * its own job, so a round runs six Spark jobs on small frames
+  * (local[4], AQE on; `TransitiveClosureSpec` pins it). Row-count stability is the fixpoint test
   * (pairs only ever accumulate), with the count as the standard
   * driver-side convergence scalar.
   */
@@ -48,7 +50,7 @@ object TransitiveClosure {
         .select(col("p.src").as("src"), col("q.dst").as("dst"))
       r = r.union(composed).distinct().localCheckpoint(false)
       prev = cur
-      cur = r.count() // one job: materializes the checkpoint + the scalar
+      cur = r.count() // materializes the checkpoint + the scalar
       i += 1
     }
     if (cur != prev)

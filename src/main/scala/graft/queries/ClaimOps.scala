@@ -118,8 +118,9 @@ object ClaimOps {
 
     // O12+O13+O15: eligibility conjunction + first-failing-rule attribution.
     "c4_eligibility" -> ((spark, dir) => {
-      // withDerived shares the classifier/age subtrees across the derived
-      // columns — inlining exclusionReason directly was ~3s of codegen.
+      // withDerived is the one statement of the conjunction and the
+      // exclusion chain; it computes the classifier and age predicate once
+      // and shares them (restating them per column costs ~3s of codegen).
       val derived = Eligibility.withDerived(
         synthClaims(spark, dir), PipelineConfig())
       derived

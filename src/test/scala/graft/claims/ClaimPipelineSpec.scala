@@ -73,27 +73,6 @@ class ClaimPipelineSpec extends AnyFunSuite {
       "non-retryable_or_ambiguous" -> 1, "malformed" -> 0))
   }
 
-  test("scale path (preserveInputOrder=false) yields the same candidate set and metrics") {
-    val dir = tmpDir()
-    val files = Seq(
-      write(dir, "emr_alpha.csv", alphaCsv), write(dir, "emr_beta.json", betaJson))
-    val out = tmpDir()
-    val result = ClaimPipeline.run(spark, files, PipelineConfig(),
-      outputPath = out.resolve("cands.json").toString,
-      metricsPath = out.resolve("metrics.log").toString,
-      preserveInputOrder = false)
-    val got = result.candidates
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-      .toSet
-    assert(got === Set(
-      ("A123", "Missing modifier", "alpha", "Add correct CPT modifier, resubmit"),
-      ("A124", "Incorrect NPI", "alpha", "Review provider NPI, correct and resubmit"),
-      ("A127", "Prior auth required", "alpha", "Obtain/attach prior authorization and resubmit"),
-      ("B988", "Missing modifier", "beta", "Add correct CPT modifier, resubmit")))
-    assert(result.metrics.totalProcessed === 9)
-    assert(result.metrics.flaggedForResubmission === 4)
-  }
-
   test("combined run with bugCompatMetrics reproduces as-implemented routing (S9)") {
     val dir = tmpDir()
     val result = runPipeline(
@@ -107,20 +86,18 @@ class ClaimPipelineSpec extends AnyFunSuite {
 
   test("CLI env contract: GRAFT_BUG_COMPAT_* flags reach the pipeline " +
       "config, and the metrics-mode run reproduces malformed: 5") {
-    val (defaults, defOrder) = Main.configFromEnv(Map.empty)
-    assert(defaults === PipelineConfig() && defOrder,
-      "no env → library defaults, order-preserving")
-    val (cfg, order) = Main.configFromEnv(Map(
+    assert(Main.configFromEnv(Map.empty) === PipelineConfig(),
+      "no env → library defaults")
+    val cfg = Main.configFromEnv(Map(
       "GRAFT_BUG_COMPAT_METRICS" -> "true",
       "GRAFT_BUG_COMPAT_FILE_ABORT" -> "true"))
-    assert(cfg.bugCompatMetrics && cfg.bugCompatFileAbort && order)
+    assert(cfg.bugCompatMetrics && cfg.bugCompatFileAbort)
     // the exact config the CLI builds under GRAFT_BUG_COMPAT_METRICS=true
     // reproduces the reference's counter-key routing on the sample data
     val dir = tmpDir()
     val result = ClaimPipeline.run(spark,
       Seq(write(dir, "a.csv", alphaCsv), write(dir, "b.json", betaJson)),
-      config = Main.configFromEnv(
-        Map("GRAFT_BUG_COMPAT_METRICS" -> "true"))._1,
+      config = Main.configFromEnv(Map("GRAFT_BUG_COMPAT_METRICS" -> "true")),
       outputPath = s"$dir/cands.json", metricsPath = s"$dir/metrics.log")
     assert(result.metrics.excludedByReason("malformed") === 5)
   }

@@ -32,7 +32,7 @@ class ClaimStreamSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(rawSchema)
       .option("header", "true").csv(dir.toString)
     val candidates = Eligibility.candidates(
-      Normalize.normalizeAlpha(stream), PipelineConfig())
+      Eligibility.withDerived(Normalize.normalizeAlpha(stream), PipelineConfig()))
 
     val q = candidates.writeStream.format("memory")
       .queryName("claim_stream").outputMode("append").start()
@@ -68,23 +68,5 @@ class ClaimStreamSpec extends AnyFunSuite {
         |FROM claims GROUP BY status ORDER BY status""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(got === Array(("approved", 1L, 0L), ("denied", 1L, 1L)))
-  }
-
-  test("typed Dataset API round-trips claims and candidates") {
-    val dir = Files.createTempDirectory("typed")
-    val p = dir.resolve("a.csv")
-    Files.write(p,
-      """claim_id,patient_id,procedure_code,denial_reason,submitted_at,status
-        |A1,P1,99213,Missing modifier,2025-07-01,denied
-        |A2,,99213,Missing modifier,2025-07-01,denied
-        |""".stripMargin.getBytes(StandardCharsets.UTF_8))
-    val claims = TypedApi.readAlphaTyped(spark, p.toString)
-    val collected: Seq[Claim] = claims.collect().toSeq
-    assert(collected.map(_.claim_id) === Seq(Some("A1"), Some("A2")))
-    assert(collected.forall(_.source_system == "alpha"))
-
-    val cands: Seq[Candidate] = TypedApi.candidatesTyped(claims).collect().toSeq
-    assert(cands.map(_.claim_id) === Seq(Some("A1")))
-    assert(cands.head.recommended_changes === "Add correct CPT modifier, resubmit")
   }
 }

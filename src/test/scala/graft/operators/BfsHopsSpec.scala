@@ -62,4 +62,38 @@ class BfsHopsSpec extends AnyFunSuite {
       .toMap
     assert(got(0L) === 0L && got(7L) === -1L && got(8L) === -1L)
   }
+
+  // The pins below allow two jobs of slack: AQE now and then submits one
+  // job more in a run. A checkpoint made eager adds a job per iteration,
+  // six in all, which the slack does not absorb.
+
+  test("each extra BFS iteration runs six Spark jobs") {
+    import spark.implicits._
+    // A directed k-node chain from source 0 settles one node per
+    // iteration and needs one more to see no change: k iterations, so
+    // chains of 6 and 12 nodes differ by 6. The lazy checkpoint folds its
+    // materialization into the convergence count, but AQE submits each
+    // shuffle-map and broadcast stage as its own job (local[4], AQE on).
+    def jobs(k: Int): Int = graft.JobCounter(spark) {
+      BfsHops.hops((0L until k - 1L).map(i => (i, i + 1)).toDF("s", "d"),
+        "s", "d", source = 0L).collect()
+    }._2
+    val (short, long) = (jobs(6), jobs(12))
+    assert(math.abs(long - short - 6 * 6) <= 2,
+      s"6-node chain: $short jobs, 12-node chain: $long")
+  }
+
+  test("each extra all-pairs round runs four Spark jobs") {
+    import spark.implicits._
+    // An undirected n-node path has diameter n - 1; the reached-pair
+    // frame grows for n - 1 rounds and one more sees no new pair, so
+    // paths of 6 and 12 nodes differ by 6 rounds.
+    def jobs(n: Int): Int = graft.JobCounter(spark) {
+      BfsHops.allPairs((0L until n - 1L).map(i => (i, i + 1)).toDF("a", "b"),
+        "a", "b").collect()
+    }._2
+    val (short, long) = (jobs(6), jobs(12))
+    assert(math.abs(long - short - 6 * 4) <= 2,
+      s"6-node path: $short jobs, 12-node path: $long")
+  }
 }

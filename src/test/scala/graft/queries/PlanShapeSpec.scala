@@ -10,17 +10,30 @@ class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
   private val Sf = "/root/testdata/sf0.001"
 
+  // SparkEntry.queries merges every module's map on each call: once here.
+  private lazy val queries = graft.SparkEntry.queries
+
   private def plan(name: String): String =
-    graft.SparkEntry.queries(name)(spark, Sf)
-      .queryExecution.executedPlan.toString
+    queries(name)(spark, Sf).queryExecution.executedPlan.toString
+
+  /** Per query, in name order: (plans a CartesianProduct, number of
+    * unpartitioned windows). Building a query runs its eager legs, so the
+    * two inventory-wide tests share this one pass. Only these small
+    * findings are kept: a retained plan would pin its checkpoint blocks.
+    */
+  private lazy val inventory: Seq[(String, Boolean, Int)] =
+    queries.keys.toSeq.sorted.map { name =>
+      val p = queries(name)(spark, Sf).queryExecution.executedPlan
+      (name, p.toString.contains("CartesianProduct"),
+        graft.tools.PlanSurvey.unpartitionedWindows(p))
+    }
 
   test("no query in the inventory plans a CartesianProduct") {
     // s1 deliberately broadcasts its 10-row probe set (a
     // BroadcastNestedLoopJoin, fine); an unpartitioned CartesianProduct
     // anywhere is a scale bug.
-    graft.SparkEntry.queries.keys.foreach { name =>
-      assert(!plan(name).contains("CartesianProduct"),
-        s"$name plans a CartesianProduct")
+    inventory.foreach { case (name, cartesian, _) =>
+      assert(!cartesian, s"$name plans a CartesianProduct")
     }
   }
 
@@ -329,16 +342,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // sweeps, top-k shortlists) — NEVER fact or value grain. Adding a
     // name here requires stating the bound.
     val allowed = PlanShapeSpec.BoundedGlobalWindowQueries
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach {
-      case (name, _) =>
-        val uw = graft.tools.PlanSurvey.unpartitionedWindows(
-          graft.SparkEntry.queries(name)(spark, Sf)
-            .queryExecution.executedPlan)
-        if (!allowed(name))
-          assert(uw == 0,
-            s"$name plans $uw unpartitioned window(s) — single-task " +
-              "sort at scale; use GlobalPrefixSum or add a bound " +
-              "justification to the allowlist")
+    inventory.foreach { case (name, _, uw) =>
+      if (!allowed(name))
+        assert(uw == 0,
+          s"$name plans $uw unpartitioned window(s) — single-task " +
+            "sort at scale; use GlobalPrefixSum or add a bound " +
+            "justification to the allowlist")
     }
   }
 }
