@@ -35,17 +35,27 @@ object Normalize {
   /** Null-safe lowercase (reference `to_lower`, claim_pipeline.py:67-69). */
   def lowerNorm(c: Column): Column = lower(trimToNull(c))
 
-  /** Try `yyyy-MM-dd`, then ISO date-time; unparseable/blank → null
-    * (reference `to_iso_date`, claim_pipeline.py:47-57). `try_to_date`
-    * returns null on mismatch (ANSI-safe), mirroring the try/except chain.
+  /** `yyyy-MM-dd` or ISO date-time; unparseable/blank → null (reference
+    * `to_iso_date`, claim_pipeline.py:47-57, which tries the date and then
+    * the date-time format). `try_to_date` returns null on mismatch
+    * (ANSI-safe), mirroring the try/except chain.
+    *
+    * Each value is parsed once, with the one format that can accept it:
+    * the date format has no letter, so it rejects any value holding a `T`;
+    * the date-time format needs its literal `T`, which Spark's
+    * case-insensitive parser also matches as `t`, so it rejects any value
+    * holding neither. Trying both on every value, as a `coalesce` would,
+    * gives the same dates and throws and catches a parse exception for
+    * every date-time value.
     *
     * Parses the RAW value, not a trimmed one: strptime rejects
     * whitespace-padded dates (' 2025-07-10' → ValueError → None in the
     * reference), so trimming first would flip older_than for such rows.
     */
   def parseDate(c: Column): Column =
-    coalesce(try_to_date(c, "yyyy-MM-dd"),
+    when(c.contains("T") || c.contains("t"),
       try_to_date(c, "yyyy-MM-dd'T'HH:mm:ss"))
+      .otherwise(try_to_date(c, "yyyy-MM-dd"))
 
   /** Alpha-only "None"-literal scrub: after trim, a value whose lowercase is
     * "none" becomes null (claim_pipeline.py:86-89). Beta error_msg is only

@@ -244,6 +244,16 @@ class ClaimPipelineSpec extends AnyFunSuite {
     assert(abort.metrics.totalProcessed === 9)
   }
 
+  test("a run over a CSV and a JSON file is two Spark jobs: the CSV " +
+      "header read and the candidate job") {
+    val dir = tmpDir()
+    val files = Seq(write(dir, "a.csv", alphaCsv), write(dir, "b.json", betaJson))
+    val (result, jobs) = graft.JobCounter(spark)(runPipeline(files))
+    assert(result.candidates.map(_.getString(0)) ===
+      Seq("A123", "A124", "A127", "B988"))
+    assert(jobs === 2)
+  }
+
   test("empty input list yields empty outputs") {
     val result = runPipeline(Seq.empty)
     assert(result.candidates.isEmpty)

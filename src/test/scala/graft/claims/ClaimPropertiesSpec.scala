@@ -163,4 +163,33 @@ class ClaimPropertiesSpec extends AnyFunSuite {
       assert(gd === mDate(d), s"beta date mismatch case $i: $d")
     }
   }
+
+  test("parseDate value table: an ISO date, or an ISO date-time with T or t") {
+    val table = Seq[(String, String)](
+      "2025-07-01" -> "2025-07-01",
+      "2025-07-01T10:11:12" -> "2025-07-01",
+      "2025-07-01t10:11:12" -> "2025-07-01",
+      "2024-02-29" -> "2024-02-29",
+      (null, null),
+      "" -> null,
+      " 2025-07-01" -> null,
+      "2025-07-01 " -> null,
+      "2025-7-1" -> null,
+      "2025-07-01T10:11" -> null,
+      "2025-07-01T10:11:12Z" -> null,
+      "2025-07-01T10:11:12.5" -> null,
+      "2025-02-29" -> null,
+      "2025-06-31" -> null,
+      "2025-07-01T25:00:00" -> null,
+      "2025-07-01T" -> null,
+      "T" -> null,
+      "07/01/2025" -> null)
+    val raw = spark.createDataFrame(
+      java.util.Arrays.asList(table.map(t => Row(t._1)): _*),
+      StructType(Seq(StructField("v", StringType))))
+    val got = raw
+      .select(col("v"), Normalize.parseDate(col("v")).cast("string"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(got === table)
+  }
 }
