@@ -38,15 +38,8 @@ object Analytics110 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q293_fixedwidth_source" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      import java.nio.file.Files
+      val base = Tables.freshFwBase("graft_fw", dir)
       val schema = graft.sources.FixedWidth.parseSchema(FwSchema)
       // Double.toString → parse round-trips exactly, so the re-read
       // acctbal is bit-identical to the parquet value DuckDB reads.
@@ -106,15 +99,8 @@ object Analytics110 {
     // 100 TB fixed-width dataset costs one directory listing and zero
     // record IO. FixedWidthSpec asserts the metadata-only path engaged.
     "q300_fw_count_pushdown" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_cnt", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      import java.nio.file.Files
+      val base = Tables.freshFwBase("graft_fw_cnt", dir)
       val schema = graft.sources.FixedWidth.parseSchema(FwSchema)
       val rows = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
@@ -168,15 +154,7 @@ object Analytics110 {
     // Delta-style reproducibility contract a 100 TB training-data
     // pipeline needs to re-run yesterday's job on yesterday's table.
     "q359_fw_time_travel" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_tt", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_tt", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -214,15 +192,7 @@ object Analytics110 {
     // CONTENTS each pin must resolve to, so the hash match is the
     // timestamp→version mapping theorem.
     "q373_fw_timestamp_travel" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_tts", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_tts", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -307,15 +277,7 @@ object Analytics110 {
     // contents exactly (the oracle replays them); the history surface
     // pins that exactly two versions remain.
     "q375_fw_rollback" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_rollback", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_rollback", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -355,15 +317,7 @@ object Analytics110 {
     // parquet: a downstream job can process yesterday→today's additions
     // without re-reading the 100 TB base.
     "q360_fw_incremental" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_cdc", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_cdc", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -392,15 +346,7 @@ object Analytics110 {
     // column from the fixture predicate: commit sizes are supplier
     // counts, bytes are records x the 55-byte record length.
     "q361_fw_history" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_hist", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_hist", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -429,15 +375,7 @@ object Analytics110 {
     // v2 holds exactly v1's record count, both read from the
     // metadata-only history surface.
     "q362_fw_compaction" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_opt", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_opt", dir)
       t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -478,15 +416,7 @@ object Analytics110 {
     // original, so the hash match proves update-in-place, insert, and
     // untouched-row preservation simultaneously.
     "q363_fw_merge" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_mrg", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_mrg", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -522,15 +452,7 @@ object Analytics110 {
     // no-ops. The oracle replays the erasure as an anti-filter over the
     // parquet original.
     "q364_fw_delete" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_del", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_del", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -694,15 +616,7 @@ object Analytics110 {
     // parquet; the hash match proves the narrowed window loses and
     // duplicates nothing, including both boundary records.
     "q369_fw_sorted_seek" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_seek", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_seek", dir)
       t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -729,15 +643,7 @@ object Analytics110 {
     // data was touched. The oracle replays the aggregates and pins the
     // history row's arithmetic (records, bytes at 55 B/record).
     "q370_fw_vacuum" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fw_vac", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_fw_vac", dir)
       val src = t(spark, dir, "supplier")
         .filter(col("s_suppkey") <= FwFixtureMaxKey)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

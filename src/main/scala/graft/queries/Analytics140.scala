@@ -74,16 +74,8 @@ object Analytics140 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m27_imageio_decode" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m27", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m27", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < ImgDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))
@@ -117,16 +109,8 @@ object Analytics140 {
     }),
 
     "m28_wav_decode" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m28", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m28", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < WavDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))
@@ -175,16 +159,8 @@ object Analytics140 {
     }),
 
     "m29_image_ahash_dups" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m29", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m29", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < AHashDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))

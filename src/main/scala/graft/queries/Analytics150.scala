@@ -33,16 +33,8 @@ object Analytics150 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m34_audio_resample" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m34", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m34", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < WavDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))

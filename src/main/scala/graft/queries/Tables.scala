@@ -18,13 +18,9 @@ object Tables {
     import java.nio.file.{Files, Paths}
     val base = Paths.get(System.getProperty("java.io.tmpdir"),
       tag, Paths.get(dir).getFileName.toString)
-    def nuke(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(nuke)
-      f.delete()
-    }
     if (Files.exists(base))
-      Option(base.toFile.listFiles()).getOrElse(Array.empty).foreach(nuke)
+      Option(base.toFile.listFiles()).getOrElse(Array.empty)
+        .foreach(graft.sources.FwFiles.deleteTree)
     Files.createDirectories(base)
     base
   }

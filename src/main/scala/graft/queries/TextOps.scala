@@ -665,15 +665,8 @@ object TextOps {
     // binaryFile scan something real to ingest; the scratch dir is wiped
     // first so stale files can't pollute the scan.
     "m5_binary_ingest" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m5", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      import java.nio.file.Files
+      val base = Tables.freshFwBase("graft_m5", dir)
       t(spark, dir, "documents")
         .filter(col("doc_id") < 50 && col("text").isNotNull)
         .select("doc_id", "text").collect()

@@ -155,16 +155,8 @@ object TextOps74 {
     }),
 
     "m30_image_resize" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m30", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m30", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < RszDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))

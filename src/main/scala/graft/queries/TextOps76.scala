@@ -104,16 +104,8 @@ object TextOps76 {
     // complement to m27's 3-band proof, replayed by the oracle from the
     // planted formula
     "m32_grayscale_decode" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m32", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m32", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < GrayDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))

@@ -38,16 +38,8 @@ object TextOps81 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m33_sobel_edges" -> ((spark, dir) => {
-      import java.nio.file.{Files, Paths}
       import spark.implicits._
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_m33", Paths.get(dir).getFileName.toString)
-      if (Files.exists(base)) {
-        val listing = Files.list(base)
-        try listing.forEach(p => Files.deleteIfExists(p))
-        finally listing.close()
-      }
-      Files.createDirectories(base)
+      val base = Tables.freshFwBase("graft_m33", dir)
       val ids = t(spark, dir, "documents")
         .filter(col("doc_id") < SobelDocs)
         .select(col("doc_id")).distinct().collect().map(_.getLong(0))

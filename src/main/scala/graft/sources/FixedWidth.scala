@@ -677,7 +677,7 @@ private[sources] class FwStreamingWrite(schema: StructType, path: String)
       if (FwEpochs.committed(path, epochId)) {
         // restart replay of a recorded epoch: sweep, publish nothing
         messages.foreach {
-          case FwCommitMessage(tmp) => new java.io.File(tmp).delete()
+          case FwCommitMessage(tmp) => FwPublish.sweep(tmp)
           case _ => ()
         }
       } else {
@@ -691,13 +691,7 @@ private[sources] class FwStreamingWrite(schema: StructType, path: String)
         }
         messages.foreach {
           case FwCommitMessage(tmp) =>
-            val f = new java.io.File(tmp)
-            if (f.exists()) {
-              val target = new java.io.File(f.getParentFile,
-                f.getName.stripSuffix(".tmp"))
-              require(f.renameTo(target),
-                s"could not publish $tmp -> $target")
-            }
+            if (new java.io.File(tmp).exists()) FwPublish.publish(tmp)
           case _ => () // defensive: never MatchError a commit path
         }
         FwEpochs.record(path, epochId)
@@ -706,7 +700,7 @@ private[sources] class FwStreamingWrite(schema: StructType, path: String)
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case FwCommitMessage(tmp) => new java.io.File(tmp).delete()
+      case FwCommitMessage(tmp) => FwPublish.sweep(tmp)
       case _ => ()
     }
 }
@@ -746,16 +740,8 @@ private[sources] object FwEpochs {
 
   def record(path: String, epochId: Long): Unit = {
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
     val epochs = (read(path) :+ epochId).sorted.takeRight(Retain)
-    val target = fileFor(path)
-    val tmp = new java.io.File(target.getPath + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      JsonMethods.compact(JsonMethods.render("epochs" -> epochs))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    FwPublish.writeJson(fileFor(path), "epochs" -> epochs)
   }
 }
 
@@ -852,46 +838,25 @@ private[sources] class FwBatchWrite(schema: StructType, path: String,
           FwFiles.listPartitioned(path, c).map(_._2)) ++
         bucketBy.toSeq.flatMap(_ =>
           FwFiles.listPartitioned(path, "bucket").map(_._2))
-      all.foreach { f =>
-        new java.io.File(FwStats.sidecarFor(f.getPath)).delete()
-        FwDv.delete(f.getPath)
-        f.delete()
-      }
+      all.foreach(FwPublish.remove)
       // every file is gone: stale name→schema-version stamps must go
       // too, or a recycled name would inherit the wrong layout
       FwSchemaLog.purgeFiles(path)
     }
-    messages.flatMap(tmps).foreach { tmp =>
-      val f = new java.io.File(tmp)
-      // target lives next to its tmp (the partition subdir for
-      // partitioned writes, the table dir otherwise)
-      val target = new java.io.File(f.getParentFile,
-        f.getName.stripSuffix(".tmp"))
-      require(f.renameTo(target), s"could not publish $tmp -> $target")
-      val statsTmp = new java.io.File(
-        FwStats.sidecarFor(tmp.stripSuffix(".tmp")) + ".tmp")
-      if (statsTmp.isFile) {
-        val statsTarget = new java.io.File(statsTmp.getParentFile,
-          statsTmp.getName.stripSuffix(".tmp"))
-        require(statsTmp.renameTo(statsTarget),
-          s"could not publish $statsTmp -> $statsTarget")
-      }
-    }
+    // target lives next to its tmp (the partition subdir for
+    // partitioned writes, the table dir otherwise)
+    messages.flatMap(tmps).foreach(FwPublish.publish(_: String))
     // every successful batch commit is a snapshot version: the manifest
     // records the full post-commit file set for VERSION AS OF reads.
     // Partitioned/bucketed tables do not version (their layout is the
     // directory tree; snapshot pinning is a flat-table contract).
     if (partitionBy.isEmpty && bucketBy.isEmpty)
-      FwVersions.commitSnapshotLocked(path, Set.empty, txn, stage,
-        if (truncateFirst) "overwrite" else "append")
+      FwVersions.commitSnapshotLocked(path, txn = txn, stageBranch = stage,
+        op = if (truncateFirst) "overwrite" else "append")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.flatMap(tmps).foreach { tmp =>
-      new java.io.File(tmp).delete()
-      new java.io.File(
-        FwStats.sidecarFor(tmp.stripSuffix(".tmp")) + ".tmp").delete()
-    }
+    messages.flatMap(tmps).foreach(FwPublish.sweep)
     // Message-less stragglers: a task whose commit raced the job abort
     // published no message, but its tmps carry this write's tag — sweep
     // them by name. Other writers' tags never match, so legal
@@ -1239,8 +1204,7 @@ private[sources] class FwDataWriter(schema: StructType, path: String,
       // it records the data file's byte length so a later in-place
       // append (streaming producers) invalidates it instead of feeding
       // stale envelopes to pruning/pushdown
-      FwStats.write(
-        FwStats.sidecarFor(tmp.getPath.stripSuffix(".tmp")) + ".tmp",
+      FwStats.write(FwPublish.stagedSidecar(tmp.getPath),
         stats, tmp.length(),
         if (sortedOk && sortedIdx >= 0) sortedBy else None,
         // the write layout IS the physical head for mapped tables
@@ -1251,9 +1215,7 @@ private[sources] class FwDataWriter(schema: StructType, path: String,
   }
   override def abort(): Unit = {
     out.close()
-    tmp.delete()
-    new java.io.File(
-      FwStats.sidecarFor(tmp.getPath.stripSuffix(".tmp")) + ".tmp").delete()
+    FwPublish.sweep(tmp.getPath)
   }
   override def close(): Unit = ()
 }
@@ -2315,7 +2277,7 @@ private[sources] object FwSeek {
   }
 }
 
-private[sources] object FwFiles {
+private[graft] object FwFiles {
   /** The LIVE file listing: every published `.fw` in the directory
     * EXCEPT files a copy-on-write rewrite has superseded (referenced
     * by some manifest version but not the newest — retained on disk
@@ -2324,16 +2286,26 @@ private[sources] object FwFiles {
     * referenced (hand-built fixtures, streaming epochs before a batch
     * commit) are always live.
     */
-  def list(path: String): Array[java.io.File] = {
+  def list(path: String): Array[java.io.File] =
+    list(path, FwVersions.read(path))
+
+  /** [[list]] against manifest `versions` the caller already read. */
+  def list(path: String, versions: Seq[FwVersion]): Array[java.io.File] = {
     val physical = listPhysical(path)
-    val versions = FwVersions.read(path)
     if (versions.isEmpty) physical
     else {
-      val latest = versions.maxBy(_._1)._2.map(_._1).toSet
-      val ever = versions.flatMap(_._2.map(_._1)).toSet
+      val latest = versions.maxBy(_.v).files.map(_._1).toSet
+      val ever = versions.flatMap(_.files.map(_._1)).toSet
       physical.filter(f =>
         latest.contains(f.getName) || !ever.contains(f.getName))
     }
+  }
+
+  /** Delete `f`, and everything under it when it is a directory. */
+  def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
+    f.delete()
   }
 
   /** Every `.fw` on disk, superseded history included — for sweepers
@@ -2366,7 +2338,7 @@ private[sources] object FwFiles {
   }
 
   /** The batch-read file listing, optionally pinned to a snapshot
-    * version from the `_fw_versions.json` manifest. A live listing
+    * version from the manifest ([[FwVersions]]). A live listing
     * carries current byte lengths; a versioned listing carries the
     * MANIFEST's recorded lengths — snapshot-prefix semantics: a file an
     * external producer later grew in place still reads as exactly the
@@ -2467,7 +2439,6 @@ private[sources] class FwHistoryTable(dataSchema: StructType, path: String)
           .map(l => FixedWidth.widths(l.headSchema).sum + 1L)
           .getOrElse(FixedWidth.widths(dataSchema).sum + 1L)
         val dir = new java.io.File(path)
-        val ops = FwVersions.readOps(path)
         val manifest = FwVersions.read(path)
         def lenOf(n: String, b: Long): Long =
           if (b >= 0) b else new java.io.File(dir, n).length()
@@ -2477,13 +2448,13 @@ private[sources] class FwHistoryTable(dataSchema: StructType, path: String)
         // change feed actually emits (FwCdf.partitionsBetween dedups
         // overlapping same-version entries the same way)
         val dvByVersion: Map[Long, Long] = manifest
-          .flatMap(_._2.map(_._1)).distinct
+          .flatMap(_.files.map(_._1)).distinct
           .flatMap(n => FwDv.read(new java.io.File(dir, n).getPath)
             .groupBy(_._1).map { case (since, es) =>
               (since, es.flatMap(_._2).distinct.length.toLong) })
           .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).sum }
         var prev = Map.empty[String, Long]
-        val rows = manifest.map { case (v, files) =>
+        val rows = manifest.map { case FwVersion(v, files, _, _, op) =>
           val cur = files.toMap
           val added = files.filter { case (n, _) => !prev.contains(n) }
           val removed = prev.filter { case (n, _) => !cur.contains(n) }
@@ -2496,7 +2467,7 @@ private[sources] class FwHistoryTable(dataSchema: StructType, path: String)
             added.length.toLong, removed.size.toLong,
             addedBytes / rowLen,
             removedBytes / rowLen + dvByVersion.getOrElse(v, 0L),
-            UTF8String.fromString(ops.getOrElse(v, "unknown")))
+            UTF8String.fromString(op.getOrElse("unknown")))
         }
         Array(FwHistoryPartition(rows.toArray))
       }
@@ -2519,377 +2490,6 @@ private[sources] object FwHistoryReaderFactory
       override def get(): InternalRow = new GenericInternalRow(rows(i))
       override def close(): Unit = ()
     }
-}
-
-/** Snapshot-version manifest: `_fw_versions.json` in the table
-  * directory records, per successful BATCH commit, the complete `.fw`
-  * file set visible after that commit — the Delta/Iceberg snapshot
-  * idea reduced to its append-only essence. Readers pin a snapshot
-  * with the `versionAsOf` option (or SQL `VERSION AS OF n` through
-  * [[FwCatalog]]); because published files are immutable, an old
-  * version is exactly its manifest file list, no tombstones needed.
-  * A truncating write starts a fresh file set but HISTORY keeps
-  * growing — older versions stay readable until their files are
-  * actually gone, at which point reads fail loudly.
-  *
-  * The manifest is one line of compact JSON written tmp→rename (the
-  * same publish protocol as data files and sidecars), so a crashed
-  * writer can never leave a torn manifest. Streaming epochs do not
-  * version (an epoch is not a user-visible snapshot boundary);
-  * streaming reads ignore the manifest entirely.
-  */
-private[sources] object FwVersions {
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
-
-  def manifestFor(path: String): java.io.File =
-    new java.io.File(path, "_fw_versions.json")
-
-  private def lockFor(path: String): java.io.File =
-    new java.io.File(path, "_fw_versions.lock")
-
-  /** A commit lock held longer than this is a crashed writer's (the
-    * critical section is a directory listing plus one JSON publish —
-    * milliseconds); it gets broken so the table never wedges.
-    */
-  val LockStaleMillis: Long = 60L * 1000
-  private val LockWaitMillis: Long = 30L * 1000
-
-  /** Serialize a manifest read-modify-write against every other
-    * committer of this table: an O_EXCL lock-file create is atomic on
-    * POSIX and object stores with if-none-match, so two writers cannot
-    * both hold it. This is the mutual exclusion HALF of optimistic
-    * concurrency — writers still do their expensive work outside the
-    * lock and only re-check + publish inside (see
-    * [[requireVersion]]).
-    */
-  def withLock[A](path: String)(body: => A): A = {
-    val lf = lockFor(path)
-    val deadline = System.currentTimeMillis() + LockWaitMillis
-    var acquired = false
-    while (!acquired) {
-      try { java.nio.file.Files.createFile(lf.toPath); acquired = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val lm = lf.lastModified()
-          // lm == 0 means the lock vanished between exists and stat
-          // (or stat failed): just retry
-          if (lm > 0 && System.currentTimeMillis() - lm > LockStaleMillis)
-            lf.delete() // crashed writer; break it
-          else if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(
-              s"FixedWidth: could not acquire commit lock $lf within " +
-                s"${LockWaitMillis / 1000}s (held by a live writer?)")
-          else Thread.sleep(20)
-      }
-    }
-    try body finally lf.delete()
-  }
-
-  /** Newest committed version, 0 when no batch write has committed. */
-  def currentMax(path: String): Long = {
-    val all = read(path)
-    if (all.isEmpty) 0L else all.map(_._1).max
-  }
-
-  /** The optimistic-concurrency check: callers that planned a
-    * read-compute-replace against version `planned` call this INSIDE
-    * [[withLock]] right before publishing; a version committed in
-    * between means the plan is stale and must abort (sweeping its tmp
-    * outputs) instead of silently losing the other writer's commit.
-    */
-  def requireVersion(path: String, planned: Long, op: String): Unit = {
-    val cur = currentMax(path)
-    if (cur != planned)
-      throw new java.util.ConcurrentModificationException(
-        s"FixedWidth $op at $path planned against version $planned " +
-          s"but version $cur has since committed; re-plan and retry")
-  }
-
-  def read(path: String): Seq[(Long, Seq[(String, Long)])] = {
-    val f = manifestFor(path)
-    if (!f.isFile) Seq.empty
-    else JsonMethods.parse(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)) \ "versions" match {
-      case JArray(vs) => vs.map { v =>
-        val JInt(n) = v \ "v"
-        val JArray(files) = v \ "files"
-        (n.toLong, files.map {
-          // legacy name-only entries (pre-byte-length manifests):
-          // -1 = "use the file's current length" in listAt
-          case JString(name) => (name, -1L)
-          case e =>
-            val JString(name) = e \ "n"
-            val bytes = e \ "b" match {
-              case JInt(b) => b.toLong
-              case JLong(b) => b
-              case other => throw new IllegalArgumentException(
-                s"bad _fw_versions.json byte length: $other")
-            }
-            (name, bytes)
-        })
-      }
-      case other =>
-        throw new IllegalArgumentException(s"bad _fw_versions.json: $other")
-    }
-  }
-
-  def resolve(path: String, version: Long): Seq[(String, Long)] = {
-    val all = read(path)
-    all.find(_._1 == version).map(_._2).getOrElse {
-      val have =
-        if (all.isEmpty) "none (no batch write has committed here)"
-        else s"${all.map(_._1).min}..${all.map(_._1).max}"
-      throw new IllegalArgumentException(
-        s"FixedWidth table at $path has no version $version; " +
-          s"available: $have")
-    }
-  }
-
-  /** Commit wall-clock per version (epoch millis); legacy manifests
-    * written before timestamps existed report -1 for their versions.
-    */
-  def readTs(path: String): Map[Long, Long] = {
-    val f = manifestFor(path)
-    if (!f.isFile) Map.empty
-    else JsonMethods.parse(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)) \ "versions" match {
-      case JArray(vs) => vs.map { v =>
-        val JInt(n) = v \ "v"
-        val ts = v \ "ts" match {
-          case JInt(t) => t.toLong
-          case JLong(t) => t
-          case _ => -1L
-        }
-        n.toLong -> ts
-      }.toMap
-      case other =>
-        throw new IllegalArgumentException(s"bad _fw_versions.json: $other")
-    }
-  }
-
-  /** Writer-transaction record per version: `(appId, txnVersion)` for
-    * versions committed with the idempotent-append options; versions
-    * from plain writes have no record. The Delta `txn` action reduced
-    * to the manifest: a retried job re-presenting an (app, ver) pair
-    * at or below the recorded high-water mark is a duplicate and must
-    * not commit again.
-    */
-  def readTxn(path: String): Map[Long, (String, Long)] = {
-    val f = manifestFor(path)
-    if (!f.isFile) Map.empty
-    else JsonMethods.parse(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)) \ "versions" match {
-      case JArray(vs) => vs.flatMap { v =>
-        val JInt(n) = v \ "v"
-        v \ "txn" match {
-          case JObject(_) =>
-            val JString(app) = v \ "txn" \ "a"
-            val tv = v \ "txn" \ "tv" match {
-              case JInt(t) => t.toLong
-              case JLong(t) => t
-              case other => throw new IllegalArgumentException(
-                s"bad _fw_versions.json txn version: $other")
-            }
-            Some(n.toLong -> ((app, tv)))
-          case _ => None
-        }
-      }.toMap
-      case other =>
-        throw new IllegalArgumentException(s"bad _fw_versions.json: $other")
-    }
-  }
-
-  /** Operation name per version ("append", "optimize", "restore", …);
-    * versions from pre-op manifests are absent (history shows
-    * "unknown"). The Delta DESCRIBE HISTORY operation column.
-    */
-  def readOps(path: String): Map[Long, String] = {
-    val f = manifestFor(path)
-    if (!f.isFile) Map.empty
-    else JsonMethods.parse(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)) \ "versions" match {
-      case JArray(vs) => vs.flatMap { v =>
-        val JInt(n) = v \ "v"
-        v \ "op" match {
-          case JString(op) => Some(n.toLong -> op)
-          case _ => None
-        }
-      }.toMap
-      case other =>
-        throw new IllegalArgumentException(s"bad _fw_versions.json: $other")
-    }
-  }
-
-  /** Highest committed txnVersion per application id — the idempotency
-    * high-water marks a new transactional commit checks against.
-    */
-  def txnHighWater(path: String): Map[String, Long] =
-    readTxn(path).values.groupBy(_._1)
-      .map { case (app, vs) => app -> vs.map(_._2).max }
-
-  /** Delta-style timestamp travel: the NEWEST version whose commit
-    * time is at or before `tsMillis`. Versions from pre-timestamp
-    * manifests (ts unknown) are never eligible — an explicit error
-    * beats silently reading an arbitrary snapshot.
-    */
-  def resolveTimestamp(path: String, tsMillis: Long): Long = {
-    val ts = readTs(path).filter(_._2 >= 0)
-    val eligible = ts.filter(_._2 <= tsMillis)
-    if (eligible.nonEmpty) eligible.maxBy(v => (v._2, v._1))._1
-    else {
-      val have =
-        if (ts.isEmpty)
-          "none (no timestamped version has committed here)"
-        else s"commits span ${ts.values.min}..${ts.values.max}"
-      throw new IllegalArgumentException(
-        s"FixedWidth table at $path has no version at or before " +
-          s"timestamp $tsMillis; available: $have")
-    }
-  }
-
-  /** Record the post-commit snapshot as the next version. Runs on the
-    * driver inside the batch commit, after every data file is
-    * published. Takes the commit lock so two concurrent committers
-    * serialize (each snapshot is a full directory listing, so two
-    * appends both land and get distinct version numbers).
-    */
-  def commitSnapshot(path: String): Long =
-    withLock(path)(commitSnapshotLocked(path))
-
-  /** [[commitSnapshot]] body for callers already inside [[withLock]]
-    * (maintenance ops hold the lock across publish + input removal +
-    * snapshot so their read-compute-replace is atomic vs other
-    * committers).
-    */
-  def commitSnapshotLocked(path: String): Long =
-    commitSnapshotLocked(path, Set.empty)
-
-  def commitSnapshotLocked(path: String, excluding: Set[String]): Long =
-    commitSnapshotLocked(path, excluding, None)
-
-  def commitSnapshotLocked(path: String, excluding: Set[String],
-      txn: Option[(String, Long)]): Long =
-    commitSnapshotLocked(path, excluding, txn, None)
-
-  def commitSnapshotLocked(path: String, excluding: Set[String],
-      op: String): Long =
-    commitSnapshotLocked(path, excluding, None, None, op)
-
-  /** `excluding`: file names THIS commit supersedes (a COW rewrite's
-    * inputs) — they stay on disk for older pins but leave the live
-    * set, so the new snapshot must not list them. `txn`: the writer's
-    * (appId, txnVersion) idempotency record, stamped into the new
-    * version so a retry of the same job version is detectable.
-    * `stageBranch`: commit to a side branch — `main` (and therefore
-    * every default reader) does not move; a plain commit fast-forwards
-    * `main` when refs exist. Either way, a snapshot is a full
-    * directory listing, so while a stage is pending every OTHER
-    * commit path must refuse (it would fold the staged files into its
-    * own snapshot — a silent leak into `main`).
-    */
-  /** The stage-vs-commit compatibility check, WITHOUT side effects —
-    * commit paths call this (inside the lock) BEFORE publishing any
-    * file, so an illegal commit fails with zero torn state; the
-    * snapshot itself re-runs it and then mutates refs.
-    */
-  def requireCommitSlot(path: String, stageBranch: Option[String]): Unit = {
-    val pending = FwRefs.pendingStage(path)
-    stageBranch match {
-      case Some(b) =>
-        require(b != "main",
-          "FixedWidth: branch=main is the default commit path — omit " +
-            "the option instead of staging to main")
-        require(FwRefs.get(path, b).forall(!_.isTag),
-          s"FixedWidth: '$b' is a tag; tags are immutable")
-        pending.filter(_.name != b).foreach { p =>
-          throw new IllegalStateException(
-            s"FixedWidth: branch '${p.name}' already has a pending " +
-              s"stage at version ${p.version}; publish or drop it " +
-              s"before staging '$b'")
-        }
-        require(currentMax(path) >= 1,
-          "FixedWidth: staging requires a committed base version — " +
-            "write the table once before opening an audit branch")
-      case None =>
-        pending.foreach { p =>
-          throw new IllegalStateException(
-            s"FixedWidth: branch '${p.name}' has a pending stage at " +
-              s"version ${p.version}; publish or drop it before " +
-              "committing to main")
-        }
-    }
-  }
-
-  def commitSnapshotLocked(path: String, excluding: Set[String],
-      txn: Option[(String, Long)], stageBranch: Option[String],
-      op: String = "append"): Long = {
-    requireCommitSlot(path, stageBranch)
-    // first stage freezes the default view where it stands
-    if (stageBranch.isDefined && FwRefs.mainVersion(path).isEmpty)
-      FwRefs.set(path, "main", currentMax(path), isTag = false)
-    val prior = read(path)
-    val priorTs = readTs(path)
-    val next = if (prior.isEmpty) 1L else prior.map(_._1).max + 1L
-    // name + byte length per file: the snapshot pins a record-aligned
-    // PREFIX of each immutable file, and versioned planning reads the
-    // manifest once instead of stat()ing every file
-    val snapshot = FwFiles.list(path)
-      .filter(f => !excluding.contains(f.getName))
-      .map(f => (f.getName, f.length())).toSeq.sortBy(_._1)
-    // commit time, forced strictly increasing so two commits inside
-    // one millisecond stay distinguishable to timestamp travel
-    val now = math.max(System.currentTimeMillis(),
-      priorTs.values.foldLeft(-1L)(math.max) + 1)
-    val txns = txn.fold(readTxn(path))(t => readTxn(path) + (next -> t))
-    val opName = stageBranch.fold(op)(b => s"stage:$b")
-    rewrite(path, prior :+ ((next, snapshot)), priorTs + (next -> now),
-      txns, readOps(path) + (next -> opName))
-    stageBranch match {
-      case Some(b) => FwRefs.set(path, b, next, isTag = false)
-      case None =>
-        if (FwRefs.mainVersion(path).isDefined)
-          FwRefs.set(path, "main", next, isTag = false)
-    }
-    next
-  }
-
-  /** Replace the manifest wholesale (vacuum's history trim) — same
-    * tmp→rename publish protocol as a commit. `tsOf` carries each
-    * version's commit time; versions absent from it (legacy history)
-    * persist without one.
-    */
-  def rewrite(path: String,
-      versions: Seq[(Long, Seq[(String, Long)])],
-      tsOf: Map[Long, Long] = Map.empty,
-      txnOf: Map[Long, (String, Long)] = Map.empty,
-      opOf: Map[Long, String] = Map.empty): Unit = {
-    import org.json4s.JsonDSL._
-    val doc: JObject = "versions" ->
-      versions.map { case (v, files) =>
-        val base = ("v" -> v) ~ ("files" -> files.map { case (n, b) =>
-          ("n" -> n) ~ ("b" -> b): JObject
-        })
-        val withTs =
-          tsOf.get(v).filter(_ >= 0).fold(base)(t => base ~ ("ts" -> t))
-        val withTxn = txnOf.get(v).fold(withTs) { case (app, tv) =>
-          withTs ~ ("txn" -> (("a" -> app) ~ ("tv" -> tv)))
-        }
-        opOf.get(v).fold(withTxn)(o => withTxn ~ ("op" -> o))
-      }
-    val target = manifestFor(path)
-    val tmp = new java.io.File(target.getPath + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      JsonMethods.compact(JsonMethods.render(doc))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
 }
 
 /** Per-file zone maps: the batch writer records min/max of every
@@ -3014,18 +2614,10 @@ private[sources] object FwDv {
   def write(dataPath: String, rowLen: Long,
       entries: Seq[(Long, Array[Long])]): Unit = {
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val doc: org.json4s.JObject =
+    FwPublish.writeJson(new java.io.File(dvFor(dataPath)),
       ("rowLen" -> rowLen) ~ ("dv" -> entries.map { case (since, os) =>
         ("since" -> since) ~ ("ords" -> os.toSeq)
-      })
-    val target = new java.io.File(dvFor(dataPath))
-    val tmp = new java.io.File(target.getPath + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      JsonMethods.compact(JsonMethods.render(doc)).getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      }))
   }
 
   /** Delete the DV (and any tmp) alongside its data file. */

@@ -84,7 +84,7 @@ class FwCatalog extends TableCatalog with SupportsNamespaces
 
   /** SQL time travel: `SELECT ... FROM cat.ns.t VERSION AS OF n` routes
     * here; the returned table is pinned to snapshot n of the
-    * `_fw_versions.json` manifest (resolution — and the loud failure
+    * [[FwVersions]] manifest (resolution — and the loud failure
     * for unknown versions — happens at scan time, where the path is
     * known-good).
     */

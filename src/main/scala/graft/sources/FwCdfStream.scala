@@ -152,7 +152,7 @@ private[sources] object FwCdf {
       log.flatMap(_.fileTranslation(name))
     if (b <= a) return Array.empty
     val manifests: Map[Long, Map[String, Long]] = FwVersions.read(path)
-      .map { case (v, files) => v -> files.toMap }.toMap
+      .map(r => r.v -> r.files.toMap).toMap
     val dir = new java.io.File(path)
     (a + 1 to b).flatMap { v =>
       val prev: Map[String, Long] =

@@ -123,11 +123,6 @@ object FwChangeData {
       java.nio.charset.StandardCharsets.UTF_8).trim)
   }
 
-  private def deleteEntry(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteEntry)
-    f.delete()
-  }
-
   /** Remove change data for versions a vacuum trimmed away. */
   private[sources] def dropBelow(path: String, minRetained: Long): Unit = {
     val d = dirFor(path)
@@ -135,7 +130,7 @@ object FwChangeData {
     val name = "v(\\d+)[.-].*".r
     d.listFiles().foreach { f =>
       f.getName match {
-        case name(v) if v.toLong < minRetained => deleteEntry(f)
+        case name(v) if v.toLong < minRetained => FwFiles.deleteTree(f)
         case _ => ()
       }
     }
@@ -155,7 +150,7 @@ object FwChangeData {
     val name = "v(\\d+)[.-].*".r
     d.listFiles().foreach { f =>
       f.getName match {
-        case name(v) if v.toLong > maxRetained => deleteEntry(f)
+        case name(v) if v.toLong > maxRetained => FwFiles.deleteTree(f)
         case _ => ()
       }
     }
@@ -194,7 +189,7 @@ object FwChangeData {
         // keep only data parts — the sink's manifest/sidecar files
         // describe a standalone table, not a change-data fragment
         tmpDir.listFiles().foreach { p =>
-          if (!p.getName.endsWith(".fw")) deleteEntry(p)
+          if (!p.getName.endsWith(".fw")) FwFiles.deleteTree(p)
         }
         ct -> tmpDir
       }
@@ -212,15 +207,15 @@ object FwChangeData {
       // so they can never observe a half-published version.
       FwVersions.withLock(path) {
         if (exists(path, v)) {
-          tmpDirs.foreach { case (_, t) => deleteEntry(t) }
+          tmpDirs.foreach { case (_, t) => FwFiles.deleteTree(t) }
         } else {
-          require(FwVersions.read(path).exists(_._1 == v),
+          require(FwVersions.read(path).exists(_.v == v),
             s"version $v disappeared (rolled back?) while its change " +
               "data materialized; not publishing")
           tmpDirs.foreach { case (ct, tmpDir) =>
             new java.io.File(d, s"v$v-$ct.fw").delete()
             val target = new java.io.File(d, s"v$v-$ct.d")
-            deleteEntry(target)
+            FwFiles.deleteTree(target)
             java.nio.file.Files.move(tmpDir.toPath, target.toPath)
           }
           java.nio.file.Files.write(specFile(path, v).toPath,

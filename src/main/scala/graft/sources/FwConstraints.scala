@@ -49,17 +49,8 @@ object FwConstraints {
 
   private def writeFile(path: String, cs: Seq[Constraint]): Unit = {
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val doc = "constraints" -> cs.map(c =>
-      ("name" -> c.name) ~ ("expr" -> c.expr))
-    val target = fileFor(path)
-    val tmp = new java.io.File(target.getPath + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      JsonMethods.compact(JsonMethods.render(doc))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    FwPublish.writeJson(fileFor(path), "constraints" -> cs.map(c =>
+      ("name" -> c.name) ~ ("expr" -> c.expr)))
   }
 
   /** Resolve `exprSql` against `schema` with the full analyzer (an

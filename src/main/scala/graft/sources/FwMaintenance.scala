@@ -49,7 +49,7 @@ object FwMaintenance {
     * caller needs to pick a `timestampAsOf` pin.
     */
   def commitTimestamps(path: String): Map[Long, Long] =
-    FwVersions.readTs(path)
+    FwVersions.read(path).map(r => r.v -> r.ts).toMap
 
   /** What a compaction run did. `committedVersion` is None when the
     * run was a no-op (nothing worth compacting — no manifest version
@@ -64,8 +64,7 @@ object FwMaintenance {
 
   private final case class GroupPlan(inputs: Vector[(String, Long)],
       index: Int, sv: Int = -1)
-  private final case class GroupResult(tmpData: String, hasSidecar: Boolean,
-      sv: Int = -1)
+  private final case class GroupResult(tmpData: String, sv: Int = -1)
 
   /** Bin-pack every published `.fw` file smaller than `targetBytes`
     * into groups of combined size ≤ `targetBytes` (greedy, name
@@ -140,16 +139,11 @@ object FwMaintenance {
     // ordering discipline as FwBatchWrite.commit — all inside the
     // commit lock, after the optimistic version re-check: a conflict
     // aborts BEFORE anything destructive, sweeping this run's tmps
-    def sweepOutputs(): Unit = results.foreach { r =>
-      new java.io.File(r.tmpData).delete()
-      new java.io.File(
-        FwStats.sidecarFor(r.tmpData.stripSuffix(".tmp")) + ".tmp").delete()
-    }
     val version = FwVersions.withLock(path) {
       planVersion.foreach { v =>
         try FwVersions.requireVersion(path, v, "compaction")
         catch { case e: java.util.ConcurrentModificationException =>
-          sweepOutputs(); throw e
+          results.foreach(r => FwPublish.sweep(r.tmpData)); throw e
         }
       }
       // a compacted pre-evolution group's output IS that layout: stamp
@@ -165,20 +159,7 @@ object FwMaintenance {
           FwSchemaLog.write(path, cur.copy(fileSv = cur.fileSv ++ stamps))
         }
       }
-      results.foreach { r =>
-        val tmp = new java.io.File(r.tmpData)
-        val target = new java.io.File(tmp.getParentFile,
-          tmp.getName.stripSuffix(".tmp"))
-        require(tmp.renameTo(target), s"could not publish $tmp -> $target")
-        if (r.hasSidecar) {
-          val sTmp = new java.io.File(
-            FwStats.sidecarFor(r.tmpData.stripSuffix(".tmp")) + ".tmp")
-          val sTarget = new java.io.File(sTmp.getParentFile,
-            sTmp.getName.stripSuffix(".tmp"))
-          require(sTmp.renameTo(sTarget),
-            s"could not publish $sTmp -> $sTarget")
-        }
-      }
+      results.foreach(r => FwPublish.publish(r.tmpData))
       if (partitioned.isEmpty) {
         // flat tables RETAIN their compacted inputs (and the input
         // sidecars/DVs) for older pins and the change feed — vacuum
@@ -186,14 +167,12 @@ object FwMaintenance {
         // set via the snapshot's exclusion list
         val replaced =
           retireInputs(path, planned.flatMap(_.inputs.map(_._1)))
-        Some(FwVersions.commitSnapshotLocked(path, replaced, "optimize"))
+        Some(FwVersions.commitSnapshotLocked(path, replaced, op = "optimize"))
       } else {
         // partitioned layouts do not version: no manifest can retire
         // an input from the live listing, so inputs delete eagerly
         planned.foreach(_.inputs.foreach { case (p, _) =>
-          new java.io.File(FwStats.sidecarFor(p)).delete()
-          FwDv.delete(p)
-          require(new java.io.File(p).delete(),
+          require(FwPublish.remove(new java.io.File(p)),
             s"could not remove input $p")
         })
         None
@@ -370,11 +349,6 @@ object FwMaintenance {
       .min(1 << 20).toInt
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val tmpDir = new java.io.File(path, s"_fw_zorder_$uid")
-    def nuke(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(nuke)
-      f.delete()
-    }
     var filesAfter = 0
     try {
       val sorted = dfR.withColumn("_fw_zkey", zkey)
@@ -398,20 +372,15 @@ object FwMaintenance {
         val parts = tmpDir.listFiles()
           .filter(_.getName.endsWith(".fw")).sortBy(_.getName)
         parts.zipWithIndex.foreach { case (f, i) =>
-          val target = new java.io.File(dir, f"zorder-$i%05d-$uid.fw")
-          val sc = new java.io.File(FwStats.sidecarFor(f.getPath))
-          if (sc.isFile)
-            require(sc.renameTo(new java.io.File(
-              FwStats.sidecarFor(target.getPath))),
-              s"could not publish sidecar of $f")
-          require(f.renameTo(target), s"could not publish $f -> $target")
+          FwPublish.publish(f,
+            new java.io.File(dir, f"zorder-$i%05d-$uid.fw"))
         }
         filesAfter = parts.length
         val replaced = retireInputs(path, live.map(_.getPath).toSeq)
-        FwVersions.commitSnapshotLocked(path, replaced, "optimize-zorder")
+        FwVersions.commitSnapshotLocked(path, replaced, op = "optimize-zorder")
       }
       ZorderReport(Some(version), live.length, filesAfter, liveBytes)
-    } finally nuke(tmpDir)
+    } finally FwFiles.deleteTree(tmpDir)
   }
 
   /** Runs on an executor: concatenate the group's inputs (exactly the
@@ -524,12 +493,11 @@ object FwMaintenance {
     merged.foreach { m =>
       // merged stats carry CURRENT logical names; their physical slots
       // come from the physicalized head (logical name -> its slot)
-      FwStats.write(
-        FwStats.sidecarFor(tmp.getPath.stripSuffix(".tmp")) + ".tmp",
+      FwStats.write(FwPublish.stagedSidecar(tmp.getPath),
         m, tmp.length(), sortedBy,
         mapLog.map(_.physicalized.fieldNames.zipWithIndex.toMap).orNull)
     }
-    GroupResult(tmp.getPath, merged.isDefined, g.sv)
+    GroupResult(tmp.getPath, g.sv)
   }
 
   /** prev file's max ≤ next file's min, in the stats' own domain.
@@ -590,32 +558,28 @@ object FwMaintenance {
     // ref'd versions (branches AND tags) outlive the retention window:
     // a release tag must stay readable until the tag itself is deleted
     val refPinned = FwRefs.read(path).map(_.version).toSet
-    val lastN = all.sortBy(-_._1).take(retainLast).map(_._1).toSet
+    val lastN = all.sortBy(-_.v).take(retainLast).map(_.v).toSet
     val retained =
-      all.filter(v => lastN.contains(v._1) || refPinned.contains(v._1))
-        .sortBy(_._1)
+      all.filter(r => lastN.contains(r.v) || refPinned.contains(r.v))
+        .sortBy(_.v)
     val dropped = all.size - retained.size
-    // the trim keeps each retained version's commit time, so
-    // timestamp travel stays usable across a vacuum
-    if (dropped > 0)
-      FwVersions.rewrite(path, retained, FwVersions.readTs(path),
-        FwVersions.readTxn(path), FwVersions.readOps(path))
+    // the trim keeps each retained version's record whole (commit time
+    // included), so timestamp travel stays usable across a vacuum
+    if (dropped > 0) FwVersions.write(path, retained)
 
     val referenced: Set[String] =
-      retained.flatMap(_._2.map(_._1)).toSet
+      retained.flatMap(_.files.map(_._1)).toSet
     // only files that EVER appeared in a manifest are vacuum's to
     // remove: the live (newest) snapshot is always retained, and files
     // outside any manifest (hand-built fixtures, streaming epochs
     // before a batch commit) are not ours to judge
-    val everReferenced: Set[String] = all.flatMap(_._2.map(_._1)).toSet
+    val everReferenced: Set[String] = all.flatMap(_.files.map(_._1)).toSet
     var orphans = 0
     val sweptNames = Set.newBuilder[String]
     if (all.nonEmpty) FwFiles.listPhysical(path).foreach { f =>
       if (everReferenced.contains(f.getName)
         && !referenced.contains(f.getName)) {
-        new java.io.File(FwStats.sidecarFor(f.getPath)).delete()
-        FwDv.delete(f.getPath)
-        require(f.delete(), s"could not vacuum $f")
+        require(FwPublish.remove(f), s"could not vacuum $f")
         sweptNames += f.getName
         orphans += 1
       }
@@ -629,18 +593,19 @@ object FwMaintenance {
     // materialized change data of trimmed versions dies with them (a
     // stream can no longer start below the retention floor anyway)
     if (dropped > 0 && retained.nonEmpty)
-      FwChangeData.dropBelow(path, retained.map(_._1).min)
+      FwChangeData.dropBelow(path, retained.map(_.v).min)
     (dropped, orphans, retained.size)
     } // withLock
     // the Delta VACUUM convention: a tmp is a "stray" only once it is
     // older than the retention window — a fresh tmp may belong to an
-    // in-flight writer whose commit would fail on renameTo if we swept
+    // in-flight writer whose commit would fail to publish if we swept
     // it — and the manifest's own tmp name is never ours to sweep
     val cutoff = System.currentTimeMillis() - strayTtlMillis
+    val manifestTmp = FwVersions.manifestFor(path).getName + ".tmp"
     var strays = 0
     Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
       if (f.isFile && f.getName.endsWith(".tmp")
-        && f.getName != "_fw_versions.json.tmp"
+        && f.getName != manifestTmp
         // lastModified() == 0 signals an I/O error, not 1970: unknown
         // age must read as "possibly in-flight", never as sweepable
         && f.lastModified() > 0L
@@ -763,7 +728,7 @@ object FwMaintenance {
             FwDv.read(file) :+ ((newVersion, ords)))
         }
         val committed =
-          FwVersions.commitSnapshotLocked(path, Set.empty, "delete-mor")
+          FwVersions.commitSnapshotLocked(path, op = "delete-mor")
         require(committed == newVersion,
           s"MoR delete version skew: wrote since=$newVersion, " +
             s"committed $committed")
@@ -843,10 +808,10 @@ object FwMaintenance {
   def cloneTable(spark: SparkSession, src: String,
       dst: String): CloneReport = {
     requireFlat(src, "clone")
-    val files = FwVersions.read(src)
-    require(files.nonEmpty,
+    val versions = FwVersions.read(src)
+    require(versions.nonEmpty,
       s"FixedWidth clone: no batch write has committed at $src")
-    val latest = files.maxBy(_._1)._2
+    val latest = versions.maxBy(_.v).files
     val dstDir = new java.io.File(dst)
     dstDir.mkdirs()
     require(Option(dstDir.listFiles()).getOrElse(Array.empty).isEmpty,
@@ -890,9 +855,8 @@ object FwMaintenance {
         FwDv.write(new java.io.File(dst, name).getPath,
           FwDv.readRowLen(srcData).get, Seq((1L, ords)))
     }
-    FwVersions.rewrite(dst, Seq((1L, pinned.map(p => (p._1, p._2)))),
-      Map(1L -> System.currentTimeMillis()), Map.empty,
-      Map(1L -> "clone"))
+    FwVersions.commitSnapshotLocked(dst, op = "clone",
+      files = Some(pinned.map(p => (p._1, p._2))))
     // table-level metadata rides along: the schema log (without it an
     // evolved clone would mis-parse its pre-evolution files — the
     // file→version stamps are name-keyed and names are preserved) and
@@ -943,19 +907,17 @@ object FwMaintenance {
         s"FixedWidth rollback: version $toVersion references $name " +
           s"($b bytes), which no longer exists at that length")
     }
-    val retained = all.filter(_._1 <= toVersion)
-    val keepNames = retained.flatMap(_._2.map(_._1)).toSet
+    val retained = all.filter(_.v <= toVersion)
+    val keepNames = retained.flatMap(_.files.map(_._1)).toSet
     // vacuum's discipline: only files some manifest version EVER
     // referenced are rollback's to delete — files outside any manifest
     // (hand-built fixtures) are not ours to judge
-    val everReferenced = all.flatMap(_._2.map(_._1)).toSet
+    val everReferenced = all.flatMap(_.files.map(_._1)).toSet
     var removed = 0
     FwFiles.listPhysical(path).foreach { f =>
       if (everReferenced.contains(f.getName)
         && !keepNames.contains(f.getName)) {
-        new java.io.File(FwStats.sidecarFor(f.getPath)).delete()
-        FwDv.delete(f.getPath)
-        require(f.delete(), s"could not roll back $f")
+        require(FwPublish.remove(f), s"could not roll back $f")
         removed += 1
       }
     }
@@ -977,8 +939,7 @@ object FwMaintenance {
     // hit FwChangeData.exists' short-circuit and serve the OLD
     // commit's change rows (mirror of vacuum's dropBelow)
     FwChangeData.dropAbove(path, toVersion)
-    FwVersions.rewrite(path, retained, FwVersions.readTs(path),
-      FwVersions.readTxn(path), FwVersions.readOps(path))
+    FwVersions.write(path, retained)
     // branches above the target clamp to it; tags above it die with
     // their snapshots
     FwRefs.clampTo(path, toVersion)
@@ -1039,11 +1000,6 @@ object FwMaintenance {
       .load(path)
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val tmpDir = new java.io.File(path, s"_fw_reorg_$uid")
-    def nuke(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(nuke)
-      f.delete()
-    }
     var filesAfter = 0
     var bytesAfter = 0L
     try {
@@ -1059,22 +1015,17 @@ object FwMaintenance {
         // NOW was written at a pre-reorg layout
         val knownBefore: Set[String] =
           (FwFiles.listPhysical(path).map(_.getName) ++
-            FwVersions.read(path).flatMap(_._2.map(_._1))).toSet
+            FwVersions.read(path).flatMap(_.files.map(_._1))).toSet
         val parts = tmpDir.listFiles()
           .filter(_.getName.endsWith(".fw")).sortBy(_.getName)
         parts.zipWithIndex.foreach { case (f, i) =>
           val target = new java.io.File(dir, f"reorg-$i%05d-$uid.fw")
-          val sc = new java.io.File(FwStats.sidecarFor(f.getPath))
-          if (sc.isFile)
-            require(sc.renameTo(new java.io.File(
-              FwStats.sidecarFor(target.getPath))),
-              s"could not publish sidecar of $f")
-          require(f.renameTo(target), s"could not publish $f -> $target")
+          FwPublish.publish(f, target)
           bytesAfter += target.length()
         }
         filesAfter = parts.length
         val replaced = retireInputs(path, live.map(_.getPath).toSeq)
-        val v = FwVersions.commitSnapshotLocked(path, replaced, "reorg")
+        val v = FwVersions.commitSnapshotLocked(path, replaced, op = "reorg")
         // log transition LAST, still under the lock: new head = purged
         // spec, mapping collapses, pre-reorg files stamped at their era
         FwSchemaLog.applyReorg(path, knownBefore)
@@ -1082,7 +1033,7 @@ object FwMaintenance {
       }
       ReorgReport(Some(version), live.length, filesAfter,
         bytesBefore, bytesAfter, purgedFields)
-    } finally nuke(tmpDir)
+    } finally FwFiles.deleteTree(tmpDir)
   }
 
   private def requireFlat(path: String, op: String): Unit =
@@ -1106,13 +1057,11 @@ object FwMaintenance {
     */
   private[sources] def retireInputs(path: String,
       inputs: Seq[String]): Set[String] = {
-    val ever = FwVersions.read(path).flatMap(_._2.map(_._1)).toSet
+    val ever = FwVersions.read(path).flatMap(_.files.map(_._1)).toSet
     val (retained, eager) = inputs.partition(p =>
       ever.contains(new java.io.File(p).getName))
     eager.foreach { p =>
-      new java.io.File(FwStats.sidecarFor(p)).delete()
-      FwDv.delete(p)
-      require(new java.io.File(p).delete(),
+      require(FwPublish.remove(new java.io.File(p)),
         s"could not remove superseded input $p")
     }
     retained.map(p => new java.io.File(p).getName).toSet
@@ -1133,7 +1082,7 @@ object FwMaintenance {
       val live = FwFiles.list(path)
       if (live.isEmpty) None
       else Some(FwVersions.commitSnapshotLocked(path,
-        retireInputs(path, live.map(_.getPath).toSeq), "truncate"))
+        retireInputs(path, live.map(_.getPath).toSeq), op = "truncate"))
     }
   }
 
@@ -1169,16 +1118,8 @@ object FwMaintenance {
             s"newer than version $toVersion; run optimize to " +
             "materialize them, then restore")
       }
-      val prior = FwVersions.read(path)
-      val priorTs = FwVersions.readTs(path)
-      val next = prior.map(_._1).max + 1L
-      val now = math.max(System.currentTimeMillis(),
-        priorTs.values.foldLeft(-1L)(math.max) + 1)
-      FwVersions.rewrite(path, prior :+ ((next, target)),
-        priorTs + (next -> now), FwVersions.readTxn(path),
-        FwVersions.readOps(path) + (next -> "restore"))
-      if (FwRefs.mainVersion(path).isDefined)
-        FwRefs.set(path, "main", next, isTag = false)
+      val next = FwVersions.commitSnapshotLocked(path, op = "restore",
+        files = Some(target))
       RestoreReport(toVersion, next, target.size)
     }
   }
@@ -1369,28 +1310,15 @@ object FwMaintenance {
     FwVersions.withLock(path) {
     try FwVersions.requireVersion(path, planVersion, "merge")
     catch { case e: java.util.ConcurrentModificationException =>
-      results.foreach { r =>
-        new java.io.File(r.tmpData).delete()
-        new java.io.File(
-          FwStats.sidecarFor(r.tmpData.stripSuffix(".tmp")) + ".tmp")
-          .delete()
-      }
+      results.foreach(r => FwPublish.sweep(r.tmpData))
       throw e
     }
     var rewritten = 0
     results.foreach { r =>
-      val tmp = new java.io.File(r.tmpData)
-      val sTmp = new java.io.File(
-        FwStats.sidecarFor(r.tmpData.stripSuffix(".tmp")) + ".tmp")
-      if (r.rowsUpdated == 0) { tmp.delete(); sTmp.delete() }
+      if (r.rowsUpdated == 0) FwPublish.sweep(r.tmpData)
       else {
         rewritten += 1
-        val target = new java.io.File(dir, tmp.getName.stripSuffix(".tmp"))
-        require(tmp.renameTo(target), s"could not publish $tmp -> $target")
-        val sTarget = new java.io.File(dir,
-          sTmp.getName.stripSuffix(".tmp"))
-        require(sTmp.renameTo(sTarget),
-          s"could not publish $sTmp -> $sTarget")
+        FwPublish.publish(r.tmpData)
       }
     }
     if (inserts.nonEmpty) {
@@ -1399,16 +1327,10 @@ object FwMaintenance {
       val tmp = new java.io.File(dir, name + ".tmp")
       java.nio.file.Files.write(tmp.toPath,
         FixedWidthWriter.render(layout, inserts))
-      FwStats.write(
-        FwStats.sidecarFor(tmp.getPath.stripSuffix(".tmp")) + ".tmp",
+      FwStats.write(FwPublish.stagedSidecar(tmp.getPath),
         statsOfRows(layout, inserts), tmp.length(),
         phys = layout.fieldNames.zipWithIndex.toMap)
-      val target = new java.io.File(dir, name)
-      require(tmp.renameTo(target), s"could not publish $tmp -> $target")
-      val sTmp = new java.io.File(
-        FwStats.sidecarFor(tmp.getPath.stripSuffix(".tmp")) + ".tmp")
-      val sTarget = new java.io.File(dir, sTmp.getName.stripSuffix(".tmp"))
-      require(sTmp.renameTo(sTarget), s"could not publish $sTmp")
+      FwPublish.publish(tmp.getPath)
     }
     // superseded originals retire AFTER their rewrites publish, then
     // the snapshot — retained on disk for version pins and the change
@@ -1419,7 +1341,7 @@ object FwMaintenance {
     }
     require(superseded.size == rewritten) // sanity: 1 rewrite per plan
     val version = FwVersions.commitSnapshotLocked(path,
-      retireInputs(path, superseded), "merge")
+      retireInputs(path, superseded), op = "merge")
     MergeReport(version, rewritten, files.length - rewritten,
       results.map(_.rowsUpdated).sum, inserts.size.toLong)
     } // withLock
@@ -1478,42 +1400,26 @@ object FwMaintenance {
         .map(p => rewriteFile(layout, ki, p, bc.value))
         .collect()
 
-    val dir = new java.io.File(path)
     // publish under the commit lock after the optimistic re-check —
     // a conflict sweeps this run's tmps and aborts cleanly
     FwVersions.withLock(path) {
     try FwVersions.requireVersion(path, planVersion, "delete")
     catch { case e: java.util.ConcurrentModificationException =>
-      results.foreach { r =>
-        new java.io.File(r.tmpData).delete()
-        new java.io.File(
-          FwStats.sidecarFor(r.tmpData.stripSuffix(".tmp")) + ".tmp")
-          .delete()
-      }
+      results.foreach(r => FwPublish.sweep(r.tmpData))
       throw e
     }
     var rewritten = 0
     var removed = 0
     val superseded = Vector.newBuilder[String]
     results.zip(plans).foreach { case (r, p) =>
-      val tmp = new java.io.File(r.tmpData)
-      val sTmp = new java.io.File(
-        FwStats.sidecarFor(r.tmpData.stripSuffix(".tmp")) + ".tmp")
-      if (r.rowsUpdated == 0) { tmp.delete(); sTmp.delete() }
+      if (r.rowsUpdated == 0) FwPublish.sweep(r.tmpData)
       else {
         if (r.rowsCopied == 0) { // every record matched: the file dies
           removed += 1
-          tmp.delete(); sTmp.delete()
+          FwPublish.sweep(r.tmpData)
         } else {
           rewritten += 1
-          val target = new java.io.File(dir,
-            tmp.getName.stripSuffix(".tmp"))
-          require(tmp.renameTo(target),
-            s"could not publish $tmp -> $target")
-          val sTarget = new java.io.File(dir,
-            sTmp.getName.stripSuffix(".tmp"))
-          require(sTmp.renameTo(sTarget),
-            s"could not publish $sTmp -> $sTarget")
+          FwPublish.publish(r.tmpData)
         }
         // the input retires but is RETAINED (sidecar and DV included)
         // for version pins and the change feed
@@ -1521,7 +1427,7 @@ object FwMaintenance {
       }
     }
     val version = FwVersions.commitSnapshotLocked(path,
-      retireInputs(path, superseded.result()), "delete")
+      retireInputs(path, superseded.result()), op = "delete")
     DeleteReport(version, rewritten, removed,
       results.map(_.rowsUpdated).sum)
     } // withLock
@@ -1654,8 +1560,7 @@ object FwMaintenance {
       }
     } finally { input.close(); out.close() }
     if (updated > 0)
-      FwStats.write(
-        FwStats.sidecarFor(tmp.getPath.stripSuffix(".tmp")) + ".tmp",
+      FwStats.write(FwPublish.stagedSidecar(tmp.getPath),
         acc.result(), tmp.length(),
         phys = schema.fieldNames.zipWithIndex.toMap)
     MergeResult(tmp.getPath, matched.result(), updated, copied)

@@ -57,22 +57,11 @@ object FwRefs {
   /** Callers hold the table's commit lock. */
   private[sources] def write(path: String, refs: Seq[Ref]): Unit = {
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
     val target = fileFor(path)
-    if (refs.isEmpty) {
-      target.delete()
-      return
-    }
-    val doc = "refs" -> refs.map(r =>
+    if (refs.isEmpty) target.delete()
+    else FwPublish.writeJson(target, "refs" -> refs.map(r =>
       ("name" -> r.name) ~ ("v" -> r.version) ~
-        ("kind" -> (if (r.isTag) "tag" else "branch")))
-    val tmp = new java.io.File(target.getPath + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      JsonMethods.compact(JsonMethods.render(doc))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        ("kind" -> (if (r.isTag) "tag" else "branch"))))
   }
 
   def get(path: String, name: String): Option[Ref] =

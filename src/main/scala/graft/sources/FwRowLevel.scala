@@ -284,17 +284,8 @@ private[sources] final class FwCowBatchWrite(schema: StructType,
     // still runs off scannedFiles, so the rows genuinely vanish.
     val (empties, paths) =
       allPaths.partition(p => new java.io.File(p).length() == 0)
-    empties.foreach { tmp =>
-      new java.io.File(tmp).delete()
-      new java.io.File(
-        FwStats.sidecarFor(tmp.stripSuffix(".tmp")) + ".tmp").delete()
-    }
+    empties.foreach(FwPublish.sweep)
     FwVersions.withLock(path) {
-      def sweep(): Unit = paths.foreach { tmp =>
-        new java.io.File(tmp).delete()
-        new java.io.File(
-          FwStats.sidecarFor(tmp.stripSuffix(".tmp")) + ".tmp").delete()
-      }
       try {
         FwVersions.requireVersion(path, op.planVersion,
           s"row-level ${op.command()}")
@@ -303,22 +294,9 @@ private[sources] final class FwCowBatchWrite(schema: StructType,
         FwVersions.requireCommitSlot(path, None)
       } catch { case e @ (_: java.util.ConcurrentModificationException
           | _: IllegalStateException) =>
-        sweep(); throw e
+        paths.foreach(FwPublish.sweep); throw e
       }
-      paths.foreach { tmp =>
-        val f = new java.io.File(tmp)
-        val target = new java.io.File(f.getParentFile,
-          f.getName.stripSuffix(".tmp"))
-        require(f.renameTo(target), s"could not publish $tmp -> $target")
-        val sTmp = new java.io.File(
-          FwStats.sidecarFor(tmp.stripSuffix(".tmp")) + ".tmp")
-        if (sTmp.isFile) {
-          val sTarget = new java.io.File(sTmp.getParentFile,
-            sTmp.getName.stripSuffix(".tmp"))
-          require(sTmp.renameTo(sTarget),
-            s"could not publish $sTmp -> $sTarget")
-        }
-      }
+      paths.foreach(FwPublish.publish(_: String))
       // a rewrite that scanned nothing and wrote nothing (the condition
       // statically excluded every file) burns no version
       if (op.scannedFiles.nonEmpty || paths.nonEmpty) {
@@ -326,7 +304,7 @@ private[sources] final class FwCowBatchWrite(schema: StructType,
         val replaced = FwMaintenance.retireInputs(path,
           op.scannedFiles.map(n => new java.io.File(dir, n).getPath))
         committedVersion = Some(FwVersions.commitSnapshotLocked(path,
-          replaced, s"replace-${op.command().toString.toLowerCase}"))
+          replaced, op = s"replace-${op.command().toString.toLowerCase}"))
       }
     }
     // Materialize the commit's change data eagerly (outside the lock —
@@ -347,11 +325,7 @@ private[sources] final class FwCowBatchWrite(schema: StructType,
   @volatile private var committedVersion: Option[Long] = None
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.flatMap(tmps).foreach { tmp =>
-      new java.io.File(tmp).delete()
-      new java.io.File(
-        FwStats.sidecarFor(tmp.stripSuffix(".tmp")) + ".tmp").delete()
-    }
+    messages.flatMap(tmps).foreach(FwPublish.sweep)
     // message-less stragglers (committed after the job failed): their
     // tmps carry this write's tag — sweep by name (flat layout only;
     // COW rewrites never write partition subdirs)

@@ -194,7 +194,6 @@ object FwSchemaLog {
   /** Callers hold the table's commit lock. */
   private[sources] def write(path: String, log: Log): Unit = {
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
     val base = ("versions" -> log.specs) ~
       ("files" -> log.fileSv.toSeq.sortBy(_._1).map {
         case (n, sv) => n -> sv
@@ -214,14 +213,7 @@ object FwSchemaLog {
             org.json4s.JInt(i): org.json4s.JValue).toList))
           : Seq[org.json4s.JValue]
       })
-    val target = fileFor(path)
-    val tmp = new java.io.File(target.getPath + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      JsonMethods.compact(JsonMethods.render(doc))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    FwPublish.writeJson(fileFor(path), doc)
   }
 
   /** Metadata-only column append: every `.fw` file the table knows
@@ -269,7 +261,7 @@ object FwSchemaLog {
             .map(f => s"${d.getName}/${f.getName}"))
       val known: Set[String] =
         (FwFiles.listPhysical(path).map(_.getName) ++ partitioned ++
-          FwVersions.read(path).flatMap(_._2.map(_._1))).toSet
+          FwVersions.read(path).flatMap(_.files.map(_._1))).toSet
       val prior = existing.map(_.fileSv).getOrElse(Map.empty)
       val stamped = prior ++
         known.filterNot(prior.contains).map(_ -> oldHead)

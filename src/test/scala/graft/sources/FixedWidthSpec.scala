@@ -729,7 +729,7 @@ class FixedWidthSpec extends AnyFunSuite {
     write(Seq((1L, "a", 1.0)), "overwrite") // v1
     write(Seq((2L, "b", 2.0)), "append") // v2
     write(Seq((3L, "c", 3.0)), "append") // v3
-    val ts = FwVersions.readTs(dir)
+    val ts = FwMaintenance.commitTimestamps(dir)
     assert(ts.keySet === Set(1L, 2L, 3L))
     assert(ts(1L) > 0 && ts(1L) < ts(2L) && ts(2L) < ts(3L),
       s"commit times strictly increase: $ts")
@@ -1084,7 +1084,7 @@ class FixedWidthSpec extends AnyFunSuite {
       .mode("append").save(dir) // v2
     val r2 = FwMaintenance.optimize(spark, dir, targetBytes = 2L)
     assert(r2.committedVersion === None && r2.filesAfter === 2, r2.toString)
-    assert(FwVersions.read(dir).map(_._1).max === 2L,
+    assert(FwVersions.read(dir).map(_.v).max === 2L,
       "no-op compaction must not burn a manifest version")
     // and with two compactable files it DOES commit v3
     val r3 = FwMaintenance.optimize(spark, dir, targetBytes = 1L << 20)
@@ -1145,7 +1145,7 @@ class FixedWidthSpec extends AnyFunSuite {
       .find(_.getName.startsWith("merge-ins-")).get
     assert(FwStats.read(insFile).get("id") === FwIntStats(9999L, 9999L))
     // merge committed a snapshot; a second merge bumps it
-    assert(FwVersions.read(dir).map(_._1).max === 1L)
+    assert(FwVersions.read(dir).map(_.v).max === 1L)
     val r2 = FwMaintenance.merge(spark, dir, sch4,
       Seq((0L, "z", 0.0)).toDF("id", "name", "score"), "id")
     assert(r2.version === 2L && r2.filesRewritten === 1
@@ -1624,7 +1624,7 @@ class FixedWidthSpec extends AnyFunSuite {
     // an in-flight writer's fresh tmp must survive the sweep
     val freshTmp = new java.io.File(dir, "inflight.fw.tmp")
     Files.write(freshTmp.toPath, Array[Byte](9))
-    val v1Files = FwVersions.read(dir).find(_._1 == 1L).get._2.map(_._1)
+    val v1Files = FwVersions.read(dir).find(_.v == 1L).get.files.map(_._1)
     // compaction retires (and RETAINS) the three appended files; once
     // retainLast=1 drops every version referencing them, all three are
     // vacuum's orphans — including v1's name even if an external
@@ -1718,8 +1718,8 @@ class FixedWidthSpec extends AnyFunSuite {
       .option("schema", spec).mode("overwrite").save(src)
     // degrade the manifest to a legacy name-only (live-length) entry
     val files = FwVersions.read(src)
-    FwVersions.rewrite(src,
-      files.map { case (v, fs) => (v, fs.map(f => (f._1, -1L))) })
+    FwVersions.write(src,
+      files.map(r => FwVersion(r.v, r.files.map(f => (f._1, -1L)))))
     val dst = Files.createTempDirectory("fwcllegd").toFile.getAbsolutePath
     new java.io.File(dst).delete()
     FwMaintenance.cloneTable(spark, src, dst)
@@ -1728,7 +1728,7 @@ class FixedWidthSpec extends AnyFunSuite {
     assert(readAll(dst).count() === 2L)
     // external producer appends a record to the source's file in place
     val dataFile = new java.io.File(src,
-      FwVersions.read(src).head._2.head._1)
+      FwVersions.read(src).head.files.head._1)
     val fos = new java.io.FileOutputStream(dataFile, true)
     try fos.write("   3c            3.0\n"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))

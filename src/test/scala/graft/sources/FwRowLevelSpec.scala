@@ -131,9 +131,9 @@ class FwRowLevelSpec extends AnyFunSuite {
   test("UPDATE matching nothing statically (zone maps exclude every " +
       "file) burns no version") {
     val (t, dir) = fresh()
-    val versions = FwVersions.read(dir).map(_._1)
+    val versions = FwVersions.read(dir).map(_.v)
     spark.sql(s"UPDATE $t SET score = 1.0 WHERE id = 999")
-    assert(FwVersions.read(dir).map(_._1) === versions,
+    assert(FwVersions.read(dir).map(_.v) === versions,
       "statically-empty rewrite must not burn a snapshot version")
     assert(rows(t).size === 8)
   }

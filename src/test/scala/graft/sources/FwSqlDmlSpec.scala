@@ -62,9 +62,9 @@ class FwSqlDmlSpec extends AnyFunSuite {
     val (t, dir) = fresh()
     spark.sql(s"DELETE FROM $t WHERE id = 3")
     assert(ids(t) === Seq(1L, 2L, 4L, 5L, 6L, 7L, 8L))
-    val versions = FwVersions.read(dir).map(_._1)
+    val versions = FwVersions.read(dir).map(_.v)
     spark.sql(s"DELETE FROM $t WHERE id = 999")
-    assert(FwVersions.read(dir).map(_._1) === versions,
+    assert(FwVersions.read(dir).map(_.v) === versions,
       "a no-match delete must not burn a snapshot version")
     assert(ids(t).size === 7)
   }
