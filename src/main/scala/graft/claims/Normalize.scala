@@ -1,13 +1,14 @@
 package graft.claims
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
 
 /** Source readers + normalization to the common claim schema.
   *
   * Mirrors the reference loaders `load_alpha` (claim_pipeline.py:81-99) and
   * `load_beta` (claim_pipeline.py:101-114) as pure Column-expression
-  * projections — no UDFs, so whole-stage codegen and pushdown stay intact.
+  * projections — no UDFs, so whole-stage codegen and pushdown stay intact;
+  * the two per-field kernels are codegen'd expressions (`FieldKernels.scala`).
   *
   * `readAlpha` and `readBeta` are the one reader per source format; the
   * pipeline reads every input file through them.
@@ -21,41 +22,47 @@ object Normalize {
   /** Whitespace set matching Python `str.strip()` for Latin-1 inputs:
     * ASCII whitespace incl. vertical tab, the C1 separators FS/GS/RS/US,
     * NEL and NBSP (all isspace() in Python). Unicode space codepoints
-    * beyond Latin-1 are a documented divergence.
+    * beyond Latin-1 are a documented divergence. [[StripToNull]] strips
+    * exactly this set; `ClaimOps` builds its DuckDB mirror from it.
     */
-  private val Whitespace =
+  val Whitespace: String =
     " \t\n\r\f\u000b\u001c\u001d\u001e\u001f\u0085\u00a0"
 
   /** null→null; strip; empty-after-strip→null (reference `remove_whitespaces`,
-    * claim_pipeline.py:60-65). `btrim` with an explicit trim-set (codegen'd)
-    * rather than `trim`, which only strips spaces.
+    * claim_pipeline.py:60-65). One byte scan from each end ([[StripToNull]]),
+    * equal to `nullif(btrim(c, Whitespace), '')`: an unstripped value is
+    * returned as it is and a stripped one as a slice of its bytes, where
+    * `btrim` with a trim-set copies every value and walks it whole.
     */
-  def trimToNull(c: Column): Column = nullif(btrim(c, lit(Whitespace)), lit(""))
+  def trimToNull(c: Column): Column =
+    graftbridge.column(StripToNull(graftbridge.expression(c)))
 
   /** Null-safe lowercase (reference `to_lower`, claim_pipeline.py:67-69). */
   def lowerNorm(c: Column): Column = lower(trimToNull(c))
 
   /** `yyyy-MM-dd` or ISO date-time; unparseable/blank → null (reference
     * `to_iso_date`, claim_pipeline.py:47-57, which tries the date and then
-    * the date-time format). `try_to_date` returns null on mismatch
-    * (ANSI-safe), mirroring the try/except chain.
+    * the date-time format).
     *
-    * Each value is parsed once, with the one format that can accept it:
-    * the date format has no letter, so it rejects any value holding a `T`;
-    * the date-time format needs its literal `T`, which Spark's
-    * case-insensitive parser also matches as `t`, so it rejects any value
-    * holding neither. Trying both on every value, as a `coalesce` would,
-    * gives the same dates and throws and catches a parse exception for
-    * every date-time value.
+    * [[IsoDate]] decides the two canonical shapes in place, `yyyy-MM-dd`
+    * and `yyyy-MM-dd'T'HH:mm:ss` with `T` or `t`, and gives null for every
+    * other string, with no parse and no exception. That is what Spark's
+    * java.time parse (`try_to_date` with those formats) gives, except for
+    * values with a leading `+` or `-`, where it reads a signed year
+    * (`+12025-01-01` is year 12025, `+002025-01-01` is 2025-01-01).
+    * Those values alone still go through that parse, here and nowhere
+    * else; `FieldKernelsSpec` holds the kernel to it on a seeded corpus.
     *
     * Parses the RAW value, not a trimmed one: strptime rejects
     * whitespace-padded dates (' 2025-07-10' → ValueError → None in the
     * reference), so trimming first would flip older_than for such rows.
     */
   def parseDate(c: Column): Column =
-    when(c.contains("T") || c.contains("t"),
-      try_to_date(c, "yyyy-MM-dd'T'HH:mm:ss"))
-      .otherwise(try_to_date(c, "yyyy-MM-dd"))
+    when(c.startsWith("+") || c.startsWith("-"),
+      when(c.contains("T") || c.contains("t"),
+        try_to_date(c, "yyyy-MM-dd'T'HH:mm:ss"))
+        .otherwise(try_to_date(c, "yyyy-MM-dd")))
+      .otherwise(graftbridge.column(IsoDate(graftbridge.expression(c))))
 
   /** Alpha-only "None"-literal scrub: after trim, a value whose lowercase is
     * "none" becomes null (claim_pipeline.py:86-89). Beta error_msg is only

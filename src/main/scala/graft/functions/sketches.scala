@@ -226,22 +226,46 @@ object SketchOps {
   /** Merge-walk intersection of two sorted duplicate-free long arrays
     * (see [[SortedLongIntersect]]). Returns ascending order — identical
     * to array_intersect's first-argument order on sorted inputs.
+    *
+    * Each element read is compared once with the one before it in its
+    * array, and an input that is not strictly ascending throws instead of
+    * silently losing matches. The walk reads both tails to the end for
+    * that: an out-of-order element past the point where the other array
+    * ran out can hide a match too ([1, 5, 3] against [3]).
     */
   def sortedIntersect(a: ArrayData, b: ArrayData): ArrayData = {
     val na = a.numElements()
     val nb = b.numElements()
     val out = new Array[Long](math.min(na, nb))
     var i = 0; var j = 0; var k = 0
+    var x = if (na > 0) a.getLong(0) else 0L
+    var y = if (nb > 0) b.getLong(0) else 0L
     while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { out(k) = x; k += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
+      if (x == y) {
+        out(k) = x; k += 1
+        i += 1; x = ascendingAt(a, i, x)
+        j += 1; y = ascendingAt(b, j, y)
+      } else if (x < y) { i += 1; x = ascendingAt(a, i, x) }
+      else { j += 1; y = ascendingAt(b, j, y) }
     }
+    while (i < na) { i += 1; x = ascendingAt(a, i, x) }
+    while (j < nb) { j += 1; y = ascendingAt(b, j, y) }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(java.util.Arrays.copyOf(out, k))
   }
+
+  /** Element `i` of `arr`, which must exceed `prev`, the element before
+    * it; `prev` itself once `i` is past the end.
+    */
+  private def ascendingAt(arr: ArrayData, i: Int, prev: Long): Long =
+    if (i >= arr.numElements()) prev
+    else {
+      val v = arr.getLong(i)
+      if (v <= prev) throw new IllegalArgumentException(
+        s"sorted_long_intersect: input not strictly ascending at index $i " +
+          s"($v after $prev)")
+      v
+    }
 }
 
 /** Distinct width-w word shingles of a word array, first-occurrence
@@ -577,7 +601,8 @@ object CharNgramsOf {
   * both inputs are ascending the merge walk returns the identical
   * array (array_intersect preserves first-argument order, which for a
   * sorted input is ascending too). Callers must guarantee sortedness
-  * and distinctness — outputs of sort_array over distinct members.
+  * and distinctness — outputs of sort_array over distinct members; an
+  * input that is not strictly ascending fails the query.
   */
 case class SortedLongIntersect(left: Expression, right: Expression)
     extends BinaryExpression {

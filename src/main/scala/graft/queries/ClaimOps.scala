@@ -77,8 +77,9 @@ object ClaimOps {
        | AND (DATE '2025-07-30' - submitted_at) > 7
        | AND ${classifySql("denial_reason")} = 'retryable')""".stripMargin
 
-  /** Whitespace trim-set matching Normalize.trimToNull. */
-  private val TrimSetSql = "' ' || chr(9) || chr(10) || chr(13) || chr(12)"
+  /** Whitespace trim-set matching Normalize.trimToNull: its 12 chars. */
+  private val TrimSetSql =
+    Normalize.Whitespace.map(c => s"chr(${c.toInt})").mkString(" || ")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O5/O6/O8: trim-to-null, lowercase, "None"-literal scrub.

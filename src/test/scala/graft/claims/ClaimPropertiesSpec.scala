@@ -20,19 +20,36 @@ class ClaimPropertiesSpec extends AnyFunSuite {
 
   // ---- generators -------------------------------------------------------
 
-  private val genStatus = Gen.oneOf[String](
-    "denied", "DENIED", " Denied ", "approved", "pending", "", null)
-  private val genPatient = Gen.oneOf[String]("P1", " P2 ", "", "  ", null)
+  // Python's `str.strip()` set over Latin-1 (what `Normalize.trimToNull`
+  // strips), and characters next to it that Python keeps.
+  private val StripSet = " \t\n\r\f\u000b\u001c\u001d\u001e\u001f\u0085\u00a0"
+  private val NearMisses = "\u0000\u0001\u0008\u0084\u0086\u00a1\u0145"
+
+  /** 0-3 chars drawn mostly from the strip set, now and then a near-miss. */
+  private val genPad: Gen[String] = Gen.choose(0, 3).flatMap(n =>
+    Gen.listOfN(n, Gen.frequency(
+      6 -> Gen.oneOf(StripSet.toSeq), 1 -> Gen.oneOf(NearMisses.toSeq))))
+      .map(_.mkString)
+
+  /** A value with padding on either side; null stays null. */
+  private def padded(g: Gen[String]): Gen[String] = for {
+    v <- g; l <- genPad; r <- genPad
+  } yield if (v == null) null else l + v + r
+
+  private val genStatus = padded(Gen.oneOf[String](
+    "denied", "DENIED", " Denied ", "approved", "pending", "", null))
+  private val genPatient = padded(
+    Gen.oneOf[String]("P1", " P2 ", "", "  ", null))
   private val genDate = Gen.oneOf[String](
     "2025-07-22", "2025-07-23", "2025-07-24", "2025-07-01",
     "2025-07-01T10:30:00", "bad-date", "2025-13-45", "", null,
     " 2025-07-10 ")
-  private val genReason = Gen.oneOf[String](
+  private val genReason = padded(Gen.oneOf[String](
     "Missing modifier", "missing modifier", " INCORRECT NPI ",
     "Prior auth required", "Authorization expired", "Incorrect provider type",
     "claim not billable per policy", "form incomplete: fix it",
     "has incorrect procedure code", "something else entirely",
-    "None", " none ", "", "   ", null)
+    "None", " none ", "", "   ", null))
   private val genClaim = for {
     s <- genStatus; p <- genPatient; d <- genDate; r <- genReason
   } yield (s, p, d, r)
@@ -41,8 +58,12 @@ class ClaimPropertiesSpec extends AnyFunSuite {
 
   private val Today = LocalDate.of(2025, 7, 30)
 
+  // Models reference remove_whitespaces (claim_pipeline.py:60-65): Python's
+  // `str.strip()`, which keeps U+0000-U+0008 (Java's `String.trim` strips
+  // them) and strips U+0085 and U+00A0 (`String.trim` keeps them).
   private def mTrim(s: String): Option[String] =
-    Option(s).map(_.trim).filter(_.nonEmpty)
+    Option(s).map(_.dropWhile(StripSet.contains(_))
+      .reverse.dropWhile(StripSet.contains(_)).reverse).filter(_.nonEmpty)
 
   // Models reference to_iso_date (claim_pipeline.py:47-57): the RAW value
   // goes to strptime, which rejects whitespace padding — ' 2025-07-10 '
@@ -183,7 +204,20 @@ class ClaimPropertiesSpec extends AnyFunSuite {
       "2025-07-01T25:00:00" -> null,
       "2025-07-01T" -> null,
       "T" -> null,
-      "07/01/2025" -> null)
+      "07/01/2025" -> null,
+      // Where the parser leaves strptime behind: a signed year is read
+      // (a `+` needs more than four digits), and so is year 0.
+      "+12025-01-01" -> "+12025-01-01",
+      "-2025-01-01" -> "-2025-01-01",
+      "+002025-01-01" -> "2025-01-01",
+      "0000-01-01" -> "0000-01-01",
+      "12025-01-01" -> null,
+      "+2025-01-01" -> null,
+      "2025-07-01T23:59:59" -> "2025-07-01",
+      "2025-07-01T24:00:00" -> null,
+      "2025-07-01T10:60:00" -> null,
+      "2025-07-01T10:11:60" -> null,
+      "\uff12\uff10\uff12\uff15-07-01" -> null)
     val raw = spark.createDataFrame(
       java.util.Arrays.asList(table.map(t => Row(t._1)): _*),
       StructType(Seq(StructField("v", StringType))))

@@ -45,6 +45,24 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("SortedLongIntersect rejects unsorted or duplicated input") {
+    // Each would lose a match in a merge walk: the 3 after 5 in the first
+    // lies past the point where the other array ran out.
+    val rows = Seq(
+      (Seq(1L, 5L, 3L), Seq(3L)),
+      (Seq(2L, 4L), Seq(9L, 4L)),
+      (Seq(1L, 1L, 2L), Seq(1L, 2L)),
+      (Seq(7L), Seq(1L, 8L, 8L)))
+    for ((a, b) <- rows) {
+      val df = Seq((a, b)).toDF("a", "b")
+      val e = intercept[Exception](
+        df.select(SortedLongIntersect(col("a"), col("b"))).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(
+          "not strictly ascending")), s"$a, $b: $e")
+    }
+  }
+
   test("CharNgramsAllOf == transform(sequence) windows (multiplicity kept)") {
     val rows = Seq("abcabc", "", "a", "ab", "日本語テキスト", "xx")
     val df = rows.toDF("s")

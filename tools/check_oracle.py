@@ -7,12 +7,15 @@ For each query dumped by `graft.Verify` (parquet under <out>/<name>/),
 runs the matching SQL from <out>/oracle_sql.json in DuckDB against the
 sf parquet tables, then compares: columns sorted by name, rows sorted,
 values compared exactly (floats to 9 significant digits first, exact
-diff reported). Dev tool only — not part of the shipped library.
+diff reported). Each entry's result line is followed by the seconds its
+compare took, and the five slowest entries are named at the end. Dev tool
+only — not part of the shipped library.
 """
 import glob
 import json
 import math
 import sys
+import time
 
 import duckdb
 
@@ -30,6 +33,16 @@ def norm_cell(v):
     return str(v)
 
 
+def timed(names, elapsed):
+    """Yields each name and, once the caller asks for the next, prints and
+    records in `elapsed` the seconds spent on it."""
+    for name in names:
+        t0 = time.monotonic()
+        yield name
+        elapsed[name] = time.monotonic() - t0
+        print(f"        {name}: {elapsed[name]:.2f} s", flush=True)
+
+
 def main(out_dir, sf_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -37,7 +50,8 @@ def main(out_dir, sf_dir):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(oracle):
+    elapsed = {}
+    for name in timed(sorted(oracle), elapsed):
         sql = oracle[name]
         parts = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
         if not parts:
@@ -122,6 +136,9 @@ def main(out_dir, sf_dir):
                     print(f"    only-spark:  {r}")
                 for r in list(only_w)[:2]:
                     print(f"    only-oracle: {r}")
+    print("slowest:", ", ".join(
+        f"{n} {t:.1f} s" for n, t in
+        sorted(elapsed.items(), key=lambda kv: -kv[1])[:5]))
     print(f"== {n_pass} match, {n_fail} fail ==")
     return 1 if n_fail else 0
 
