@@ -18,11 +18,11 @@ final case class PipelineResult(
 /** The full resubmission pipeline: dispatch → normalize → union → eligibility
   * → enrich → sinks + metrics. Mirrors reference claim_pipeline.py:155-233.
   *
-  * A run over one CSV and one JSON file is two Spark jobs: the CSV reader
-  * runs one job per CSV file to read its header row, since the columns
-  * are matched by header name; then one candidate job scans every input,
-  * and the metrics ride that scan via `Dataset.observe`. The JSON reader
-  * has a fixed schema and starts no job of its own.
+  * A run is one Spark job: the candidate job scans every input, and the
+  * metrics ride that scan via `Dataset.observe`. No reader starts a job of
+  * its own: the CSV reader reads each file's header row on the driver
+  * (the columns are matched by header name), and the JSON reader has a
+  * fixed schema.
   */
 object ClaimPipeline {
   private val logger = LoggerFactory.getLogger(getClass)

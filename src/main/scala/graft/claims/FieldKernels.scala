@@ -88,13 +88,14 @@ object StripToNull {
 
 /** The date of a canonical ISO value, `yyyy-MM-dd` or
   * `yyyy-MM-dd'T'HH:mm:ss` (`T` or `t`), decided in place; null for every
-  * other string. Over the strings [[Normalize.parseDate]] gives it (none
-  * with a leading `+` or `-`), it returns what the two java.time formats
-  * give: month and day form a real proleptic-Gregorian date (year 0000 is a
-  * leap year), and the time, unused, has HH <= 23 and mm, ss <= 59, as the
-  * STRICT resolver requires. The date part does not depend on the session
-  * time zone, except in a zone that skipped a calendar day; the engine's
-  * sessions run UTC.
+  * other string. On an unsigned value it returns what the two java.time
+  * formats give: month and day form a real proleptic-Gregorian date (year
+  * 0000 is a leap year), and the time, unused, has HH <= 23 and mm, ss <=
+  * 59, as the STRICT resolver requires. A value with a leading `+` or `-`,
+  * where those formats read a signed year, is null, as the reference's
+  * strptime gives. The date part does not depend on the session time zone,
+  * except in a zone that skipped a calendar day; the engine's sessions run
+  * UTC.
   */
 case class IsoDate(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DateType

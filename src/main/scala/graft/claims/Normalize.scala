@@ -2,6 +2,7 @@ package graft.claims
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source readers + normalization to the common claim schema.
   *
@@ -46,23 +47,16 @@ object Normalize {
     *
     * [[IsoDate]] decides the two canonical shapes in place, `yyyy-MM-dd`
     * and `yyyy-MM-dd'T'HH:mm:ss` with `T` or `t`, and gives null for every
-    * other string, with no parse and no exception. That is what Spark's
-    * java.time parse (`try_to_date` with those formats) gives, except for
-    * values with a leading `+` or `-`, where it reads a signed year
-    * (`+12025-01-01` is year 12025, `+002025-01-01` is 2025-01-01).
-    * Those values alone still go through that parse, here and nowhere
-    * else; `FieldKernelsSpec` holds the kernel to it on a seeded corpus.
+    * other string, with no parse and no exception. A value with a leading
+    * `+` or `-` is null too, as in the reference, whose `%Y` takes exactly
+    * four digits.
     *
     * Parses the RAW value, not a trimmed one: strptime rejects
     * whitespace-padded dates (' 2025-07-10' → ValueError → None in the
     * reference), so trimming first would flip older_than for such rows.
     */
   def parseDate(c: Column): Column =
-    when(c.startsWith("+") || c.startsWith("-"),
-      when(c.contains("T") || c.contains("t"),
-        try_to_date(c, "yyyy-MM-dd'T'HH:mm:ss"))
-        .otherwise(try_to_date(c, "yyyy-MM-dd")))
-      .otherwise(graftbridge.column(IsoDate(graftbridge.expression(c))))
+    graftbridge.column(IsoDate(graftbridge.expression(c)))
 
   /** Alpha-only "None"-literal scrub: after trim, a value whose lowercase is
     * "none" becomes null (claim_pipeline.py:86-89). Beta error_msg is only
@@ -120,17 +114,37 @@ object Normalize {
     )
   }
 
+  /** The one option set of an alpha CSV read: the header read and the scan
+    * both take it, so the two cannot disagree on how a line splits.
+    */
+  private val AlphaCsv = Map("header" -> "true", "mode" -> "PERMISSIVE")
+
   /** Read + normalize an alpha CSV. Header-driven (name-matched) like
-    * `csv.DictReader`: we read all columns as strings via the header row and
-    * project by name, so column order never matters and extra columns are
-    * ignored (reference claim_pipeline.py:84, 92-97).
+    * `csv.DictReader`: every column is a string named by the header row,
+    * and the projection is by name, so column order never matters and extra
+    * columns are ignored (reference claim_pipeline.py:84, 92-97).
+    *
+    * The header row is read on the driver ([[graftbridge.csvHeader]]) and
+    * the scan gets it as an explicit all-string schema: the schema Spark's
+    * header inference gives, without the inference's Spark job. (Inference
+    * takes a line of control chars before the header, such as a lone tab,
+    * as the header line; the scan skips it, and so does this read.)
+    * `header` stays set, so the scan still drops the header line from each
+    * file's first split. Like the reference's `open()`, a path that is not
+    * a readable file (missing, a directory, a glob) throws here, and the
+    * pipeline counts it as one malformed file.
     */
   def readAlpha(spark: SparkSession, path: String): DataFrame =
-    normalizeAlpha(
-      spark.read
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .csv(path))
+    normalizeAlpha(alphaRaw(spark, path))
+
+  /** The raw alpha frame [[readAlpha]] normalizes: one string column per
+    * header name.
+    */
+  private[claims] def alphaRaw(spark: SparkSession, path: String): DataFrame = {
+    val schema = StructType(graftbridge.csvHeader(spark, path, AlphaCsv)
+      .map(StructField(_, StringType)))
+    spark.read.options(AlphaCsv).schema(schema).csv(path)
+  }
 
   /** Raw beta frame re-parsed through Spark 4 VARIANT so that records the
     * reference loader would RAISE on are detectable (S11 bug-compat

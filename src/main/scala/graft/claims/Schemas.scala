@@ -12,10 +12,11 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
-  // Note: the alpha CSV has no declared schema here on purpose — it is
-  // read header-driven (all strings) and projected by name, mirroring
-  // csv.DictReader; a positional StructType would break column-order
-  // independence (SURVEY.md §1.2).
+  // Note: the alpha CSV has no declared schema here on purpose — each
+  // file's schema is its own header row, read on the driver as all
+  // strings (`Normalize.readAlpha`), and the frame is projected by name,
+  // mirroring csv.DictReader; a fixed positional StructType would break
+  // column-order independence (SURVEY.md §1.2).
 
   /** Raw "beta" EMR extract: top-level JSON array (reference emr_beta.json). */
   val betaRaw: StructType = StructType(Seq(

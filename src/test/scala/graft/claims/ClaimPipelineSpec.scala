@@ -199,6 +199,22 @@ class ClaimPipelineSpec extends AnyFunSuite {
     assert(result.metrics.excludedByReason("malformed") === 1)
   }
 
+  test("a directory or a glob as a CSV path counts one malformed file") {
+    // Spark would list both and read the CSV files in them; the reference
+    // opens the path as one file, which fails.
+    val dir = tmpDir()
+    val csvDir = Files.createDirectory(dir.resolve("x.csv"))
+    write(csvDir, "part.csv", alphaCsv)
+    val globbed = Files.createDirectory(dir.resolve("g"))
+    write(globbed, "a.csv", alphaCsv)
+    for (path <- Seq(csvDir.toString, globbed.resolve("*.csv").toString)) {
+      val result = runPipeline(Seq(path, write(dir, "b.json", betaJson)))
+      assert(result.metrics.totalProcessed === 4, path)
+      assert(result.metrics.bySource("alpha") === 0, path)
+      assert(result.metrics.excludedByReason("malformed") === 1, path)
+    }
+  }
+
   test("S11 bugCompatFileAbort: first raising record aborts the rest of the file") {
     // Verified by executing the reference on this exact probe: the
     // non-string "id": 123 makes load_beta's .strip() raise mid-iteration,
@@ -244,14 +260,13 @@ class ClaimPipelineSpec extends AnyFunSuite {
     assert(abort.metrics.totalProcessed === 9)
   }
 
-  test("a run over a CSV and a JSON file is two Spark jobs: the CSV " +
-      "header read and the candidate job") {
+  test("a CSV + JSON run is one Spark job: the candidate job") {
     val dir = tmpDir()
     val files = Seq(write(dir, "a.csv", alphaCsv), write(dir, "b.json", betaJson))
     val (result, jobs) = graft.JobCounter(spark)(runPipeline(files))
     assert(result.candidates.map(_.getString(0)) ===
       Seq("A123", "A124", "A127", "B988"))
-    assert(jobs === 2)
+    assert(jobs === 1)
   }
 
   test("empty input list yields empty outputs") {

@@ -205,11 +205,14 @@ class ClaimPropertiesSpec extends AnyFunSuite {
       "2025-07-01T" -> null,
       "T" -> null,
       "07/01/2025" -> null,
-      // Where the parser leaves strptime behind: a signed year is read
-      // (a `+` needs more than four digits), and so is year 0.
-      "+12025-01-01" -> "+12025-01-01",
-      "-2025-01-01" -> "-2025-01-01",
-      "+002025-01-01" -> "2025-01-01",
+      // A signed year is null, as strptime's four-digit `%Y` gives, even
+      // one past what a timestamp can hold. Year 0 is where the parser
+      // still leaves strptime behind.
+      "+12025-01-01" -> null,
+      "-2025-01-01" -> null,
+      "+002025-01-01" -> null,
+      "+294248-01-01" -> null,
+      "-2025-07-01T10:11:12" -> null,
       "0000-01-01" -> "0000-01-01",
       "12025-01-01" -> null,
       "+2025-01-01" -> null,

@@ -85,19 +85,8 @@ class ClaimSplitParitySpec extends AnyFunSuite with Eventually
     write("b.json", betaProbe), write("a2.csv", mixedAlpha("C")))
   private lazy val excludedFile = write("x.csv", excludedAlpha)
 
-  /** Sets the confs for `body` and restores them: the session is shared. */
-  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // 32 KiB splits: each ~170 KB test CSV scans as 5+ partitions.
-  private def multiSplit[T](body: => T): T = withConfs(
+  private def multiSplit[T](body: => T): T = graft.TestSpark.withConfs(
     "spark.sql.files.maxPartitionBytes" -> "32768",
     "spark.sql.files.openCostInBytes" -> "1024")(body)
 

@@ -27,10 +27,18 @@ class FieldKernelsSpec extends AnyFunSuite {
     when(lower(t) === "none", lit(null)).otherwise(t)
   }
 
-  private def oldDate(c: Column): Column =
+  /** The java.time parse, which reads a signed year. */
+  private def javaTimeDate(c: Column): Column =
     when(c.contains("T") || c.contains("t"),
       try_to_date(c, "yyyy-MM-dd'T'HH:mm:ss"))
       .otherwise(try_to_date(c, "yyyy-MM-dd"))
+
+  /** The java.time parse on unsigned values; a signed value is null, as
+    * the reference's strptime gives.
+    */
+  private def oldDate(c: Column): Column =
+    when(c.startsWith("+") || c.startsWith("-"), lit(null).cast(DateType))
+      .otherwise(javaTimeDate(c))
 
   // ---- the two evaluation modes -----------------------------------------
 
@@ -42,17 +50,6 @@ class FieldKernelsSpec extends AnyFunSuite {
     "NO_CODEGEN" -> Map(
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
       "spark.sql.codegen.wholeStage" -> "false"))
-
-  private def withConf[T](kv: Map[String, String])(f: => T): T = {
-    val conf = spark.conf
-    val saved = kv.keys.map(k => k -> conf.getOption(k)).toMap
-    kv.foreach { case (k, v) => conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
 
   /** The strings as one column `v` of an RDD-backed frame, so that the
     * optimizer cannot fold the expressions into a local relation.
@@ -66,7 +63,7 @@ class FieldKernelsSpec extends AnyFunSuite {
   private def assertAgree(strings: Seq[String],
       pairs: Seq[(String, Column => Column, Column => Column)]): Unit = {
     val v = col("v")
-    for ((mode, conf) <- Modes) withConf(conf) {
+    for ((mode, conf) <- Modes) graft.TestSpark.withConfs(conf.toSeq: _*) {
       val df = frame(strings)
       val differs = pairs
         .map { case (_, k, o) => !(k(v) <=> o(v)) }.reduce(_ || _)
@@ -167,10 +164,10 @@ class FieldKernelsSpec extends AnyFunSuite {
         case _ => s.patch(i, Nil, 1)
       }
     }
-    // Signed years stay within what a timestamp can hold: past it the
-    // replaced parse throws (see the test below), and the kernel with it.
+    // Signed years reach past what a timestamp can hold, where the
+    // java.time parse throws (see the test below).
     def signed(): String = {
-      val y = rnd.nextInt(290000).toString
+      val y = rnd.nextInt(1000000).toString
       val width = y.length + rnd.nextInt(3)
       val sign = if (rnd.nextBoolean()) "+" else "-"
       sign + ("0" * (width - y.length)) + y + date(rnd, sep()).drop(4)
@@ -200,21 +197,25 @@ class FieldKernelsSpec extends AnyFunSuite {
       val (ok, all) = parsed(k)
       assert(ok > 1000 && all - ok > 1000, s"$k: $ok of $all parse")
     }
-    assert(parsed.collect { case ((_, true), (ok, _)) => ok }.sum > 1000)
+    // Every signed value is null.
+    val signed = parsed.toSeq.collect { case ((_, true), okAll) => okAll }
+    assert(signed.map(_._2).sum > 10000 && signed.map(_._1).sum === 0)
   }
 
-  test("a signed year past the timestamp range throws, as it did") {
+  test("a signed year past the timestamp range gives null") {
     val v = col("v")
-    for (s <- Seq("+294248-01-01", "-300000-01-01T10:11:12",
-        "+123456789-01-01")) {
-      def cause(f: Column => Column): Throwable = {
-        val e = intercept[Exception](frame(Seq(s)).select(f(v)).collect())
-        Iterator.iterate[Throwable](e)(_.getCause)
-          .takeWhile(_ != null).toSeq.last
-      }
-      val was = cause(oldDate)
-      assert(was.isInstanceOf[ArithmeticException], s)
-      assert(cause(Normalize.parseDate).getClass === was.getClass, s)
+    val values = Seq("+294248-01-01", "-300000-01-01T10:11:12",
+      "+123456789-01-01")
+    for (s <- values) {
+      val e = intercept[Exception](
+        frame(Seq(s)).select(javaTimeDate(v)).collect())
+      val cause = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq.last
+      assert(cause.isInstanceOf[ArithmeticException], s)
+    }
+    for ((mode, conf) <- Modes) graft.TestSpark.withConfs(conf.toSeq: _*) {
+      val got = frame(values).select(Normalize.parseDate(v)).collect()
+      assert(got.map(_.get(0)).toSeq === Seq(null, null, null), mode)
     }
   }
 }
