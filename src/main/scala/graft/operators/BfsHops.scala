@@ -15,15 +15,8 @@ import org.apache.spark.sql.functions._
   * Scale shape mirrors ConnectedComponents: the edge pipeline is
   * materialized once (Union re-execution guard), each iteration is one
   * join + one map-side-combinable min aggregation over the edge list,
-  * the distance frame is node-bounded, and every iteration ends in a
-  * LAZY localCheckpoint materialized by the convergence count — the
-  * count's job persists the checkpoint blocks and returns the scalar
-  * (an eager checkpoint would cost a job more), while still truncating
-  * the two-consumer lineage that would otherwise double per step. AQE
-  * submits each shuffle-map and broadcast stage as its own job, so an
-  * iteration runs six Spark jobs (local[4], AQE on; `BfsHopsSpec` pins
-  * it). The per-iteration convergence count is a driver-side scalar —
-  * the standard driver role in any iterative fixpoint.
+  * and the distance frame is node-bounded. [[Fixpoint]] runs the rounds:
+  * six Spark jobs per iteration (`BfsHopsSpec` pins it).
   */
 object BfsHops {
 
@@ -39,7 +32,6 @@ object BfsHops {
     */
   def hops(edges: DataFrame, srcCol: String, dstCol: String, source: Long,
       undirected: Boolean = false, maxIter: Int = 30): DataFrame = {
-    require(maxIter > 0, "maxIter must be positive")
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint(true)
     val e0 =
@@ -50,15 +42,14 @@ object BfsHops {
     // edges still reports dist 0, matching the declarative replay).
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = e0.select(col("src").as("node"))
+    val init = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node")))
       .union(Seq(source).toDF("node")).distinct()
       .withColumn("dist",
         when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long")))
       .localCheckpoint(true)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
+    Fixpoint(init, maxIter, "BFS") { (prev, _) =>
+      val dist = prev.select("node", "dist")
       // Settled predecessors offer dist+1 to their successors; min() is
       // map-side combinable, so the edge-sized stream collapses to one
       // row per reached node before the single label join.
@@ -67,22 +58,14 @@ object BfsHops {
           .select(col("node").as("src"), col("dist")), "src")
         .groupBy("dst").agg(min(col("dist") + 1).as("nd"))
         .select(col("dst").as("node"), col("nd"))
-      val next = dist
+      dist
         .join(offer, Seq("node"), "left")
         .select(col("node"),
           least(coalesce(col("dist"), col("nd")),
             coalesce(col("nd"), col("dist"))).as("dist"),
           (coalesce(col("nd"), lit(Long.MaxValue)) <
             coalesce(col("dist"), lit(Long.MaxValue))).as("_chg"))
-        .localCheckpoint(false)
-      changed = next.filter(col("_chg")).count()
-      dist = next.select("node", "dist")
-      i += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"BFS did not converge in $maxIter iterations")
-    dist
+    }(_ => col("_chg")).select("node", "dist")
   }
 
   /** ALL-pairs shortest hop counts over an undirected edge list — the
@@ -96,33 +79,18 @@ object BfsHops {
     */
   def allPairs(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
-    require(maxIter > 0, "maxIter must be positive")
     val base = edges.select(col(aCol).as("a"), col(bCol).as("b"))
       .localCheckpoint(true)
     val sym = base.union(base.select(col("b").as("a"), col("a").as("b")))
-    var dist = sym.select(col("a").as("node")).distinct()
+    val init = sym.select(col("a").as("node")).distinct()
       .select(col("node").as("src"), col("node"), lit(0L).as("dist"))
-      .localCheckpoint(false) // materialized by the count below
-    var prevCount = -1L
-    var curCount = dist.count()
-    var i = 0
-    while (curCount != prevCount && i < maxIter) {
+    Fixpoint.growing(init, maxIter, "all-pairs BFS") { dist =>
       val extended = dist
         .join(sym, col("node") === col("a"))
         .select(col("src"), col("b").as("node"),
           (col("dist") + 1).as("dist"))
-      dist = dist.union(extended)
+      dist.union(extended)
         .groupBy("src", "node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(false)
-      prevCount = curCount
-      // The count's jobs also persist the checkpoint blocks: four jobs a
-      // round (local[4], AQE on; pinned in BfsHopsSpec).
-      curCount = dist.count()
-      i += 1
     }
-    if (curCount != prevCount)
-      throw new IllegalStateException(
-        s"all-pairs BFS did not converge in $maxIter rounds")
-    dist
   }
 }

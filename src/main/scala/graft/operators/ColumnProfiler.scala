@@ -32,14 +32,8 @@ object ColumnProfiler {
     // times BEFORE the partial aggregate, so the map side carries the
     // census's real work; a small single-file batch scans as one or two
     // partitions and serializes it (q77 measured 4.3s of task time over
-    // 5 tasks at sf0.1). Spread a narrow input across the cores first —
-    // CONDITIONAL, like the TextOps shingle spread: an input that
-    // already has enough splits (the 100 TB ingestion batch) passes
-    // through untouched, so no corpus-sized shuffle is ever added.
-    val target = df0.sparkSession.sparkContext.defaultParallelism
-    val df =
-      if (df0.queryExecution.toRdd.getNumPartitions < target) df0.repartition(target)
-      else df0
+    // 5 tasks at sf0.1). Spread a narrow input across the cores first.
+    val df = Partitions.spread(df0)
     val fields = df.schema.fields
     require(fields.nonEmpty, "ColumnProfiler.profile: input has no columns")
     val aggs = fields.flatMap { f =>

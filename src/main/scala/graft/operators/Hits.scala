@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, graftbridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Weighted HITS (hubs & authorities) in exact scaled-integer
   * arithmetic — the mutually-recursive complement of [[PageRank]]: a
@@ -10,67 +13,73 @@ import org.apache.spark.sql.functions._
   *
   * Same reproducibility stance as PageRank: chained float iterations
   * are not replayable across engines, so scores are BIGINT units of
-  * Scale⁻¹, every product runs in DECIMAL(38,0) headroom, and each
-  * half-step L1-normalizes with pure integer division
+  * Scale⁻¹ and each half-step L1-normalizes with pure integer division
   * `x div (total div Scale)` — truncation toward zero on positive
   * values in both engines, bit-identical on any partitioning.
   *
-  * Scale shape: callers condense the graph to an edge list first; each
-  * half-step is one broadcast join + one map-side-combinable sum over
-  * edges, score frames are node-bounded, and each iteration ends in an
-  * eager localCheckpoint (scores feed two consumers next round).
+  * Scale shape: callers condense the graph to an edge list first; that
+  * aggregation is the only distributed work. The node set and the edge
+  * list are collected once ([[Fixpoint.collect]]) and every half-step
+  * runs on the driver in BigInt, with the semantics of the SQL joins it
+  * replaced (`HitsSpec` compares the two): a source outside the node set
+  * gives nothing; the total sums every edge's share, so an edge into a
+  * node outside the set loses its share; a null score or weight gives
+  * nothing, and a half-step with no share at all gives null scores; a
+  * total below Scale is a zero divisor and throws Spark's ANSI
+  * `[DIVIDE_BY_ZERO]`, a score past BIGINT throws as ANSI does. The job
+  * count does not grow with `iters`.
   */
 object Hits {
 
   /** L1 mass after each normalization (score units of Scale⁻¹). */
   val Scale: Long = 1000000000L
 
-  /** @param edges (src, dst, w) weighted directed edge frame
+  /** @param edges (src, dst, w) weighted directed edge frame, integral w;
+    *              endpoints compare to node ids as the node column's type
     * @param nodes single-column frame of all node ids
-    * @param iters unrolled iteration count
-    * @return (node, hub, authority) — BIGINT scores, each half-step
-    *         normalized so scores sum to ~Scale (integer truncation
-    *         can only lose mass, never create it)
+    * @param iters iteration count
+    * @return local (node, hub, authority) frame of BIGINT scores
     */
   def scores(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val nodeCol = nodes.columns.head
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .localCheckpoint(true)
-    val ns = nodes.select(col(nodeCol).as("node")).localCheckpoint(true)
-    var hub = ns.withColumn("h", lit(Scale))
-    var auth = ns.withColumn("a", lit(Scale))
-    for (_ <- 1 to iters) {
-      // authority ← in-edge hub mass
-      val araw = e
-        .join(broadcast(hub), col("node") === col("src"))
-        .select(col("dst"),
-          expr("cast(h as decimal(38,0)) * w").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("araw"))
-      val atot = araw.agg(sum(col("araw")).as("ta"))
-      auth = ns
-        .join(broadcast(araw), col("node") === col("dst"), "left")
-        .crossJoin(broadcast(atot))
-        .select(col("node"),
-          expr(s"cast(coalesce(araw, 0) div (ta div $Scale) as bigint)")
-            .as("a"))
-        .localCheckpoint(true)
-      // hub ← out-edge authority mass
-      val hraw = e
-        .join(broadcast(auth), col("node") === col("dst"))
-        .select(col("src"),
-          expr("cast(a as decimal(38,0)) * w").as("c"))
-        .groupBy("src").agg(sum(col("c")).as("hraw"))
-      val htot = hraw.agg(sum(col("hraw")).as("th"))
-      hub = ns
-        .join(broadcast(hraw), col("node") === col("src"), "left")
-        .crossJoin(broadcast(htot))
-        .select(col("node"),
-          expr(s"cast(coalesce(hraw, 0) div (th div $Scale) as bigint)")
-            .as("h"))
-        .localCheckpoint(true)
+    val node = nodes.schema.head
+    val ids = Fixpoint.collect(nodes.select(col(node.name)), "HITS node set")
+      .map(_.get(0))
+    type Edge = (Any, Any, Option[BigInt])
+    val es: Array[Edge] = Fixpoint.collect(edges.select(
+        col("src").try_cast(node.dataType), col("dst").try_cast(node.dataType),
+        col("w").cast("long")), "HITS edge set")
+      .map(e => (e.get(0), e.get(1), Option(e.getAs[java.lang.Long](2)).map(BigInt(_))))
+    // Positions of each non-null id (a null id matches no edge endpoint).
+    val at: Map[Any, Array[Int]] =
+      ids.indices.filter(ids(_) != null).toArray.groupBy(ids(_))
+    // Each edge carries its `from` end's score times its weight to its
+    // `to` end; null and outside `to` ends are groups of their own.
+    def half(x: Array[Option[BigInt]], from: Edge => Any, to: Edge => Any) = {
+      val raw = es.flatMap(e => at.getOrElse(from(e), Array.empty[Int])
+          .map(p => to(e) -> x(p).zip(e._3).map { case (s, w) => s * w }))
+        .groupMapReduce(_._1)(_._2)((a, b) => (a ++ b).reduceOption(_ + _))
+      val divisor = raw.values.flatten.reduceOption(_ + _).map(_ / Scale)
+      if (ids.nonEmpty && divisor.contains(BigInt(0)))
+        throw graftbridge.divideByZero()
+      ids.map(id => divisor.map { d =>
+        val v = Option(id).flatMap(raw.get).flatten.getOrElse(BigInt(0))
+        BigInt((v / d).bigInteger.longValueExact())
+      })
     }
-    hub.join(auth, "node")
-      .select(col("node"), col("h").as("hub"), col("a").as("authority"))
+    var hub = ids.map(_ => Option(BigInt(Scale)))
+    var auth = hub
+    for (_ <- 1 to iters) {
+      auth = half(hub, _._1, _._2)
+      hub = half(auth, _._2, _._1)
+    }
+    // (node, hub) ⋈ (node, authority): a row per pair of positions that
+    // hold the same non-null id
+    val rows = for ((id, ps) <- at.toSeq; p <- ps.toSeq; q <- ps) yield
+      Row(id, hub(p).map(_.toLong).getOrElse(null),
+        auth(q).map(_.toLong).getOrElse(null))
+    nodes.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("node", node.dataType, node.nullable),
+      StructField("hub", LongType), StructField("authority", LongType))))
   }
 }

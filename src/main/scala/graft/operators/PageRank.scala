@@ -2,9 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, graftbridge}
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -25,7 +23,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape: callers CONDENSE the graph first (aggregate the fact
   * table to an edge list); that aggregation is the only distributed
   * work. The node set and the condensed `(src, dst, w)` list are then
-  * collected once (each capped at [[DriverGuard]] rows) and every round
+  * collected once (each by [[Fixpoint.collect]]) and every round
   * runs on the driver, so the Spark job count does not grow with
   * `iters` (PageRankSpec pins it). The rounds
   * compute in BigInt: `r·w` cannot overflow, `div` truncates toward
@@ -38,9 +36,6 @@ object PageRank {
   /** Total rank mass: ranks start at Scale/|nodes| and sum to ~Scale. */
   val Scale: Long = 1000000000000L
 
-  /** Max rows the operator collects from each of `nodes` and `edges`. */
-  val DriverGuard: Int = 1000000
-
   /** @param edges  (src, dst, w) weighted directed edge frame, integral w;
     *               endpoints compare to node ids as the node column's type
     * @param nodes  single-column frame of all node ids (superset of the
@@ -51,13 +46,15 @@ object PageRank {
   def ranks(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val node = nodes.schema.head
-    val ids = collectGuarded(nodes.select(col(node.name)), "node").map(_.get(0))
+    val ids = Fixpoint.collect(nodes.select(col(node.name)), "PageRank node set")
+      .map(_.get(0))
     val n = ids.length
     require(n > 0, "empty node set")
     // try_cast: an endpoint the node type cannot hold matches no node,
     // as it would in a join that widens both sides
-    val es = collectGuarded(edges.select(col("src").try_cast(node.dataType),
-        col("dst").try_cast(node.dataType), col("w").cast("long")), "edge")
+    val es = Fixpoint.collect(edges.select(col("src").try_cast(node.dataType),
+        col("dst").try_cast(node.dataType), col("w").cast("long")),
+        "PageRank edge set")
       .map(e => (e.get(0), e.get(1), Option(e.getAs[java.lang.Long](2)).map(BigInt(_))))
     // Positions of each non-null id (a null id matches no edge endpoint).
     val at: Map[Any, Array[Int]] =
@@ -85,14 +82,5 @@ object PageRank {
       StructField("r", LongType, nullable = false)))
     nodes.sparkSession.createDataFrame(
       ids.indices.map(p => Row(ids(p), r(p))).asJava, schema)
-  }
-
-  /** One exchange-free collect, each partition capped at guard + 1 rows. */
-  private def collectGuarded(df: DataFrame, what: String): Array[Row] = {
-    val rows = graftbridge.ofRows(df.sparkSession,
-      LocalLimit(Literal(DriverGuard + 1), df.queryExecution.analyzed)).collect()
-    require(rows.length <= DriverGuard,
-      s"PageRank $what set exceeds driver guard ($DriverGuard rows)")
-    rows
   }
 }

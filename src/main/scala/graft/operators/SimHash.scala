@@ -48,14 +48,8 @@ object SimHash {
       nonEmpty: Option[Column] = None): DataFrame = {
     // Spread single-split inputs across cores before the per-row hashing
     // pass (with no shuffle left in this stage, a one-file table would
-    // otherwise hash on one core). Identity when the input already has
-    // enough splits: at cluster scale the repartition would be a
-    // pointless corpus shuffle.
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < target) docs.repartition(target)
-      else docs
-    spread
+    // otherwise hash on one core).
+    Partitions.spread(docs)
       .filter(nonEmpty.getOrElse(size(tokens) > 0))
       .select(col(idCol), graft.functions.SimHashOf(
         array_distinct(tokens), hashKind).as("simhash"))

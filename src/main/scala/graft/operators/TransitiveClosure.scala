@@ -12,16 +12,9 @@ import org.apache.spark.sql.functions._
   * fixpoint arrives in O(log diameter) rounds — not O(diameter) as with
   * single-edge extension. The frame is the SPARSE set of reached pairs
   * (|V|²-bounded, never a dense matrix), every round collapses through
-  * one distinct(), and each round ends in a LAZY localCheckpoint whose
-  * materialization is driven by the convergence count (the count action
-  * is the first computation of the marked RDD, so it persists the
-  * checkpoint blocks and returns the scalar without a job of its own),
-  * while still truncating the self-join lineage that would otherwise
-  * double per step. AQE submits each shuffle-map and broadcast stage as
-  * its own job, so a round runs six Spark jobs on small frames
-  * (local[4], AQE on; `TransitiveClosureSpec` pins it). Row-count stability is the fixpoint test
-  * (pairs only ever accumulate), with the count as the standard
-  * driver-side convergence scalar.
+  * one distinct(), and pairs only ever accumulate, so [[Fixpoint.growing]]
+  * runs the rounds to row-count stability: six Spark jobs per round
+  * (`TransitiveClosureSpec` pins it).
   */
 object TransitiveClosure {
 
@@ -32,31 +25,19 @@ object TransitiveClosure {
     */
   def reach(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 20): DataFrame = {
-    require(maxIter > 0, "maxIter must be positive")
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint(true)
     val nodes = base.select(col("src").as("n"))
       .union(base.select(col("dst"))).distinct()
-    var r = base
+    val init = base
       .union(nodes.select(col("n").as("src"), col("n").as("dst")))
       .distinct()
-      .localCheckpoint(false) // materialized by the count below
-    var prev = -1L
-    var cur = r.count()
-    var i = 0
-    while (cur != prev && i < maxIter) {
+    Fixpoint.growing(init, maxIter, "closure") { r =>
       val composed = r.as("p")
         .join(r.as("q"), col("p.dst") === col("q.src"))
         .select(col("p.src").as("src"), col("q.dst").as("dst"))
-      r = r.union(composed).distinct().localCheckpoint(false)
-      prev = cur
-      cur = r.count() // materializes the checkpoint + the scalar
-      i += 1
+      r.union(composed).distinct()
     }
-    if (cur != prev)
-      throw new IllegalStateException(
-        s"closure did not converge in $maxIter doubling rounds")
-    r
   }
 
   /** Strongly-connected-component labels: (node, scc_id) where scc_id is

@@ -1,9 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.ZOrder
+import graft.operators.Fixpoint
 
 /** Round-7 additions, batch 141 (SURVEY.md §2.4):
   *
@@ -32,12 +36,13 @@ import graft.functions.ZOrder
   *    pipeline attaches to hosts before quality filtering. Ranks are
   *    scaled to parts-per-10^12 longs; every damping step is a floor
   *    division, so three iterations produce bit-identical longs in any
-  *    engine — no float drift, no rounding traps. Per iteration the
-  *    plan is one edge⋈rank⋈degree join (broadcast at this node count,
-  *    hash-partitioned on src for a 10^9-host graph) plus one bounded
-  *    scalar for the dangling mass — the ConnectedComponents iteration
-  *    discipline (one driver scalar per round, never a collected
-  *    frame). The oracle replays all three iterations as chained CTEs.
+  *    engine — no float drift, no rounding traps. The distributed work
+  *    is condensing the fact tables to the distinct nation edge list;
+  *    that list and the 25 nation keys are collected once
+  *    ([[graft.operators.Fixpoint.collect]]) and the rounds run on the
+  *    driver in BigInt, as [[graft.operators.PageRank]] does, so the job
+  *    count does not grow with the round count (`NationRankSpec` pins
+  *    it). The oracle replays all three iterations as chained CTEs.
   */
 object Analytics141 {
   import Tables.t
@@ -93,47 +98,46 @@ object Analytics141 {
         .orderBy("l_returnflag")
     }),
 
-    "q354_pagerank_int" -> ((spark, dir) => {
-      val edges = t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(spark, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(spark, dir, "supplier")
-          .select(col("s_suppkey"), col("s_nationkey").as("src"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(spark, dir, "customer")
-          .select(col("c_custkey"), col("c_nationkey").as("dst"))),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("src").cast("long"), col("dst").cast("long"))
-        .distinct()
-        .localCheckpoint(true) // the graph is built once, iterated thrice
-      val nodes = t(spark, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("node"))
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      val nNodes = nodes.count() // nation is a fixed 25-row table
-      val base = (15L * PrScale) / (100L * nNodes)
-      var rank = nodes.withColumn("pr", lit(PrScale / nNodes))
-      for (_ <- 1 to PrIters) {
-        // dangling mass: one bounded scalar per iteration
-        val dang = rank.join(deg, rank("node") === deg("src"), "left_anti")
-          .agg(coalesce(sum(col("pr")), lit(0L))).head.getLong(0)
-        val dangShare = (85L * dang) / (100L * nNodes)
-        val contrib = edges
-          .join(rank, edges("src") === rank("node"))
-          .join(deg, Seq("src"))
-          .select(col("dst"),
-            expr("(pr * 85) div (100 * deg)").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("inflow"))
-        rank = nodes
-          .join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(col("node"),
-            (lit(base + dangShare) + coalesce(col("inflow"), lit(0L)))
-              .as("pr"))
-      }
-      rank.orderBy("node")
-    }),
+    "q354_pagerank_int" -> ((spark, dir) => nationRanks(spark, dir, PrIters)),
   )
+
+  /** q354's ranks after `iters` rounds, ordered by node: the dangling
+    * rank is shared evenly, an edge passes `(pr * 85) div (100 * deg)`.
+    */
+  private[queries] def nationRanks(spark: SparkSession, dir: String,
+      iters: Int): DataFrame = {
+    val edges = t(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"))
+      .join(t(spark, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(t(spark, dir, "supplier")
+        .select(col("s_suppkey"), col("s_nationkey").as("src"))),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(t(spark, dir, "customer")
+        .select(col("c_custkey"), col("c_nationkey").as("dst"))),
+        col("o_custkey") === col("c_custkey"))
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .distinct()
+    val nodes = t(spark, dir, "nation")
+      .select(col("n_nationkey").cast("long").as("node"))
+    val ids = Fixpoint.collect(nodes, "q354 node set").map(_.getLong(0))
+    val es = Fixpoint.collect(edges, "q354 edge set")
+      .map(e => (e.getLong(0), e.getLong(1)))
+    val n = ids.length
+    val deg = es.groupBy(_._1).map { case (s, g) => s -> BigInt(g.length) }
+    val base = BigInt((15L * PrScale) / (100L * n))
+    var pr = ids.map(id => id -> BigInt(PrScale / n)).toMap
+    for (_ <- 1 to iters) {
+      val dang = ids.filterNot(deg.contains).map(pr).sum
+      val inflow = es.filter(e => pr.contains(e._1))
+        .groupMapReduce(_._2)(e => pr(e._1) * 85 / (100 * deg(e._1)))(_ + _)
+      pr = ids.map(id => id -> BigInt((base + 85 * dang / (100 * n) +
+        inflow.getOrElse(id, BigInt(0))).bigInteger.longValueExact())).toMap
+    }
+    spark.createDataFrame(ids.toSeq.map(id => Row(id, pr(id).toLong)).asJava,
+      nodes.schema.add("pr", LongType, nullable = false)).orderBy("node")
+  }
 
   /** q354's oracle: the three damping iterations as chained CTEs, all
     * in BIGINT floor division — generated by the same loop the engine

@@ -1,6 +1,10 @@
 package graft.queries
 
+import java.util.UUID
 import java.util.concurrent.CompletableFuture
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 
@@ -18,51 +22,72 @@ import org.apache.spark.sql.SparkSession
   * jobs. Results are unchanged: every leg is the same deterministic
   * plan; only the submission order is concurrent, and we join all legs
   * before anything downstream consumes them.
+  *
+  * Failure: each leg runs in its own Spark job group. The first leg to
+  * throw cancels the other legs' groups, their future jobs included; all
+  * legs are joined, and then the first error is rethrown. So no leg is
+  * still running jobs when the caller sees the error (and, say, clears
+  * the cache).
   */
 private[queries] object Par {
 
-  private def fork[A](spark: SparkSession)(body: => A): CompletableFuture[A] =
-    CompletableFuture.supplyAsync { () =>
+  /** The local properties `setJobGroup` sets. */
+  private val GroupKeys = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel")
+
+  /** Runs `legs(0)` on the calling thread and every other leg on a pool
+    * thread; returns their results in order once all are done.
+    */
+  private def run(spark: SparkSession, legs: Seq[() => Any]): Seq[Any] = {
+    val sc = spark.sparkContext
+    val groups = legs.map(_ => s"graft-par-${UUID.randomUUID}")
+    val firstError = new AtomicReference[Throwable]()
+    def leg(i: Int): Any = {
+      val saved = GroupKeys.map(k => k -> sc.getLocalProperty(k))
+      sc.setJobGroup(groups(i), s"Par leg $i", interruptOnCancel = true)
+      try legs(i)()
+      catch { case e: Throwable =>
+        if (firstError.compareAndSet(null, e))
+          groups.patch(i, Nil, 1).foreach(sc.cancelJobGroupAndFutureJobs)
+        throw e
+      } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+    val forked = legs.indices.tail.map(i => CompletableFuture.supplyAsync { () =>
       // Active session is thread-local; pin it so any code path that
       // resolves SparkSession.getActiveSession sees the right one.
       SparkSession.setActiveSession(spark)
-      body
-    }
-
-  private def join[A](f: CompletableFuture[A]): A =
-    try f.join()
-    catch { // unwrap so callers/logs see the real failure
-      case e: java.util.concurrent.CompletionException
-        if e.getCause != null => throw e.getCause
-    }
+      leg(i)
+    })
+    val first = Try(leg(0))
+    val rest = forked.map(f => Try(f.join()))
+    Option(firstError.get).foreach(e => throw e)
+    // a leg's error is recorded before it escapes, so all legs succeeded
+    first.get +: rest.map(_.get)
+  }
 
   /** Materialize two independent legs concurrently. `a` runs on the
     * calling thread, `b` on a pool thread; returns after BOTH complete.
     */
   def both[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
-    val fb = fork(spark)(b)
-    val ra = a
-    (ra, join(fb))
+    val Seq(ra, rb) = run(spark, Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 
   /** Three-way variant: `a` on the calling thread, `b`/`c` on pool
     * threads. */
   def all3[A, B, C](spark: SparkSession)(a: => A, b: => B, c: => C)
       : (A, B, C) = {
-    val fb = fork(spark)(b)
-    val fc = fork(spark)(c)
-    val ra = a
-    (ra, join(fb), join(fc))
+    val Seq(ra, rb, rc) = run(spark, Seq(() => a, () => b, () => c))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B], rc.asInstanceOf[C])
   }
 
   /** Four-way variant (s45/s46-shaped audits: build, baseline build,
     * routing layer, exact panel). */
   def all4[A, B, C, D](spark: SparkSession)(
       a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
-    val fb = fork(spark)(b)
-    val fc = fork(spark)(c)
-    val fd = fork(spark)(d)
-    val ra = a
-    (ra, join(fb), join(fc), join(fd))
+    val Seq(ra, rb, rc, rd) =
+      run(spark, Seq(() => a, () => b, () => c, () => d))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B], rc.asInstanceOf[C],
+      rd.asInstanceOf[D])
   }
 }

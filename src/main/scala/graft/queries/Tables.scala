@@ -55,19 +55,6 @@ object Tables {
   private[queries] def centsDecimal(c: Column): Column =
     (c.cast("decimal(18,2)") * 100).cast("decimal(18,0)")
 
-  /** Spread a small single-file table across all cores before per-row-heavy
-    * work (shingling/hashing): a one-file parquet scan is one partition, so
-    * without this the whole map side runs single-threaded. Profiled 4.6s →
-    * 0.4s on the shingle explode at sf0.1. CONDITIONAL: when the input
-    * already has enough splits (the 100 TB case), this is the identity —
-    * an unconditional repartition would be a full shuffle of the corpus
-    * for nothing.
-    */
-  private[queries] def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** Corpus word counts `(w, cnt)` over the documents' `[a-z]+` runs —
     * the input the tokenizer queries (t58, t60, t62–t65) share.
     */

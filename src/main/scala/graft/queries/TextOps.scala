@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * engines.
   */
 object TextOps {
-  import Tables.{spread, t}
+  import Tables.t
+  import graft.operators.Partitions.spread
 
   /** Distinct word tokens of a document (texts are single-space separated). */
   private def toks(c: Column): Column = array_distinct(split(c, " "))

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * partition-count-independent.
   */
 object TextOps2 {
-  import Tables.{spread, t}
+  import Tables.t
+  import graft.operators.Partitions.spread
 
   /** Contamination n-gram width: 5-word shingles are selective enough
     * that only genuine near-duplicates collide (3-grams over a small

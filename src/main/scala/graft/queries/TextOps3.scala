@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * engines and rounded before any ordering decision.
   */
 object TextOps3 {
-  import Tables.{spread, t}
+  import Tables.t
+  import graft.operators.Partitions.spread
 
   /** Duplicate-span n-gram width: long enough (8 words) that a shared
     * span implies genuinely copied text rather than small-vocab chance

@@ -88,16 +88,10 @@ object TextOps4 {
     // rows) and broadcasts; the corpus-scale work is two pure-map
     // trigram extractions feeding counting aggregations.
     "t19_trigram_langid" -> ((spark, dir) => {
-      // conditional spread (the TextOps shingle device): the two
-      // corpus-scale trigram explodes otherwise run on the single-file
-      // scan's one partition — measured 10 single-task stages / 2.4s of
-      // serialized map work at sf0.1; identity when the input already
-      // has enough splits (the 100 TB case)
-      val docs0 = t(spark, dir, "documents")
-      val target = spark.sparkContext.defaultParallelism
-      val docs =
-        if (docs0.queryExecution.toRdd.getNumPartitions < target) docs0.repartition(target)
-        else docs0
+      // conditional spread: the two corpus-scale trigram explodes
+      // otherwise run on the single-file scan's one partition — measured
+      // 10 single-task stages / 2.4s of serialized map work at sf0.1
+      val docs = graft.operators.Partitions.spread(t(spark, dir, "documents"))
       val base = docs
         .withColumn("t2", concat(col("text"), lit(" "), markerCol))
       val trainTg = base.filter(col("doc_id") % 2 === 0)

@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   *    duplicated-span census.
   */
 object TextOps5 {
-  import Tables.{spread, t}
+  import Tables.t
+  import graft.operators.Partitions.spread
 
   /** Tokens per packed training sequence (d16). */
   val SeqCap = 256L

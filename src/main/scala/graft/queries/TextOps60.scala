@@ -25,14 +25,10 @@ object TextOps60 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t54_char_lm_langid" -> ((spark, dir) => {
-      // conditional spread (the TextOps shingle device): both corpus
-      // bigram explodes otherwise run on the single-file scan's one
-      // partition; identity when the input already has enough splits
-      val docs0 = t(spark, dir, "documents").filter(col("text").isNotNull)
-      val target = spark.sparkContext.defaultParallelism
-      val docs =
-        if (docs0.queryExecution.toRdd.getNumPartitions < target) docs0.repartition(target)
-        else docs0
+      // conditional spread: both corpus bigram explodes otherwise run on
+      // the single-file scan's one partition
+      val docs = graft.operators.Partitions.spread(
+        t(spark, dir, "documents").filter(col("text").isNotNull))
       // bigrams WITH multiplicity (CharNgramsOf dedups — wrong for an
       // LM): the transform(sequence(...)) formulation ran its lambda
       // through the interpreted HOF path per window (ArrayTransform is

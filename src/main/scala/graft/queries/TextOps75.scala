@@ -226,7 +226,11 @@ object TextOps75 {
     * the ENCODING read back off the final placeholder state — token
     * counts are character counts of the encoded words, the decoded
     * token-frequency table comes from a per-character decode CASE over
-    * all six merge rounds' scalar subqueries.
+    * all six merge rounds' scalar subqueries. AS MATERIALIZED on each
+    * `t$j` (read by every later decode CASE) and `wc$j` (read by
+    * `p${j+1}` and `wc${j+1}`) is load-bearing: DuckDB inlines a CTE at
+    * each reference, so the unmaterialized chain re-ran every earlier
+    * round (sf0.001: 647 s, against 0.06 s materialized).
     */
   private def bpeEncodeSql(rounds: Int): String = {
     def dec(j: Int, c: String): String =
@@ -247,12 +251,12 @@ object TextOps75 {
          |    substring(m, CAST(i + 1 AS INTEGER), 1) AS c2,
          |    sum(cnt) AS total
          |  FROM p$j GROUP BY 1, 2),
-         |t$j AS (
+         |t$j AS MATERIALIZED (
          |  SELECT c1, c2, ${dec(j - 1, "c1")} AS dl,
          |    ${dec(j - 1, "c2")} AS dr, total
          |  FROM pc$j
          |  ORDER BY total DESC, dl, dr LIMIT 1),
-         |wc$j AS (
+         |wc$j AS MATERIALIZED (
          |  SELECT w, replace(m, (SELECT c1 || c2 FROM t$j), chr($j)) AS m,
          |    cnt
          |  FROM $prev)""".stripMargin
@@ -260,7 +264,8 @@ object TextOps75 {
     s"""WITH w0 AS (
        |  SELECT unnest(regexp_extract_all(text, '[a-z]+')) AS w
        |  FROM documents),
-       |wc0 AS (SELECT w, w AS m, count(*) AS cnt FROM w0 GROUP BY 1, 2),
+       |wc0 AS MATERIALIZED (
+       |  SELECT w, w AS m, count(*) AS cnt FROM w0 GROUP BY 1, 2),
        |$roundCtes,
        |tok AS (
        |  SELECT m, cnt, unnest(range(1, length(m) + 1)) AS i

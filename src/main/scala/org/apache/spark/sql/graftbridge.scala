@@ -16,6 +16,12 @@ object graftbridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's ANSI `[DIVIDE_BY_ZERO]` error, for driver code that replaces
+    * an integer `div` and must fail as the SQL would.
+    */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** DataFrame from a (possibly custom) LogicalPlan — the constructor a
     * custom whole-operator node needs to surface as a Dataset.
     */

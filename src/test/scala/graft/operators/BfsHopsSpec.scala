@@ -63,10 +63,6 @@ class BfsHopsSpec extends AnyFunSuite {
     assert(got(0L) === 0L && got(7L) === -1L && got(8L) === -1L)
   }
 
-  // The pins below allow two jobs of slack: AQE now and then submits one
-  // job more in a run. A checkpoint made eager adds a job per iteration,
-  // six in all, which the slack does not absorb.
-
   test("each extra BFS iteration runs six Spark jobs") {
     import spark.implicits._
     // A directed k-node chain from source 0 settles one node per
@@ -79,7 +75,7 @@ class BfsHopsSpec extends AnyFunSuite {
         "s", "d", source = 0L).collect()
     }._2
     val (short, long) = (jobs(6), jobs(12))
-    assert(math.abs(long - short - 6 * 6) <= 2,
+    assert(long - short == 6 * 6,
       s"6-node chain: $short jobs, 12-node chain: $long")
   }
 
@@ -93,7 +89,7 @@ class BfsHopsSpec extends AnyFunSuite {
         "a", "b").collect()
     }._2
     val (short, long) = (jobs(6), jobs(12))
-    assert(math.abs(long - short - 6 * 4) <= 2,
+    assert(long - short == 6 * 4,
       s"6-node path: $short jobs, 12-node path: $long")
   }
 }

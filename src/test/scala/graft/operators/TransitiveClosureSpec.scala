@@ -18,14 +18,13 @@ class TransitiveClosureSpec extends AnyFunSuite {
     // more round sees no new pair: a chain of diameter 2^m converges in
     // m + 1 rounds, so chains of 3 and 33 nodes (diameters 2 and 32)
     // differ by 4 rounds. AQE submits each shuffle-map and broadcast stage
-    // as its own job (local[4], AQE on), and now and then one job more in
-    // a run, so the pin allows two jobs of slack; a checkpoint made eager
-    // adds a job per round, four in all.
+    // as its own job (local[4], AQE on); a checkpoint made eager adds a
+    // job per round, four in all.
     def jobs(n: Int): Int = graft.JobCounter(spark) {
       TransitiveClosure.reach(chain(n), "s", "d").collect()
     }._2
     val (short, long) = (jobs(3), jobs(33))
-    assert(math.abs(long - short - 4 * 6) <= 2,
+    assert(long - short == 4 * 6,
       s"3-node chain: $short jobs, 33-node chain: $long")
   }
 }
